@@ -53,6 +53,9 @@ def shared_persist(
 
 _VALUES: dict[str, object] = {}
 _VALUES_LOCK = __import__("threading").Lock()
+# Miss marker for _VALUES lookups: a build() may legitimately return None,
+# which must be cached like any other value.
+_MISSING = object()
 
 
 def _freeze(v):
@@ -91,11 +94,11 @@ def shared_value(spark: SparkSession, build: Callable[[], object], slot: str):
     multi-threaded driver (guide §2.6 overlapping jobs) cannot build twice
     and hand out different object identities."""
     key = f"{slot}@{spark.sparkContext.applicationId}"
-    v = _VALUES.get(key)
-    if v is None:
+    v = _VALUES.get(key, _MISSING)
+    if v is _MISSING:
         with _VALUES_LOCK:
-            v = _VALUES.get(key)
-            if v is None:
+            v = _VALUES.get(key, _MISSING)
+            if v is _MISSING:
                 v = _freeze(build())
                 _VALUES[key] = v
     return v

@@ -135,6 +135,12 @@ def _make_grain_dist_udf():
 
     from pyspark.sql.types import DecimalType
 
+    # int64 holds a row's term sum only below 2**63; the float64 row sum
+    # (terms are >= 0) bounds it with a 2x margin for its own rounding.
+    # Past that edge (coordinate differences of ~1e5) the sum is taken in
+    # exact Python ints instead of wrapping.
+    int64_safe = 2.0**62
+
     def _row(a, b) -> Decimal | None:
         if a is None or b is None:
             return None
@@ -145,7 +151,11 @@ def _make_grain_dist_udf():
         t = np.floor((a - b) * (a - b) * 1.0e9 + 0.5)
         if not np.isfinite(t).all():
             return None
-        return Decimal(int(t.astype(np.int64).sum())).scaleb(-9)
+        if t.sum() < int64_safe:
+            n = int(t.astype(np.int64).sum())
+        else:
+            n = sum(int(x) for x in t)
+        return Decimal(n).scaleb(-9)
 
     @F.pandas_udf(DecimalType(28, 9))
     def _dist(xs: pd.Series, cs: pd.Series) -> pd.Series:
@@ -154,7 +164,7 @@ def _make_grain_dist_udf():
             A = np.stack(xs.to_numpy())
             B = np.stack(cs.to_numpy())
             T = np.floor((A - B) * (A - B) * 1.0e9 + 0.5)
-            if np.isfinite(T).all():
+            if np.isfinite(T).all() and (T.sum(axis=1) < int64_safe).all():
                 sums = T.astype(np.int64).sum(axis=1)
                 return pd.Series(
                     [Decimal(int(n)).scaleb(-9) for n in sums], dtype=object

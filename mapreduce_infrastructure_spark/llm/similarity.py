@@ -954,7 +954,8 @@ def _cell_dists(C: np.ndarray, col: str) -> Column:
     Built as ONE parsed SQL expression (round 16) with the k×dim centroid
     matrix inlined as double literals: the Column-by-Column form cost
     ~0.9 s of py4j round-trips PER PLAN CONSTRUCTION for the 16×64
-    ``F.lit``/struct calls (measured, tools/profile_r16.py); this text
+    ``F.lit``/struct calls (measured as plan-build time, the build layer
+    ``perfbench/run.py --trace 1`` reports); this text
     parses in one round-trip and analyzes to the identical expression
     tree, so execution is bit-for-bit unchanged.
 

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..catalog import load_table
 from ..functions.exact import rnd
 from ..functions.ranks import bucketed_prefix_sum, hist_percent_rank, ntile_from_rank
-from ..registry import query
+from ..registry import TableReader, query
 from .cache import tracked_persist
 
 # Tokenizer contract shared by Spark and the DuckDB oracle. Equivalent to the
@@ -2311,13 +2311,20 @@ def _doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized copy (the round-13 cache discipline)."""
     from .cache import shared_persist
 
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        return docs.select(
-            "source", F.size(tokens_col()).cast("long").alias("n_tokens")
-        )
+    return shared_persist(
+        spark,
+        lambda: _doc_token_rows(spark, sf_dir, load_table),
+        f"doc_token_counts:{sf_dir}",
+    )
 
-    return shared_persist(spark, build, f"doc_token_counts:{sf_dir}")
+
+def _doc_token_rows(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    docs = read(spark, sf_dir, "documents")
+    return docs.select(
+        "source", F.size(tokens_col()).cast("long").alias("n_tokens")
+    )
 
 
 # Shared with the streaming twin in streaming/stream.py: one statement of
@@ -2359,6 +2366,38 @@ DOC_TOKEN_CONCENTRATION_ORACLE = f"""
     """
 
 
+def _token_concentration_report(cells: DataFrame, th: DataFrame) -> DataFrame:
+    """The concentration fold over (source, n_tokens, m) cells — m docs
+    with n_tokens tokens — against the |sources|-row (source,
+    threshold_tokens) grid: the shared tail of
+    doc_token_concentration_by_source (per-doc rows, m = 1) and its
+    streaming twin (histogram cells). Counts and token masses are exact
+    int64; the share is one IEEE division."""
+    top = F.col("n_tokens") >= F.col("threshold_tokens")
+    g = (
+        cells.join(F.broadcast(th), "source")
+        .groupBy("source", "threshold_tokens")
+        .agg(
+            F.sum("m").alias("n_docs"),
+            F.sum(F.when(top, F.col("m")).otherwise(0)).cast("long").alias("n_top"),
+            F.sum(
+                F.when(top, F.col("n_tokens") * F.col("m")).otherwise(0)
+            ).alias("top_tokens"),
+            F.sum(F.col("n_tokens") * F.col("m")).alias("_total"),
+        )
+    )
+    return g.select(
+        "source",
+        "n_docs",
+        "threshold_tokens",
+        "n_top",
+        "top_tokens",
+        (F.col("top_tokens").cast("double") / F.col("_total")).alias(
+            "top_token_share"
+        ),
+    )
+
+
 @query(
     "doc_token_concentration_by_source",
     oracle=DOC_TOKEN_CONCENTRATION_ORACLE,
@@ -2394,28 +2433,8 @@ def doc_token_concentration_by_source(
     grid = spark.createDataFrame(
         sorted(th.items()), "source string, threshold_tokens long"
     )
-    top = F.col("n_tokens") >= F.col("threshold_tokens")
-    g = (
-        tc.join(F.broadcast(grid), "source")
-        .groupBy("source", "threshold_tokens")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(top, 1).otherwise(0)).cast("long").alias("n_top"),
-            F.sum(F.when(top, F.col("n_tokens")).otherwise(0)).alias(
-                "top_tokens"
-            ),
-            F.sum("n_tokens").alias("_total"),
-        )
-    )
-    return g.select(
-        "source",
-        "n_docs",
-        "threshold_tokens",
-        "n_top",
-        "top_tokens",
-        (F.col("top_tokens").cast("double") / F.col("_total")).alias(
-            "top_token_share"
-        ),
+    return _token_concentration_report(
+        tc.select("source", "n_tokens", F.lit(1).alias("m")), grid
     )
 
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table, register_views
 from ..functions.exact import davg, dec, disc_rev, dsum, lcount, rnd
-from ..registry import query
+from ..registry import TableReader, Twin, query
 
 
 # --------------------------------------------------------------------------
@@ -51,19 +51,8 @@ Q1_ORACLE = """
     """
 
 
-@query(
-    "q1_pricing_summary",
-    oracle=Q1_ORACLE,
-    tags=("agg", "filter"),
-)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style pricing summary: filter + multi-aggregate group-by.
-
-    Reference analogue: per-key fold in the reduce phase
-    (``src/mr_tasks.h:101``, ``test/user_tasks.cc:29-33``) — here a single
-    partial+final HashAggregate pass, no Python in the hot path.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
+def _q1_cells(spark: SparkSession, sf_dir: str, read: TableReader) -> DataFrame:
+    li = read(spark, sf_dir, "lineitem")
     disc_price = disc_rev()
     charge = disc_price.cast("decimal(18,4)") * (F.lit(1) + dec("l_tax"))
     return (
@@ -79,6 +68,24 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             lcount("count_order"),
         )
     )
+
+
+@query(
+    "q1_pricing_summary",
+    oracle=Q1_ORACLE,
+    tags=("agg", "filter"),
+    twin=Twin(_q1_cells),
+)
+def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q1-style pricing summary: filter + multi-aggregate group-by.
+
+    Reference analogue: per-key fold in the reduce phase
+    (``src/mr_tasks.h:101``, ``test/user_tasks.cc:29-33``) — here a single
+    partial+final HashAggregate pass, no Python in the hot path. The
+    exact DECIMAL sums are associative, so the streaming twin's
+    micro-batch split cannot change a bit of the result.
+    """
+    return _q1_cells(spark, sf_dir, load_table)
 
 
 @query(

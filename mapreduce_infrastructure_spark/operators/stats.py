@@ -22,12 +22,14 @@ produce drifting results.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
 from ..functions.exact import dec, rnd
 from ..functions.ranks import hist_cume_counts, hist_disc_percentile
-from ..registry import query
+from ..registry import TableReader, Twin, query
 
 # Power sums in DECIMAL(28,4): products of two DECIMAL(18,2) values are
 # DECIMAL(·,4); 28 integer digits absorb 100 TB-scale row counts.
@@ -1187,12 +1189,19 @@ def _cust_spend_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-run the per-customer fold."""
     from ..llm.cache import shared_persist
 
-    def build() -> DataFrame:
-        o = load_table(spark, sf_dir, "orders")
-        cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-        return o.groupBy("o_custkey").agg(F.sum(cents).alias("cents"))
+    return shared_persist(
+        spark,
+        lambda: _cust_spend_cells(spark, sf_dir, load_table),
+        f"cust_spend_cents:{sf_dir}",
+    )
 
-    return shared_persist(spark, build, f"cust_spend_cents:{sf_dir}")
+
+def _cust_spend_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    o = read(spark, sf_dir, "orders")
+    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    return o.groupBy("o_custkey").agg(F.sum(cents).alias("cents"))
 
 
 def _event_value_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1453,7 +1462,6 @@ CUSTOMER_REV_CONCENTRATION_ORACLE = """
 
 
 def _revenue_concentration_report(
-    spark: SparkSession,
     cm: DataFrame,
     value_col: str = "cents",
     threshold_col: str = "threshold_cents",
@@ -1479,7 +1487,7 @@ def _revenue_concentration_report(
         value_col,
         {str(pct): pct / 100.0 for pct in (50, 75, 90, 95, 99)},
     )
-    grid = spark.createDataFrame(
+    grid = cm.sparkSession.createDataFrame(
         [(pct, th[str(pct)]) for pct in (50, 75, 90, 95, 99)],
         f"pct long, {threshold_col} long",
     )
@@ -1504,6 +1512,7 @@ def _revenue_concentration_report(
     "customer_revenue_concentration",
     oracle=CUSTOMER_REV_CONCENTRATION_ORACLE,
     tags=("stats", "percentile", "iterative", "concentration"),
+    twin=Twin(_cust_spend_cells, _revenue_concentration_report),
 )
 def customer_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue-concentration report (the Pareto read every growth team
@@ -1527,8 +1536,7 @@ def customer_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFram
     row_number is fine at oracle scale. Thresholds + fold live in the
     shared _revenue_concentration_report tail (the streaming twin runs
     the same derivation over its sink table)."""
-    cm = _cust_spend_cents(spark, sf_dir)
-    return _revenue_concentration_report(spark, cm)
+    return _revenue_concentration_report(_cust_spend_cents(spark, sf_dir))
 
 
 @query(
@@ -1823,10 +1831,39 @@ PART_DEMAND_ORACLE = """
     """
 
 
+def _part_demand_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    li = read(spark, sf_dir, "lineitem")
+    return li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n"))
+
+
+def _part_demand_report(cm: DataFrame) -> DataFrame:
+    from ..functions.ranks import kth_order_statistics
+
+    # Both quantiles ride ONE census sequence (multi-rank narrower; the
+    # per-part count column is non-null by construction).
+    pr = kth_order_statistics(cm, "n", {"p50": 0.5, "p90": 0.9})
+    p50, p90 = pr["p50"], pr["p90"]
+    top = F.col("n") >= F.lit(p90)
+    return cm.agg(
+        F.count(F.lit(1)).alias("n_parts"),
+        F.lit(p50).alias("p50_lines"),
+        F.lit(p90).alias("p90_lines"),
+        F.sum(F.when(top, 1).otherwise(0)).cast("long").alias("n_top_parts"),
+        F.sum(F.when(top, F.col("n")).otherwise(0)).alias("top_lines"),
+        (
+            F.sum(F.when(top, F.col("n")).otherwise(0)).cast("double")
+            / F.sum("n")
+        ).alias("top_line_share"),
+    )
+
+
 @query(
     "part_demand_concentration",
     oracle=PART_DEMAND_ORACLE,
     tags=("stats", "percentile", "iterative", "concentration"),
+    twin=Twin(_part_demand_cells, _part_demand_report),
 )
 def part_demand_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DEMAND concentration over the part key: the exact p50/p90
@@ -1849,30 +1886,13 @@ def part_demand_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     two thresholds are literals, ONE partial-aggregatable fold computes
     the report. Counts exact int64; the share is one IEEE division, the
     oracle casting its HUGEINT sums through BIGINT first (2^53 rule)."""
-    from ..functions.ranks import kth_order_statistics
     from ..llm.cache import tracked_persist
 
-    li = load_table(spark, sf_dir, "lineitem")
     cm = tracked_persist(
-        li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n")),
+        _part_demand_cells(spark, sf_dir, load_table),
         f"part_line_counts:{sf_dir}",
     )
-    # Both quantiles ride ONE census sequence (multi-rank narrower; the
-    # per-part count column is non-null by construction).
-    pr = kth_order_statistics(cm, "n", {"p50": 0.5, "p90": 0.9})
-    p50, p90 = pr["p50"], pr["p90"]
-    top = F.col("n") >= F.lit(p90)
-    return cm.agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.lit(p50).alias("p50_lines"),
-        F.lit(p90).alias("p90_lines"),
-        F.sum(F.when(top, 1).otherwise(0)).cast("long").alias("n_top_parts"),
-        F.sum(F.when(top, F.col("n")).otherwise(0)).alias("top_lines"),
-        (
-            F.sum(F.when(top, F.col("n")).otherwise(0)).cast("double")
-            / F.sum("n")
-        ).alias("top_line_share"),
-    )
+    return _part_demand_report(cm)
 
 
 @query(
@@ -2117,7 +2137,14 @@ ORDER_LINECOUNT_ORACLE = """
     """
 
 
-def _linecount_report(c: DataFrame, slot: str) -> DataFrame:
+def _linecount_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    li = read(spark, sf_dir, "lineitem").select("l_orderkey")
+    return li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("k"))
+
+
+def _linecount_report(c: DataFrame) -> DataFrame:
     """Histogram + shares + ascending cumulative over a per-order
     line-count frame (column ``k``) — the shared tail of
     order_linecount_distribution and its streaming twin, so the two
@@ -2134,7 +2161,7 @@ def _linecount_report(c: DataFrame, slot: str) -> DataFrame:
         c.groupBy(F.col("k").alias("lines_per_order")).agg(
             F.count(F.lit(1)).alias("n_orders")
         ),
-        slot,
+        "order_linecount_hist",
     )
     n_lines = (F.col("lines_per_order") * F.col("n_orders")).cast("long")
     t = h.agg(
@@ -2165,6 +2192,7 @@ def _linecount_report(c: DataFrame, slot: str) -> DataFrame:
     "order_linecount_distribution",
     oracle=ORDER_LINECOUNT_ORACLE,
     tags=("tpch", "stats", "histogram", "skew"),
+    twin=Twin(_linecount_cells, _linecount_report),
 )
 def order_linecount_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL fan-out distribution of the l_orderkey join: per
@@ -2186,11 +2214,7 @@ def order_linecount_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     no single-partition exchange; see _linecount_report). Counts and
     line masses exact int64; each share is one IEEE division stated
     identically in the oracle."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey")
-    c = li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("k"))
-    # Histogram + shares + cumulative live in the shared _linecount_report
-    # tail (the streaming twin runs the same derivation over its sink).
-    return _linecount_report(c, f"order_linecount_hist:{sf_dir}")
+    return _linecount_report(_linecount_cells(spark, sf_dir, load_table))
 
 
 @query(
@@ -2395,10 +2419,30 @@ def _dow_hour_value_report(h: DataFrame) -> DataFrame:
     )
 
 
+def _dow_hour_value_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    ev = read(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    g = ev.select(
+        F.expr(
+            "(unix_micros(ts) div 1000000 div 86400 + 3) % 7 + 1"
+        ).alias("dow"),
+        F.expr("(unix_micros(ts) div 1000000 div 3600) % 24").alias(
+            "hour_utc"
+        ),
+        F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long").alias("m"),
+    )
+    return g.groupBy("dow", "hour_utc").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("m").alias("value_micro"),
+    )
+
+
 @query(
     "events_value_weighted_dow_hour_profile",
     oracle=DOW_HOUR_VALUE_ORACLE,
     tags=("events", "stats", "weighted", "calendar"),
+    twin=Twin(_dow_hour_value_cells, _dow_hour_value_report),
 )
 def events_value_weighted_dow_hour_profile(
     spark: SparkSession, sf_dir: str
@@ -2425,21 +2469,7 @@ def events_value_weighted_dow_hour_profile(
     int64s stated identically in the oracle; totals broadcast from the
     scalar (keys=[]) aggregate — no window, no single-partition squeeze
     at any SF."""
-    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    g = ev.select(
-        F.expr(
-            "(unix_micros(ts) div 1000000 div 86400 + 3) % 7 + 1"
-        ).alias("dow"),
-        F.expr("(unix_micros(ts) div 1000000 div 3600) % 24").alias(
-            "hour_utc"
-        ),
-        F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long").alias("m"),
-    )
-    h = g.groupBy("dow", "hour_utc").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("m").alias("value_micro"),
-    )
-    return _dow_hour_value_report(h)
+    return _dow_hour_value_report(_dow_hour_value_cells(spark, sf_dir, load_table))
 
 
 @query(
@@ -2977,10 +3007,34 @@ EVENTS_USER_VALUE_CONCENTRATION_ORACLE = """
     """
 
 
+def _user_value_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    micro = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long")
+    return (
+        read(spark, sf_dir, "events")
+        .filter(F.col("value").isNotNull())
+        .groupBy("user_id")
+        .agg(F.sum(micro).cast("long").alias("micro"))
+        .select("micro")
+    )
+
+
+_user_value_report = partial(
+    _revenue_concentration_report,
+    value_col="micro",
+    threshold_col="threshold_micro",
+    n_col="n_users",
+    mass_col="value_micro",
+    share_col="value_share",
+)
+
+
 @query(
     "events_user_value_concentration",
     oracle=EVENTS_USER_VALUE_CONCENTRATION_ORACLE,
     tags=("events", "stats", "percentile", "iterative", "concentration"),
+    twin=Twin(_user_value_cells, _user_value_report),
 )
 def events_user_value_concentration(
     spark: SparkSession, sf_dir: str
@@ -3009,27 +3063,7 @@ def events_user_value_concentration(
     driver-side aggregation. Thresholds + fold live in the shared
     _revenue_concentration_report tail (parameterized column names;
     same derivation as the revenue report and its streaming twin)."""
-    um = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long")
-            )
-            .cast("long")
-            .alias("micro")
-        )
-    )
-    return _revenue_concentration_report(
-        spark,
-        um.select("micro"),
-        value_col="micro",
-        threshold_col="threshold_micro",
-        n_col="n_users",
-        mass_col="value_micro",
-        share_col="value_share",
-    )
+    return _user_value_report(_user_value_cells(spark, sf_dir, load_table))
 
 
 @query(

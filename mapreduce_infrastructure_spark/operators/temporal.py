@@ -16,11 +16,13 @@ AQE because it is a plain window aggregation.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
 from ..functions.exact import dec, dsum, rnd
-from ..registry import query
+from ..registry import TableReader, Twin, query
 
 
 _SESSION_GAP_US = 30 * 60 * 1_000_000  # the 30-min gap every session query shares
@@ -704,25 +706,8 @@ OHLC_ORACLE = """
     """
 
 
-@query(
-    "ohlc_hourly_purchases",
-    oracle=OHLC_ORACLE,
-    tags=("temporal", "resample", "ohlc"),
-)
-def ohlc_hourly_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Downsample purchase events into hourly OHLC bars (open/high/low/
-    close) — the canonical time-series resample.
-
-    Open and close are struct-min/max over the total order (us, event_id),
-    so tie-breaks are engine-stable; high/low are plain min/max (no
-    summation, so no decimal detour needed). ONE hash aggregate per bucket
-    — the oracle's two ranking windows express the same selection but cost
-    an extra sort; at 100 TB the aggregate form is partial-aggregatable
-    (map-side combine) while a window never is.
-    """
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
+def _ohlc_cells(spark: SparkSession, sf_dir: str, read: TableReader) -> DataFrame:
+    ev = read(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     us = F.unix_micros(F.col("ts"))
     e = ev.select(
         F.expr("unix_micros(ts) div 3600000000").alias("hr"),
@@ -737,6 +722,27 @@ def ohlc_hourly_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.struct("us", "event_id", "value"))["value"].alias("close"),
         F.count(F.lit(1)).alias("n_trades"),
     )
+
+
+@query(
+    "ohlc_hourly_purchases",
+    oracle=OHLC_ORACLE,
+    tags=("temporal", "resample", "ohlc"),
+    twin=Twin(_ohlc_cells),
+)
+def ohlc_hourly_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Downsample purchase events into hourly OHLC bars (open/high/low/
+    close) — the canonical time-series resample.
+
+    Open and close are struct-min/max over the total order (us, event_id),
+    so tie-breaks are engine-stable; high/low are plain min/max (no
+    summation, so no decimal detour needed). ONE hash aggregate per bucket
+    — the oracle's two ranking windows express the same selection but cost
+    an extra sort; at 100 TB the aggregate form is partial-aggregatable
+    (map-side combine) while a window never is — and the same struct
+    Min/Max fold per micro-batch in the streaming twin's state.
+    """
+    return _ohlc_cells(spark, sf_dir, load_table)
 
 
 # --------------------------------------------------------------------------
@@ -1182,10 +1188,44 @@ DOW_HOUR_PROFILE_ORACLE = """
     """
 
 
+def _dow_hour_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    ev = read(spark, sf_dir, "events")
+    # (day + 3) % 7 with day = floor-div: epoch seconds are positive for
+    # every fixture era, so integer div/mod are floor-consistent with the
+    # oracle's // and %.
+    day = F.expr("unix_micros(ts) div 1000000 div 86400")
+    hour = F.expr("unix_micros(ts) div 1000000 % 86400 div 3600")
+    return ev.select(
+        "event_type",
+        ((day + F.lit(3)) % 7).alias("dow"),
+        hour.alias("hour"),
+    ).groupBy("event_type", "dow", "hour").agg(
+        F.count(F.lit(1)).alias("n_events")
+    )
+
+
+def _dow_hour_report(g: DataFrame) -> DataFrame:
+    t = g.groupBy("event_type").agg(F.sum("n_events").alias("total"))
+    e = F.col("total") / F.lit(168).cast("double")
+    return g.join(F.broadcast(t), "event_type").select(
+        "event_type",
+        "dow",
+        "hour",
+        "n_events",
+        (F.col("n_events").cast("double") / F.col("total")).alias("share"),
+        ((F.col("n_events") - e) * (F.col("n_events") - e) / e).alias(
+            "chi2_term"
+        ),
+    )
+
+
 @query(
     "events_dow_hour_profile",
     oracle=DOW_HOUR_PROFILE_ORACLE,
     tags=("temporal", "events", "seasonality", "stats"),
+    twin=Twin(_dow_hour_cells, _dow_hour_report),
 )
 def events_dow_hour_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly seasonality profile: event volume per (type, day-of-week,
@@ -1207,31 +1247,7 @@ def events_dow_hour_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one scan + one partial-aggregatable group-by at event volume;
     the per-type totals table is ≤|types| rows, broadcast back; every
     downstream row count is ≤ |types|·168."""
-    ev = load_table(spark, sf_dir, "events")
-    # (day + 3) % 7 with day = floor-div: epoch seconds are positive for
-    # every fixture era, so integer div/mod are floor-consistent with the
-    # oracle's // and %.
-    day = F.expr("unix_micros(ts) div 1000000 div 86400")
-    hour = F.expr("unix_micros(ts) div 1000000 % 86400 div 3600")
-    g = ev.select(
-        "event_type",
-        ((day + F.lit(3)) % 7).alias("dow"),
-        hour.alias("hour"),
-    ).groupBy("event_type", "dow", "hour").agg(
-        F.count(F.lit(1)).alias("n_events")
-    )
-    t = g.groupBy("event_type").agg(F.sum("n_events").alias("total"))
-    e = F.col("total") / F.lit(168).cast("double")
-    return g.join(F.broadcast(t), "event_type").select(
-        "event_type",
-        "dow",
-        "hour",
-        "n_events",
-        (F.col("n_events").cast("double") / F.col("total")).alias("share"),
-        ((F.col("n_events") - e) * (F.col("n_events") - e) / e).alias(
-            "chi2_term"
-        ),
-    )
+    return _dow_hour_report(_dow_hour_cells(spark, sf_dir, load_table))
 
 
 # Shared with the streaming twin in streaming/stream.py (the
@@ -1301,19 +1317,33 @@ def order_fulfillment_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a volume-scaled single partition; day is unique after the
     group-by, satisfying its order-key precondition. The oracle states
     the same series as a plain cumulative window, safe at oracle scale."""
-    from ..functions.ranks import bucketed_prefix_sum
-
     o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
     od = o.select(
         "o_orderkey",
         F.expr("unix_micros(o_orderdate) div 1000000 div 86400").alias("dopen"),
     )
-    cd = li.groupBy("l_orderkey").agg(
+    return _backlog_report(od, _backlog_closes(spark, sf_dir, load_table))
+
+
+def _backlog_closes(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    """Per-order close day: the latest ship day of the order's lines."""
+    li = read(spark, sf_dir, "lineitem")
+    return li.groupBy("l_orderkey").agg(
         F.max(
             F.expr("unix_micros(l_shipdate) div 1000000 div 86400")
         ).alias("dclose")
     )
+
+
+def _backlog_report(od: DataFrame, cd: DataFrame) -> DataFrame:
+    """Per-day open/close deltas and the running backlog from the
+    per-order open days (o_orderkey, dopen) and close days (l_orderkey,
+    dclose) — shared with the streaming twin, whose open-day cells are an
+    incremental per-order min instead of a plain projection."""
+    from ..functions.ranks import bucketed_prefix_sum
+
     oc = od.join(cd, od.o_orderkey == cd.l_orderkey).select("dopen", "dclose")
     ev = oc.select(
         F.col("dopen").alias("day"),
@@ -1359,10 +1389,44 @@ WEEKLY_TREND_ORACLE = """
     """
 
 
+def _weekly_trend_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    o = read(spark, sf_dir, "orders")
+    week = F.expr("unix_micros(o_orderdate) div 1000000 div 86400 div 7")
+    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    return (
+        o.select(week.alias("week"), cents.alias("cents"))
+        .groupBy("week")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum("cents").alias("revenue_cents"),
+        )
+    )
+
+
+def _weekly_trend_report(g: DataFrame) -> DataFrame:
+    prev = g.select(
+        (F.col("week") + 1).alias("week"),
+        F.col("n_orders").alias("prev_n_orders"),
+    )
+    return g.join(F.broadcast(prev), "week", "left").select(
+        "week",
+        "n_orders",
+        "revenue_cents",
+        "prev_n_orders",
+        (F.col("n_orders") - F.col("prev_n_orders")).alias("wow_delta_orders"),
+        (F.col("n_orders").cast("double") / F.col("prev_n_orders")).alias(
+            "wow_ratio"
+        ),
+    )
+
+
 @query(
     "order_volume_weekly_trend",
     oracle=WEEKLY_TREND_ORACLE,
     tags=("temporal", "trend", "agg"),
+    twin=Twin(_weekly_trend_cells, _weekly_trend_report),
 )
 def order_volume_weekly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Week-over-week order-volume trend: per epoch-week (day div 7 —
@@ -1385,35 +1449,14 @@ def order_volume_weekly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     from ..llm.cache import tracked_persist
 
-    o = load_table(spark, sf_dir, "orders")
-    week = F.expr("unix_micros(o_orderdate) div 1000000 div 86400 div 7")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     # Both the output and the week+1 lookup consume the weekly table —
     # persist the calendar-bounded aggregate so the orders scan + fold
     # run once.
     g = tracked_persist(
-        o.select(week.alias("week"), cents.alias("cents"))
-        .groupBy("week")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum("cents").alias("revenue_cents"),
-        ),
+        _weekly_trend_cells(spark, sf_dir, load_table),
         f"order_weekly_cells:{sf_dir}",
     )
-    prev = g.select(
-        (F.col("week") + 1).alias("week"),
-        F.col("n_orders").alias("prev_n_orders"),
-    )
-    return g.join(F.broadcast(prev), "week", "left").select(
-        "week",
-        "n_orders",
-        "revenue_cents",
-        "prev_n_orders",
-        (F.col("n_orders") - F.col("prev_n_orders")).alias("wow_delta_orders"),
-        (F.col("n_orders").cast("double") / F.col("prev_n_orders")).alias(
-            "wow_ratio"
-        ),
-    )
+    return _weekly_trend_report(g)
 
 
 @query(
@@ -1526,10 +1569,66 @@ EVENT_MIX_DRIFT_ORACLE = """
     """
 
 
+def _mix_drift_report(g: DataFrame, key: str, n: str) -> DataFrame:
+    """Week totals, week share and the chi-square term against last
+    week's mix over (week, ``key``, ``n``) count cells — the shared tail
+    of both weekly mix-drift queries and their streaming twins. The
+    totals and both previous-week lookups are broadcast joins over the
+    CALENDAR×|keys|-bounded cell table; a key absent from the previous
+    week (or a first week) gets NULL prev_n/chi2_term, the oracles' left
+    joins."""
+    t = g.groupBy("week").agg(F.sum(n).alias("week_total"))
+    p = g.select(
+        (F.col("week") + 1).alias("week"), key, F.col(n).alias("prev_n")
+    )
+    pt = t.select(
+        (F.col("week") + 1).alias("week"),
+        F.col("week_total").alias("prev_week_total"),
+    )
+    e = (
+        F.col("prev_n").cast("double")
+        * F.col("week_total")
+        / F.col("prev_week_total")
+    )
+    return (
+        g.join(F.broadcast(t), "week")
+        .join(F.broadcast(p), ["week", key], "left")
+        .join(F.broadcast(pt), "week", "left")
+        .select(
+            "week",
+            key,
+            n,
+            "week_total",
+            (F.col(n).cast("double") / F.col("week_total")).alias("share"),
+            "prev_n",
+            F.when(
+                F.col("prev_n").isNotNull(),
+                (F.col(n) - e) * (F.col(n) - e) / e,
+            ).alias("chi2_term"),
+        )
+    )
+
+
+def _event_mix_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    ev = read(spark, sf_dir, "events")
+    week = F.expr("unix_micros(ts) div 1000000 div 86400 div 7")
+    return (
+        ev.select(week.alias("week"), "event_type")
+        .groupBy("week", "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+
+
 @query(
     "event_mix_weekly_drift",
     oracle=EVENT_MIX_DRIFT_ORACLE,
     tags=("temporal", "events", "drift", "stats"),
+    twin=Twin(
+        _event_mix_cells,
+        partial(_mix_drift_report, key="event_type", n="n_events"),
+    ),
 )
 def event_mix_weekly_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Week-over-week EVENT-MIX drift: per (epoch-week, event type) the
@@ -1555,52 +1654,14 @@ def event_mix_weekly_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     CALENDAR×|types|-bounded aggregates (broadcast at any corpus size)."""
     from ..llm.cache import tracked_persist
 
-    ev = load_table(spark, sf_dir, "events")
-    week = F.expr("unix_micros(ts) div 1000000 div 86400 div 7")
     # Four independent subtrees consume the cell table (g, t, p, pt) —
     # persist the CALENDAR×|types|-bounded aggregate so the events scan
     # + fold run once, not once per subtree (exchange reuse is not
     # guaranteed across the differently-keyed re-aggregations).
     g = tracked_persist(
-        ev.select(week.alias("week"), "event_type")
-        .groupBy("week", "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events")),
-        f"event_mix_cells:{sf_dir}",
+        _event_mix_cells(spark, sf_dir, load_table), f"event_mix_cells:{sf_dir}"
     )
-    t = g.groupBy("week").agg(F.sum("n_events").alias("week_total"))
-    p = g.select(
-        (F.col("week") + 1).alias("week"),
-        "event_type",
-        F.col("n_events").alias("prev_n"),
-    )
-    pt = t.select(
-        (F.col("week") + 1).alias("week"),
-        F.col("week_total").alias("prev_week_total"),
-    )
-    e = (
-        F.col("prev_n").cast("double")
-        * F.col("week_total")
-        / F.col("prev_week_total")
-    )
-    return (
-        g.join(F.broadcast(t), "week")
-        .join(F.broadcast(p), ["week", "event_type"], "left")
-        .join(F.broadcast(pt), "week", "left")
-        .select(
-            "week",
-            "event_type",
-            "n_events",
-            "week_total",
-            (F.col("n_events").cast("double") / F.col("week_total")).alias(
-                "share"
-            ),
-            "prev_n",
-            F.when(
-                F.col("prev_n").isNotNull(),
-                (F.col("n_events") - e) * (F.col("n_events") - e) / e,
-            ).alias("chi2_term"),
-        )
-    )
+    return _mix_drift_report(g, "event_type", "n_events")
 
 
 # Shared with the streaming twin in streaming/stream.py: one statement of
@@ -1642,10 +1703,10 @@ USER_LIFETIME_SPAN_ORACLE = """
     """
 
 
-def _lifetime_span_report(spark: SparkSession, u: DataFrame) -> DataFrame:
+def _lifetime_span_report(u: DataFrame) -> DataFrame:
     """Shared derivation tail for the batch query and its streaming twin:
-    given the per-user (first_type, span_us) table (already persisted by
-    the caller — the narrower re-scans it once per round), run the
+    given the per-user (first_type, span_us) table (persisted by the
+    caller — the narrower re-scans it once per round), run the
     |event types|-bounded count census plus the stratified narrower at
     q = 0.5 / 0.9 and assemble the per-cohort report."""
     from ..functions.ranks import kth_order_statistics_by
@@ -1660,16 +1721,38 @@ def _lifetime_span_report(spark: SparkSession, u: DataFrame) -> DataFrame:
     pct = kth_order_statistics_by(
         u, "first_type", "span_us", q={"p50": 0.5, "p90": 0.9}, n_buckets=256
     )
-    return spark.createDataFrame(
+    return u.sparkSession.createDataFrame(
         [(t, n, pct[t]["p50"], pct[t]["p90"]) for t, n in sorted(ns.items())],
         "first_type string, n_users long, p50_span_us long, p90_span_us long",
     )
 
 
+def _lifetime_span_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    ev = read(spark, sf_dir, "events")
+    us = F.expr("unix_micros(ts)")
+    g = ev.groupBy("user_id").agg(
+        F.min(
+            F.struct(
+                us.alias("u"),
+                F.col("event_id").alias("i"),
+                F.col("event_type").alias("t"),
+            )
+        ).alias("fst"),
+        F.min(us).alias("s"),
+        F.max(us).alias("e"),
+    )
+    return g.select(
+        F.col("fst.t").alias("first_type"),
+        (F.col("e") - F.col("s")).alias("span_us"),
+    )
+
+
 @query(
     "events_user_lifetime_span_percentiles",
-    oracle=None,  # set below — USER_LIFETIME_SPAN_ORACLE, shared verbatim
-                  # with the streaming twin in streaming/stream.py.    tags=("temporal", "users", "percentile", "iterative"),
+    oracle=USER_LIFETIME_SPAN_ORACLE,
+    twin=Twin(_lifetime_span_cells, _lifetime_span_report),
 )
 def events_user_lifetime_span_percentiles(
     spark: SparkSession, sf_dir: str
@@ -1712,30 +1795,11 @@ def events_user_lifetime_span_percentiles(
     narrower by design)."""
     from ..llm.cache import tracked_persist
 
-    ev = load_table(spark, sf_dir, "events")
-    us = F.expr("unix_micros(ts)")
-    g = ev.groupBy("user_id").agg(
-        F.min(
-            F.struct(
-                us.alias("u"),
-                F.col("event_id").alias("i"),
-                F.col("event_type").alias("t"),
-            )
-        ).alias("fst"),
-        F.min(us).alias("s"),
-        F.max(us).alias("e"),
-    )
     u = tracked_persist(
-        g.select(
-            F.col("fst.t").alias("first_type"),
-            (F.col("e") - F.col("s")).alias("span_us"),
-        ),
+        _lifetime_span_cells(spark, sf_dir, load_table),
         f"user_lifetime_spans:{sf_dir}",
     )
-    # |event types|-bounded census + narrower + assembly live in the
-    # shared _lifetime_span_report tail (the streaming twin runs the
-    # same derivation over its sink table).
-    return _lifetime_span_report(spark, u)
+    return _lifetime_span_report(u)
 
 
 # Shared with the streaming twin in streaming/stream.py: one statement of
@@ -1771,10 +1835,26 @@ ORDERS_PRIORITY_MIX_ORACLE = """
     """
 
 
+def _priority_mix_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    o = read(spark, sf_dir, "orders")
+    week = F.expr("unix_micros(o_orderdate) div 1000000 div 86400 div 7")
+    return (
+        o.select(week.alias("week"), "o_orderpriority")
+        .groupBy("week", "o_orderpriority")
+        .agg(F.count(F.lit(1)).alias("n_orders"))
+    )
+
+
 @query(
     "orders_priority_mix_weekly_drift",
     oracle=ORDERS_PRIORITY_MIX_ORACLE,
     tags=("temporal", "tpch", "trend", "drift"),
+    twin=Twin(
+        _priority_mix_cells,
+        partial(_mix_drift_report, key="o_orderpriority", n="n_orders"),
+    ),
 )
 def orders_priority_mix_weekly_drift(
     spark: SparkSession, sf_dir: str
@@ -1797,58 +1877,11 @@ def orders_priority_mix_weekly_drift(
     the event twin's cell-table discipline)."""
     from ..llm.cache import tracked_persist
 
-    o = load_table(spark, sf_dir, "orders")
-    week = F.expr("unix_micros(o_orderdate) div 1000000 div 86400 div 7")
     g = tracked_persist(
-        o.select(week.alias("week"), "o_orderpriority")
-        .groupBy("week", "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders")),
+        _priority_mix_cells(spark, sf_dir, load_table),
         f"orders_priority_cells:{sf_dir}",
     )
-    t = g.groupBy("week").agg(F.sum("n_orders").alias("week_total"))
-    p = g.select(
-        (F.col("week") + 1).alias("week"),
-        "o_orderpriority",
-        F.col("n_orders").alias("prev_n"),
-    )
-    pt = t.select(
-        (F.col("week") + 1).alias("week"),
-        F.col("week_total").alias("prev_week_total"),
-    )
-    e = (
-        F.col("prev_n").cast("double")
-        * F.col("week_total")
-        / F.col("prev_week_total")
-    )
-    return (
-        g.join(F.broadcast(t), "week")
-        .join(F.broadcast(p), ["week", "o_orderpriority"], "left")
-        .join(F.broadcast(pt), "week", "left")
-        .select(
-            "week",
-            "o_orderpriority",
-            "n_orders",
-            "week_total",
-            (F.col("n_orders").cast("double") / F.col("week_total")).alias(
-                "share"
-            ),
-            "prev_n",
-            F.when(
-                F.col("prev_n").isNotNull(),
-                (F.col("n_orders") - e) * (F.col("n_orders") - e) / e,
-            ).alias("chi2_term"),
-        )
-    )
-
-
-# events_user_lifetime_span_percentiles declares oracle=None above so the
-# SQL can live in the shared USER_LIFETIME_SPAN_ORACLE constant (its
-# streaming twin binds the same string in streaming/stream.py).
-from ..registry import _REGISTRY as _REG  # noqa: E402
-
-_REG["events_user_lifetime_span_percentiles"].oracle = (
-    USER_LIFETIME_SPAN_ORACLE
-)
+    return _mix_drift_report(g, "o_orderpriority", "n_orders")
 
 
 @query(

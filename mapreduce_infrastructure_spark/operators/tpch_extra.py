@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..catalog import load_table
 from ..functions.exact import dec, disc_rev, dsum, lcount, rnd
 from ..llm.cache import tracked_persist
-from ..registry import query
+from ..registry import TableReader, Twin, query
 
 
 # --------------------------------------------------------------------------
@@ -1035,10 +1035,53 @@ TRADE_MATRIX_ORACLE = """
     """
 
 
+def _trade_matrix_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    li = read(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    n = load_table(spark, sf_dir, "nation")
+
+    # Nation names ride a 25-row broadcast into each dimension, so the
+    # cells are keyed by name (unique per nation) and the report needs no
+    # dimension of its own.
+    def with_name(dim: str, key: str, name: str) -> DataFrame:
+        names = n.select(F.col("n_nationkey").alias(key), F.col("n_name").alias(name))
+        return load_table(spark, sf_dir, dim).join(F.broadcast(names), key)
+
+    c = with_name("customer", "c_nationkey", "cust_nation")
+    s = with_name("supplier", "s_nationkey", "supp_nation")
+    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .groupBy("cust_nation", "supp_nation")
+        .agg(
+            F.count(F.lit(1)).alias("n_lines"),
+            F.sum(cents).alias("revenue_cents"),
+        )
+    )
+
+
+def _trade_matrix_report(g: DataFrame) -> DataFrame:
+    t = g.agg(F.sum("revenue_cents").alias("total"))
+    return g.crossJoin(F.broadcast(t)).select(
+        "cust_nation",
+        "supp_nation",
+        "n_lines",
+        "revenue_cents",
+        (F.col("revenue_cents").cast("double") / F.col("total")).alias(
+            "revenue_share"
+        ),
+    )
+
+
 @query(
     "nation_trade_balance_matrix",
     oracle=TRADE_MATRIX_ORACLE,
     tags=("tpch", "join", "matrix"),
+    twin=Twin(_trade_matrix_cells, _trade_matrix_report),
 )
 def nation_trade_balance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bilateral trade-flow matrix: revenue between every (customer
@@ -1054,44 +1097,11 @@ def nation_trade_balance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the 4-table star join (lineitem⋈orders on orderkey — the
     bucketed-layout candidate; customer and supplier are key joins AQE
     may broadcast at small SF), ONE partial-aggregatable group-by down to
-    ≤|nations|² rows, a 1-row total broadcast, and two 25-row nation-name
-    broadcasts. The only row-volume stages are the scans and the star
-    join itself."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    g = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").alias("ck"), F.col("s_nationkey").alias("sk")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum(cents).alias("revenue_cents"),
-        )
-    )
-    t = g.agg(F.sum("revenue_cents").alias("total"))
-    cn = n.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("cust_nation"))
-    sn = n.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("supp_nation"))
-    return (
-        g.join(F.broadcast(cn), "ck")
-        .join(F.broadcast(sn), "sk")
-        .crossJoin(F.broadcast(t))
-        .select(
-            "cust_nation",
-            "supp_nation",
-            "n_lines",
-            "revenue_cents",
-            (F.col("revenue_cents").cast("double") / F.col("total")).alias(
-                "revenue_share"
-            ),
-        )
-    )
+    ≤|nations|² rows and a 1-row total broadcast; the two 25-row
+    nation-name broadcasts join the customer and supplier dimensions
+    before the fact. The only row-volume stages are the scans and the
+    star join itself."""
+    return _trade_matrix_report(_trade_matrix_cells(spark, sf_dir, load_table))
 
 
 # --------------------------------------------------------------------------
@@ -1192,10 +1202,43 @@ RETURN_RATE_ORACLE = """
     """
 
 
+def _return_rate_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    li = read(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
+    ret = F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
+    return (
+        li.join(s, li.l_suppkey == s.s_suppkey)
+        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(p, li.l_partkey == p.p_partkey)
+        .groupBy(F.col("n_name").alias("supp_nation"), "p_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_lines"),
+            F.sum(ret).cast("long").alias("n_returned"),
+        )
+    )
+
+
+def _return_rate_report(g: DataFrame) -> DataFrame:
+    return g.select(
+        "supp_nation",
+        "p_type",
+        "n_lines",
+        "n_returned",
+        (F.col("n_returned").cast("double") / F.col("n_lines")).alias(
+            "return_rate"
+        ),
+    )
+
+
 @query(
     "return_rate_by_nation_parttype",
     oracle=RETURN_RATE_ORACLE,
     tags=("tpch", "join", "matrix", "quality"),
+    twin=Twin(_return_rate_cells, _return_rate_report),
 )
 def return_rate_by_nation_parttype(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Return-rate matrix per (supplier nation × part type) — the
@@ -1209,30 +1252,7 @@ def return_rate_by_nation_parttype(spark: SparkSession, sf_dir: str) -> DataFram
     a hard-broadcast 25-row dim; part likewise unhinted), ONE
     partial-aggregatable fold to the |nations|·|types| grid. The only
     row-volume stages are the scans and the joins themselves."""
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    ret = F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
-    g = (
-        li.join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(p, li.l_partkey == p.p_partkey)
-        .groupBy(F.col("n_name").alias("supp_nation"), "p_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum(ret).cast("long").alias("n_returned"),
-        )
-    )
-    return g.select(
-        "supp_nation",
-        "p_type",
-        "n_lines",
-        "n_returned",
-        (F.col("n_returned").cast("double") / F.col("n_lines")).alias(
-            "return_rate"
-        ),
-    )
+    return _return_rate_report(_return_rate_cells(spark, sf_dir, load_table))
 
 
 # Shared with the streaming twin in streaming/stream.py: one statement of
@@ -1276,10 +1296,27 @@ def _discount_band_report(cells: DataFrame) -> DataFrame:
     )
 
 
+def _discount_band_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    li = read(spark, sf_dir, "lineitem")
+    band = F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long")
+    qty = F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long")
+    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
+    cost = dec("l_extendedprice") * dec("l_discount")
+    return li.groupBy(band.alias("discount_pct")).agg(
+        F.count(F.lit(1)).alias("n_lines"),
+        F.sum(qty).alias("total_qty"),
+        F.sum(cents).alias("gross_cents"),
+        F.sum(cost).alias("_cost"),
+    )
+
+
 @query(
     "discount_band_margin_report",
     oracle=DISCOUNT_BAND_ORACLE,
     tags=("tpch", "agg", "pricing"),
+    twin=Twin(_discount_band_cells, _discount_band_report),
 )
 def discount_band_margin_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pricing-band report: per integer discount percent band, line
@@ -1294,18 +1331,7 @@ def discount_band_margin_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     operands times an exact constant, stated token-for-token in the
     oracle. ONE partial-aggregatable scan-speed fold to a ≤101-row
     grid; no join, no window."""
-    li = load_table(spark, sf_dir, "lineitem")
-    band = F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long")
-    qty = F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long")
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    cost = dec("l_extendedprice") * dec("l_discount")
-    g = li.groupBy(band.alias("discount_pct")).agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.sum(qty).alias("total_qty"),
-        F.sum(cents).alias("gross_cents"),
-        F.sum(cost).alias("_cost"),
-    )
-    return _discount_band_report(g)
+    return _discount_band_report(_discount_band_cells(spark, sf_dir, load_table))
 
 
 # Shared with the streaming twin in streaming/stream.py: one statement of
@@ -1331,11 +1357,44 @@ LEADTIME_WEEKLY_ORACLE = """
     """
 
 
+def _leadtime_weekly_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    li = read(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        F.expr("unix_micros(l_shipdate) div 1000000 div 86400").alias("dship"),
+    )
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.expr("unix_micros(o_orderdate) div 1000000 div 86400").alias("dopen"),
+    )
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .select(
+            F.expr("dship div 7").alias("week"),
+            (F.col("dship") - F.col("dopen")).alias("lag_days"),
+        )
+        .groupBy("week", "lag_days")
+        .agg(F.count(F.lit(1)).alias("m"))
+    )
+
+
+def _leadtime_weekly_report(cells: DataFrame) -> DataFrame:
+    from ..functions.ranks import hist_cume_counts, hist_disc_percentile
+
+    cume = hist_cume_counts(cells, ["week"], "lag_days", m_col="m")
+    return cume.groupBy("week").agg(
+        F.sum("m").alias("n_lines"),
+        hist_disc_percentile("lag_days", 0.5, "p50_lag_days"),
+        hist_disc_percentile("lag_days", 0.9, "p90_lag_days"),
+    )
+
+
 @query(
     "leadtime_weekly_trend",
-    oracle=None,  # set below — LEADTIME_WEEKLY_ORACLE, shared verbatim
-                  # with the streaming twin in streaming/stream.py.
+    oracle=LEADTIME_WEEKLY_ORACLE,
     tags=("tpch", "supplier", "percentile", "trend"),
+    twin=Twin(_leadtime_weekly_cells, _leadtime_weekly_report),
 )
 def leadtime_weekly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fulfillment-SLA trend: per ship epoch-week, the EXACT median and
@@ -1348,25 +1407,8 @@ def leadtime_weekly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     |lines| — and the big lineitem⋈orders join is the only row-volume
     stage (shared shape with the backlog and supplier-percentile
     queries)."""
-    from ..functions.ranks import hist_cume_counts, hist_disc_percentile
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        F.expr("unix_micros(l_shipdate) div 1000000 div 86400").alias("dship"),
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.expr("unix_micros(o_orderdate) div 1000000 div 86400").alias("dopen"),
-    )
-    lag = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.expr("dship div 7").alias("week"),
-        (F.col("dship") - F.col("dopen")).alias("lag_days"),
-    )
-    cume = hist_cume_counts(lag, ["week"], "lag_days")
-    return cume.groupBy("week").agg(
-        F.sum("m").alias("n_lines"),
-        hist_disc_percentile("lag_days", 0.5, "p50_lag_days"),
-        hist_disc_percentile("lag_days", 0.9, "p90_lag_days"),
+    return _leadtime_weekly_report(
+        _leadtime_weekly_cells(spark, sf_dir, load_table)
     )
 
 
@@ -1582,14 +1624,6 @@ def supplier_leadtime_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
             "row_share"
         ),
     )
-
-
-# leadtime_weekly_trend declares oracle=None above so the SQL can live in
-# the shared LEADTIME_WEEKLY_ORACLE constant (its streaming twin binds the
-# same string in streaming/stream.py).
-from ..registry import _REGISTRY as _REG  # noqa: E402
-
-_REG["leadtime_weekly_trend"].oracle = LEADTIME_WEEKLY_ORACLE
 
 
 @query(
@@ -1834,10 +1868,31 @@ def _priority_sla_report(cells: DataFrame) -> DataFrame:
     )
 
 
+def _priority_sla_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    li = read(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        F.expr("unix_micros(l_shipdate) div 1000000 div 86400").alias("dship"),
+    )
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderpriority",
+        F.expr("unix_micros(o_orderdate) div 1000000 div 86400").alias("dord"),
+    )
+    l = li.join(o, li.l_orderkey == o.o_orderkey).select(
+        "o_orderpriority", (F.col("dship") - F.col("dord")).alias("lag")
+    )
+    return l.groupBy("o_orderpriority", "lag").agg(
+        F.count(F.lit(1)).alias("m")
+    )
+
+
 @query(
     "priority_leadtime_sla_profile",
     oracle=PRIORITY_SLA_ORACLE,
     tags=("tpch", "percentile", "quality"),
+    twin=Twin(_priority_sla_cells, _priority_sla_report),
 )
 def priority_leadtime_sla_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-ORDER-PRIORITY lead-time SLA profile: exact p50/p90/p99
@@ -1861,25 +1916,7 @@ def priority_leadtime_sla_profile(spark: SparkSession, sf_dir: str) -> DataFrame
     the whole report is one lineitem⋈orders shuffle + ONE
     partial-aggregatable histogram fold; late_share is one IEEE division
     of exact int64s per stratum."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        F.expr("unix_micros(l_shipdate) div 1000000 div 86400").alias("dship"),
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.expr("unix_micros(o_orderdate) div 1000000 div 86400").alias("dord"),
-    )
-    l = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        "o_orderpriority", (F.col("dship") - F.col("dord")).alias("lag")
-    )
-    cells = l.groupBy("o_orderpriority", "lag").agg(
-        F.count(F.lit(1)).alias("m")
-    )
-    # Cumulative windows + percentile/late fold live in the shared
-    # _priority_sla_report tail (the streaming twin runs the same
-    # derivation over its sink cell table).
-    return _priority_sla_report(cells)
+    return _priority_sla_report(_priority_sla_cells(spark, sf_dir, load_table))
 
 
 @query(
@@ -2184,10 +2221,27 @@ def _modal_priority_report(g: DataFrame) -> DataFrame:
     )
 
 
+def _modal_priority_cells(
+    spark: SparkSession, sf_dir: str, read: TableReader
+) -> DataFrame:
+    o = read(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_nationkey"
+    )
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    return (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .groupBy(F.col("n_name").alias("nation"), "o_orderpriority")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
 @query(
     "modal_priority_by_nation",
     oracle=MODAL_PRIORITY_ORACLE,
     tags=("tpch", "agg", "mode"),
+    twin=Twin(_modal_priority_cells, _modal_priority_report),
 )
 def modal_priority_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact grouped MODE with a STATED tie order: per customer nation,
@@ -2206,19 +2260,4 @@ def modal_priority_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographic — one more tiny fold, no window engine-side; the
     oracle's row_number over the cell grid is the same selection).
     Counts exact int64; the share is one IEEE division per nation."""
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderpriority"
-    )
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    g = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"), "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    # Argmax + share live in the shared _modal_priority_report tail (the
-    # streaming twin runs the same derivation over its sink cell table).
-    return _modal_priority_report(g)
+    return _modal_priority_report(_modal_priority_cells(spark, sf_dir, load_table))

@@ -15,6 +15,28 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+TableReader = Callable[[SparkSession, str, str], DataFrame]
+
+
+def _identity(df: DataFrame) -> DataFrame:
+    return df
+
+
+@dataclass(frozen=True)
+class Twin:
+    """One definition shared by a batch query and its streaming twin.
+
+    ``cells(spark, sf_dir, read)`` is the row-volume aggregate: the fact
+    table comes through ``read`` (``catalog.load_table`` for the batch
+    query, ``streaming.stream.stream_source`` for the twin) and dimension
+    tables are loaded as batch. ``report(cells)`` is the bounded
+    derivation after the aggregate. The batch query runs
+    ``report(cells(..., load_table))``; ``streaming.stream.stream_twin``
+    registers ``report(<memory sink of cells(..., stream_source)>)``, so
+    the two cannot drift."""
+
+    cells: Callable[[SparkSession, str, TableReader], DataFrame]
+    report: Callable[[DataFrame], DataFrame] = _identity
 
 
 @dataclass
@@ -24,19 +46,31 @@ class Query:
     oracle: str | None = None
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
+    twin: Twin | None = None
 
 
 _REGISTRY: dict[str, Query] = {}
 
 
-def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Decorator: register a named query (and optional oracle SQL)."""
+def query(
+    name: str,
+    oracle: str | None = None,
+    tags: tuple[str, ...] = (),
+    twin: Twin | None = None,
+):
+    """Decorator: register a named query (and optional oracle SQL, and the
+    batch/stream ``Twin`` definition its streaming variant derives from)."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
         _REGISTRY[name] = Query(
-            name=name, fn=fn, oracle=oracle, doc=(fn.__doc__ or "").strip(), tags=tags
+            name=name,
+            fn=fn,
+            oracle=oracle,
+            doc=(fn.__doc__ or "").strip(),
+            tags=tags,
+            twin=twin,
         )
         return fn
 

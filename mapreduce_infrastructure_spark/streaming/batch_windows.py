@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
 from ..functions.exact import dec, dsum, rnd
-from ..registry import query
+from ..registry import TableReader, Twin, query
 
 
 def _wstart_epoch(alias: str = "wstart") -> F.Column:
@@ -51,14 +51,8 @@ SLIDING_ORACLE = """
 """
 
 
-@query(
-    "window_tumbling_hourly",
-    oracle=TUMBLING_ORACLE,
-    tags=("events", "window-time"),
-)
-def window_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour event-time windows per event type."""
-    ev = load_table(spark, sf_dir, "events")
+def _tumbling_cells(spark: SparkSession, sf_dir: str, read: TableReader) -> DataFrame:
+    ev = read(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -70,14 +64,18 @@ def window_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "window_sliding_1h_15m",
-    oracle=SLIDING_ORACLE,
+    "window_tumbling_hourly",
+    oracle=TUMBLING_ORACLE,
     tags=("events", "window-time"),
+    twin=Twin(_tumbling_cells),
 )
-def window_sliding_1h_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding windows: 1-hour length, 15-minute slide (each event lands in
-    exactly 4 windows; the oracle expands them with an offset cross join)."""
-    ev = load_table(spark, sf_dir, "events")
+def window_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tumbling 1-hour event-time windows per event type."""
+    return _tumbling_cells(spark, sf_dir, load_table)
+
+
+def _sliding_cells(spark: SparkSession, sf_dir: str, read: TableReader) -> DataFrame:
+    ev = read(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(
@@ -86,6 +84,18 @@ def window_sliding_1h_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(_wstart_epoch(), "n_events", "sum_value")
     )
+
+
+@query(
+    "window_sliding_1h_15m",
+    oracle=SLIDING_ORACLE,
+    tags=("events", "window-time"),
+    twin=Twin(_sliding_cells),
+)
+def window_sliding_1h_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding windows: 1-hour length, 15-minute slide (each event lands in
+    exactly 4 windows; the oracle expands them with an offset cross join)."""
+    return _sliding_cells(spark, sf_dir, load_table)
 
 
 # Gap comparison and session_start are computed on floored epoch-MICROseconds
@@ -115,13 +125,10 @@ SESSION_ORACLE = """
 """
 
 
-@query("session_window_30m", oracle=SESSION_ORACLE, tags=("events", "window-time"))
-def session_window_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native session windows (30-minute gap) per user. A new session starts
-    when the gap since the previous event is >= the timeout (Spark's session
-    window is [start, last+gap), half-open). The oracle reconstructs the same
-    sessions via gaps-and-islands SQL."""
-    ev = load_table(spark, sf_dir, "events")
+def _session_cells(spark: SparkSession, sf_dir: str, read: TableReader) -> DataFrame:
+    # The watermark bounds the streaming twin's merging session state; a
+    # batch plan drops it (EliminateEventTimeWatermark).
+    ev = read(spark, sf_dir, "events").withWatermark("ts", "1 hour")
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
@@ -135,6 +142,20 @@ def session_window_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
+
+
+@query(
+    "session_window_30m",
+    oracle=SESSION_ORACLE,
+    tags=("events", "window-time"),
+    twin=Twin(_session_cells),
+)
+def session_window_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Native session windows (30-minute gap) per user. A new session starts
+    when the gap since the previous event is >= the timeout (Spark's session
+    window is [start, last+gap), half-open). The oracle reconstructs the same
+    sessions via gaps-and-islands SQL."""
+    return _session_cells(spark, sf_dir, load_table)
 
 
 @query("sessionize_gaps", oracle=SESSION_ORACLE, tags=("events", "window-time"))

@@ -1,20 +1,25 @@
-"""Structured Streaming over the `events` table (SURVEY.md §2B "Streaming").
+"""Structured Streaming over the fixture tables (SURVEY.md §2B "Streaming").
 
 The reference is strictly batch with a hard map→reduce barrier
-(``description.md:35``). The engine's streaming tier runs the SAME windowed
-aggregations under ``readStream`` — Spark's unified semantics mean the
-batch-mode queries in streaming/batch_windows.py and these incremental
-versions return identical results over identical input, which is exactly how
-they are oracle-checked: each stream runs to completion with
-``Trigger.AvailableNow`` into a memory sink and the materialized table is
-compared against the batch oracle SQL.
+(``description.md:35``). The engine's streaming tier runs the SAME
+aggregations under ``readStream`` — Spark's unified semantics mean a batch
+query and its incremental twin return identical results over identical
+input, which is exactly how they are oracle-checked: each stream runs to
+completion with ``Trigger.AvailableNow`` into a memory sink
+(`run_to_tables`) and the materialized table is compared against the
+batch oracle SQL.
 
 Pieces:
-- file-source ``readStream`` over the fixture parquet (at scale: a
-  date-partitioned event-log directory or Kafka source — same plan),
-- tumbling event-time window aggregation (`stream_tumbling_hourly`),
-- a CUSTOM STATEFUL OPERATOR via ``applyInPandasWithState``
-  (`stream_user_totals`): per-user running totals kept in explicit
+- file-source ``readStream`` over the fixture parquet (`stream_table`; at
+  scale a date-partitioned event-log directory or Kafka source — same
+  plan),
+- batch↔stream twins registered from ONE definition (`stream_twin`): the
+  batch module's ``registry.Twin`` states the row-volume aggregate
+  (``cells``) and the bounded derivation after it (``report``); the twin
+  folds the cells incrementally in streaming state and runs the same
+  report over the sink, under the batch query's oracle,
+- CUSTOM STATEFUL OPERATORS via ``applyInPandasWithState``
+  (`stream_user_totals` and the other keyed-state queries): explicit
   ``GroupState`` — the streaming analogue of the reference's per-key
   reduce fold (``external/include/mr_task_factory.h:37``),
 - watermark/late-data semantics exercised in tests/test_streaming.py
@@ -30,6 +35,7 @@ Scale notes (100 TB/day event firehose):
 from __future__ import annotations
 
 import os
+import shutil
 from typing import Any, Iterator, Tuple
 
 import numpy as np
@@ -37,14 +43,17 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..catalog import scratch_dir
-from ..functions.exact import davg, dec, disc_rev, dsum, lcount, rnd
+from ..catalog import load_table, normalize_ts, scratch_dir
+from ..llm import text
+from ..llm.cache import tracked_persist
 from ..llm.dedup import _INCR_OLD_MAX, INCR_DEDUP_ORACLE, content_fp
-from ..operators.relational import MERGE_ORACLE as _MERGE_ORACLE
-from ..operators.temporal import OHLC_ORACLE
-from ..registry import query
+from ..registry import _REGISTRY, QueryFn, query
 from ..session import tune
-from .batch_windows import SESSION_ORACLE, SLIDING_ORACLE, TUMBLING_ORACLE
+
+# The batch modules register the queries whose oracles and Twins the
+# streaming twins below take.
+from ..operators import relational, stats, temporal, tpch_extra  # noqa: F401
+from . import batch_windows  # noqa: F401
 
 # Wire schema for the Kafka JSON path ONLY (our own serialization: ts as
 # epoch-nanos BIGINT). File-source readers must NOT assume a ts storage
@@ -89,10 +98,10 @@ def _staged_table_dir(sf_dir: str, table: str) -> str:
     return d
 
 
-# Footer-schema cache for the staged event-log dir: one batch footer read
+# Footer-schema cache for the staged table dirs: one batch footer read
 # per (staged dir, fixture fingerprint) per process instead of one per
 # query call — at 100 TB the schema read is cheap but it is a full driver
-# job, and the bench runs 7 stream_* queries back to back. Keyed on the
+# job, and the bench runs stream_* queries back to back. Keyed on the
 # fixture file's (mtime_ns, size) so a regenerated fixture invalidates.
 _FOOTER_SCHEMA_CACHE: dict = {}
 
@@ -102,32 +111,10 @@ def _table_fingerprint(sf_dir: str, table: str) -> tuple:
     return (st.st_mtime_ns, st.st_size)
 
 
-def _events_fingerprint(sf_dir: str) -> tuple:
-    return _table_fingerprint(sf_dir, "events")
-
-
-def _staged_events_dir(sf_dir: str) -> str:
-    return _staged_table_dir(sf_dir, "events")
-
-
 def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """File-source readStream over any fixture table, schema from the
-    parquet footer (cached) — the generic form behind `stream_events`;
-    no timestamp normalization (callers that need event time go through
-    `stream_events`)."""
-    tune(spark)
-    d = _staged_table_dir(sf_dir, table)
-    key = (d, _table_fingerprint(sf_dir, table))
-    file_schema = _FOOTER_SCHEMA_CACHE.get(key)
-    if file_schema is None:
-        file_schema = spark.read.parquet(d).schema
-        _FOOTER_SCHEMA_CACHE[key] = file_schema
-    return spark.readStream.schema(file_schema).parquet(d)
-
-
-def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source readStream over events.parquet, normalized like
-    catalog.load_table (any fixture ts storage type → µs TIMESTAMP).
+    """File-source readStream over any fixture table — the streaming
+    counterpart of catalog.load_table (same signature, same ts
+    normalization), so a ``Twin``'s cells read either source.
 
     File streams require an explicit schema; hardcoding one broke when the
     fixture's ts storage changed (CORRECTNESS_r03): a `ts long` schema over
@@ -136,103 +123,105 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     1000 and silently landed every event in 1970 — windowed streams emitted
     near-empty results with no error. A batch footer read (cached per
     staged dir + fixture fingerprint) keeps the stream schema in lockstep
-    with the files."""
-    from ..catalog import normalize_ts
-
+    with the files, and ``normalize_ts`` (a no-op without a ``ts``
+    column) converts any ts storage type to the engine's µs TIMESTAMP."""
     tune(spark)
-    d = _staged_events_dir(sf_dir)
-    key = (d, _events_fingerprint(sf_dir))
+    d = _staged_table_dir(sf_dir, table)
+    key = (d, _table_fingerprint(sf_dir, table))
     file_schema = _FOOTER_SCHEMA_CACHE.get(key)
     if file_schema is None:
         file_schema = spark.read.parquet(d).schema
         _FOOTER_SCHEMA_CACHE[key] = file_schema
-    src = spark.readStream.schema(file_schema).parquet(d)
-    return normalize_ts(src)
+    return normalize_ts(spark.readStream.schema(file_schema).parquet(d))
 
 
-def run_to_table(stream_df: DataFrame, name: str, mode: str = "complete") -> DataFrame:
-    """Run a streaming frame to completion (AvailableNow) into an in-memory
-    sink and return the materialized result as a batch DataFrame.
-
-    This is the bridge that lets the driver's batch oracle check streaming
-    plans: same input, same answer, incremental execution."""
-    spark = stream_df.sparkSession
-    ckpt = os.path.join(_CHECKPOINTS, name)
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source readStream over events.parquet, normalized like
+    catalog.load_table (any fixture ts storage type → µs TIMESTAMP)."""
+    return stream_table(spark, sf_dir, "events")
 
 
 def run_to_tables(
     named_streams: "list[tuple[DataFrame, str]]", mode: str = "complete"
 ) -> "list[DataFrame]":
-    """Run several INDEPENDENT streaming frames to completion CONCURRENTLY
-    (start all, then await all) and return their materialized tables in
-    input order.
+    """Run streaming frames to completion (AvailableNow), each into its own
+    in-memory sink under a fresh checkpoint, and return the materialized
+    results as batch DataFrames in input order.
 
-    Same bridge contract as `run_to_table` per query — fresh checkpoint,
-    its own memory sink, availableNow to end-of-input, and the sink table
-    is only read after that query's awaitTermination returns — so each
-    result is identical to the serial form. Overlapping the queries lets
-    the second stream's micro-batch tasks back-fill executor slots freed
-    by the first's tail (guide §2.6, overlap independent jobs) instead of
-    paying two full start→commit→teardown latencies end to end. Callers
-    must pass queries with DISJOINT sink names and no data dependency on
-    each other's sink (the two call sites aggregate different inputs)."""
-    import shutil
+    This is the bridge that lets the batch oracle check streaming plans:
+    same input, same answer, incremental execution. Several frames run
+    CONCURRENTLY (start all, then await all), so independent sinks pay one
+    start→commit→teardown latency instead of one each; a sink is only read
+    after every query has terminated. Callers pass DISJOINT sink names and
+    no data dependency between the frames.
 
+    Leak-safe: if a start() or an awaitTermination() raises, every query
+    this call started that is still active is stopped before the error
+    propagates, so no query keeps its sink and checkpoint and a retry with
+    the same names starts clean.
+
+    Each result re-aliases the sink's columns. A memory-sink scan is a
+    leaf Spark cannot re-instance, so a self-join of two frames derived
+    from it fails conflicting-reference resolution; behind a fresh
+    projection the sink joins like any batch relation, which is what lets
+    a twin run its batch query's report unchanged."""
     spark = named_streams[0][0].sparkSession
-    queries = []
-    for stream_df, name in named_streams:
-        ckpt = os.path.join(_CHECKPOINTS, name)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        queries.append(
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    for q in queries:
-        q.awaitTermination()
-    return [spark.table(name) for _, name in named_streams]
+    started = []
+    try:
+        for stream_df, name in named_streams:
+            ckpt = os.path.join(_CHECKPOINTS, name)
+            shutil.rmtree(ckpt, ignore_errors=True)
+            started.append(
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+        for q in started:
+            q.awaitTermination()
+    finally:
+        for q in started:
+            if q.isActive:
+                q.stop()
+    tables = [spark.table(name) for _, name in named_streams]
+    return [t.select([F.col(f"`{c}`").alias(c) for c in t.columns]) for t in tables]
 
 
-@query(
-    "stream_tumbling_hourly",
-    oracle=TUMBLING_ORACLE,
-    tags=("streaming", "window-time"),
-)
-def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tumbling-window aggregation of batch_windows.window_tumbling_hourly
-    executed INCREMENTALLY under Structured Streaming (complete mode, run to
-    end-of-input). Identical oracle — unified batch/streaming semantics."""
-    ev = stream_events(spark, sf_dir)
-    agg = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value", "sum_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).cast("long").alias("wstart"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
+def stream_twin(
+    name: str, batch: str, tags: tuple[str, ...], persist: bool = False
+) -> QueryFn:
+    """Register ``name`` as the streaming twin of the batch query
+    ``batch``, from that query's ``registry.Twin`` and under its oracle:
+    the cells fold incrementally in streaming state (complete mode — the
+    state is the aggregate), and the batch report runs over the memory
+    sink. The report is not incrementally expressible per row (a new row
+    can move a share, a rank or last week's delta), which is why it runs
+    post-sink; every report reads only aggregate-sized data. ``persist``
+    caches the sink for reports that re-scan it (the percentile
+    narrowers). In a deployment the cells sink to a durable table and the
+    same report runs downstream."""
+    entry = _REGISTRY[batch]
+    twin = entry.twin
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        (sink,) = run_to_tables([(twin.cells(spark, sf_dir, stream_table), name)])
+        if persist:
+            sink = tracked_persist(sink, f"{name}:{sf_dir}")
+        return twin.report(sink)
+
+    run.__name__ = run.__qualname__ = name
+    run.__doc__ = (
+        f"`{batch}` maintained incrementally: its cells fold per "
+        "micro-batch in streaming state and its report runs over the sink."
     )
-    return run_to_table(agg, "stream_tumbling_hourly", mode="complete")
+    return query(name, oracle=entry.oracle, tags=tags)(run)
+
+
+stream_tumbling_hourly = stream_twin(
+    "stream_tumbling_hourly", "window_tumbling_hourly", ("streaming", "window-time")
+)
 
 
 def _user_totals_fn(
@@ -285,7 +274,7 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    per_batch = run_to_table(updated, "stream_user_totals", mode="update")
+    per_batch = run_to_tables([(updated, "stream_user_totals")], mode="update")[0]
     # Under multi-batch replay a user emits once per batch; the cumulative
     # row with the highest n_events is the final state.
     w = F.struct("n_events", "sum_value")
@@ -350,7 +339,7 @@ def stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("c_ts").alias("click_us"),
         F.unix_micros("p_ts").alias("purchase_us"),
     )
-    return run_to_table(joined, "stream_join_click_purchase", mode="append")
+    return run_to_tables([(joined, "stream_join_click_purchase")], mode="append")[0]
 
 
 @query(
@@ -433,7 +422,9 @@ def stream_left_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFra
         F.unix_micros("c_ts").alias("click_us"),
         F.unix_micros("p_ts").alias("purchase_us"),
     )
-    return run_to_table(joined, "stream_left_join_click_purchase", mode="append")
+    return run_to_tables(
+        [(joined, "stream_left_join_click_purchase")], mode="append"
+    )[0]
 
 
 @query(
@@ -521,7 +512,9 @@ def stream_full_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFra
         F.unix_micros("c_ts").alias("click_us"),
         F.unix_micros("p_ts").alias("purchase_us"),
     )
-    return run_to_table(joined, "stream_full_join_click_purchase", mode="append")
+    return run_to_tables(
+        [(joined, "stream_full_join_click_purchase")], mode="append"
+    )[0]
 
 
 @query(
@@ -549,7 +542,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup state (one entry per event forever on an unbounded stream).
     deduped = doubled.dropDuplicatesWithinWatermark(["event_id"])
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_unique"))
-    return run_to_table(agg, "stream_dedup_events", mode="complete")
+    return run_to_tables([(agg, "stream_dedup_events")], mode="complete")[0]
 
 
 @query(
@@ -612,102 +605,21 @@ def stream_hourly_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stream_ohlc_hourly",
-    oracle=OHLC_ORACLE,
-    tags=("streaming", "resample", "ohlc"),
+stream_ohlc_hourly = stream_twin(
+    "stream_ohlc_hourly", "ohlc_hourly_purchases", ("streaming", "resample", "ohlc")
 )
-def stream_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly OHLC bars computed INCREMENTALLY — the streaming twin of
-    temporal.ohlc_hourly_purchases, same oracle verbatim (the shared
-    OHLC_ORACLE constant), completing the batch↔stream twin matrix for
-    the time-series resample tier.
-
-    The whole bar is ONE incremental hash aggregate: open/close are
-    min/max over the (us, event_id, value) struct total order (struct
-    Min/Max are ordinary Catalyst aggregates, so they fold per
-    micro-batch exactly like count — each trigger merges the batch's
-    partial struct-extremes into the state-store value). No window
-    ranking, no per-bar sort, no custom state: the same
-    partial-aggregatable shape the batch docstring argues for is what
-    makes the operator streamable at all.
-
-    At 100 TB/day: state is one (hr → 5 scalars + 2 structs) entry per
-    bar, partitioned by hr in the state store; with a watermark +
-    append mode the same plan emits finalized bars and evicts them
-    (complete mode here only because the memory-sink bridge replays
-    the full table for the batch oracle)."""
-    ev = stream_events(spark, sf_dir).filter(F.col("event_type") == "purchase")
-    e = ev.select(
-        F.expr("unix_micros(ts) div 3600000000").alias("hr"),
-        F.unix_micros(F.col("ts")).alias("us"),
-        "event_id",
-        "value",
-    )
-    agg = e.groupBy("hr").agg(
-        F.min(F.struct("us", "event_id", "value"))["value"].alias("open"),
-        F.max("value").alias("high"),
-        F.min("value").alias("low"),
-        F.max(F.struct("us", "event_id", "value"))["value"].alias("close"),
-        F.count(F.lit(1)).alias("n_trades"),
-    )
-    return run_to_table(agg, "stream_ohlc_hourly", mode="complete")
 
 
-@query(
-    "stream_sliding_1h_15m",
-    oracle=SLIDING_ORACLE,
-    tags=("streaming", "window-time"),
+stream_sliding_1h_15m = stream_twin(
+    "stream_sliding_1h_15m", "window_sliding_1h_15m", ("streaming", "window-time")
 )
-def stream_sliding_1h_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding windows (1 h length, 15 min slide) under readStream — the
-    streaming twin of batch_windows.window_sliding_1h_15m, same oracle."""
-    ev = stream_events(spark, sf_dir)
-    agg = (
-        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value", "sum_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).cast("long").alias("wstart"),
-            "n_events",
-            "sum_value",
-        )
-    )
-    return run_to_table(agg, "stream_sliding_1h_15m", mode="complete")
 
 
-@query(
+stream_session_window_30m = stream_twin(
     "stream_session_window_30m",
-    oracle=SESSION_ORACLE,
-    tags=("streaming", "window-time", "session"),
+    "session_window_30m",
+    ("streaming", "window-time", "session"),
 )
-def stream_session_window_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows (30-minute gap) under readStream: merging session
-    state per user, watermark-bounded — the streaming twin of
-    batch_windows.session_window_30m with the same gaps-and-islands oracle.
-    Spark restricts session-window streaming aggregation to complete/append
-    output (update is rejected); complete mode materializes the full
-    current session set each trigger, so the final table already holds one
-    row per merged session — no reconciliation step is needed."""
-    ev = stream_events(spark, sf_dir).withWatermark("ts", "1 hour")
-    agg = (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value", "sum_value"),
-        )
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("w.start")).cast("long").alias("session_start"),
-            "n_events",
-            "sum_value",
-        )
-    )
-    # Complete mode truncates and rewrites the sink every trigger, so the
-    # materialized table IS the final session set — no reconciliation step.
-    return run_to_table(agg, "stream_session_window_30m", mode="complete")
 
 
 _SESSION_GAP_US = 1_800_000_000  # 30 minutes, the tier's shared gap
@@ -859,8 +771,8 @@ def stream_session_topk_event_types(spark: SparkSession, sf_dir: str) -> DataFra
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    per_batch = run_to_table(
-        updated, "stream_session_topk_event_types", mode="update"
+    (per_batch,) = run_to_tables(
+        [(updated, "stream_session_topk_event_types")], mode="update"
     )
     last = per_batch.groupBy("user_id").agg(
         F.max(
@@ -952,8 +864,6 @@ def stream_ingest_dedup_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     state store partitions by fingerprint. The adversarial-split test
     delivers the smaller doc_id in the LATER batch and asserts the
     demotion."""
-    from ..catalog import load_table
-
     docs = stream_table(spark, sf_dir, "documents").select(
         "doc_id", content_fp().alias("fp")
     )
@@ -976,7 +886,9 @@ def stream_ingest_dedup_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    per_batch = run_to_table(updated, "stream_ingest_dedup_status", mode="update")
+    (per_batch,) = run_to_tables(
+        [(updated, "stream_ingest_dedup_status")], mode="update"
+    )
     last = per_batch.groupBy("fp").agg(
         F.max(F.struct("upd", "ids", "in_old")).alias("s")
     )
@@ -1070,7 +982,7 @@ def stream_events_kafka(
 @query(
     "stream_merge_upsert",
     # the SAME oracle as the batch MERGE: incremental must converge to it
-    oracle=_MERGE_ORACLE,
+    oracle=relational.MERGE_ORACLE,
     tags=("streaming", "merge", "cdc"),
 )
 def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1094,7 +1006,6 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     tune(spark)
-    from ..catalog import normalize_ts
 
     scratch = os.path.join(os.path.dirname(_CHECKPOINTS), "cdc")
     sfb = os.path.basename(sf_dir.rstrip("/"))
@@ -1109,7 +1020,7 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixture fingerprint marker so a regenerated fixture rebuilds the
     # staging instead of silently serving stale/unit-mismatched data.
     marker = os.path.join(scratch, sfb, "src.fingerprint")
-    fp = repr(_events_fingerprint(sf_dir))
+    fp = repr(_table_fingerprint(sf_dir, "events"))
     stale = True
     if os.path.isdir(src) and os.path.isfile(marker):
         with open(marker) as fh:
@@ -1125,8 +1036,6 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Fresh state every invocation: the query is deterministic end to end.
     shutil.rmtree(gold, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
-
-    from ..catalog import load_table
 
     base = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("key"),
@@ -1240,8 +1149,6 @@ def stream_enrich_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan speed — and degrades to a shuffled join rather than an executor
     OOM when it doesn't. Oracle = the same join in batch SQL (unified
     semantics: same input, same answer)."""
-    from ..catalog import load_table
-
     ev = stream_events(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_nationkey"
@@ -1256,7 +1163,7 @@ def stream_enrich_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         F.col("c_nationkey").cast("long").alias("c_nationkey"),
     )
-    return run_to_table(joined, "stream_enrich_static_join", mode="append")
+    return run_to_tables([(joined, "stream_enrich_static_join")], mode="append")[0]
 
 
 def _anomaly_fn(
@@ -1332,7 +1239,8 @@ def _anomaly_fn(
 
 @query(
     "stream_anomaly_zscore",
-    oracle=None,  # set below: shares the batch operator's oracle verbatim
+    # the batch operator's oracle verbatim (unified semantics)
+    oracle=_REGISTRY["anomaly_zscore_events"].oracle,
     tags=("streaming", "stateful", "anomaly"),
 )
 def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1362,15 +1270,7 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return run_to_table(scored, "stream_anomaly_zscore", mode="append")
-
-
-# Share the batch operator's oracle string exactly (unified semantics):
-# importing the stats module guarantees the batch query is registered.
-from ..operators import stats as _batch_stats  # noqa: E402,F401
-from ..registry import _REGISTRY as _REG  # noqa: E402
-
-_REG["stream_anomaly_zscore"].oracle = _REG["anomaly_zscore_events"].oracle
+    return run_to_tables([(scored, "stream_anomaly_zscore")], mode="append")[0]
 
 
 _TOPK_PER_WINDOW = 3
@@ -1461,8 +1361,8 @@ def stream_topk_users_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    per_batch = run_to_table(
-        updated, "stream_topk_users_per_window", mode="update"
+    (per_batch,) = run_to_tables(
+        [(updated, "stream_topk_users_per_window")], mode="update"
     )
     final = (
         per_batch.groupBy("wstart")
@@ -1480,1155 +1380,191 @@ def stream_topk_users_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+stream_dow_hour_profile = stream_twin(
     "stream_dow_hour_profile",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "seasonality", "stats"),
+    "events_dow_hour_profile",
+    ("streaming", "seasonality", "stats"),
 )
-def stream_dow_hour_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly seasonality profile computed INCREMENTALLY — the streaming
-    twin of temporal.events_dow_hour_profile, same oracle verbatim (the
-    shared DOW_HOUR_PROFILE_ORACLE constant), extending the batch↔stream
-    twin matrix (OHLC, ingest dedup, anomaly z-score) to the seasonality
-    tier.
-
-    The row-volume work is ONE incremental hash aggregate keyed by
-    (event_type, dow, hour) — the dow/hour cells come from the same pure
-    epoch-second integer arithmetic as the batch twin, computed per
-    micro-batch at scan speed, and the count folds into state exactly
-    like any streaming count. share and chi2_term need the per-type
-    TOTALS, which are not incrementally expressible per row — they are
-    derived POST-SINK from the ≤|types|·168-row memory table (one batch
-    aggregate + broadcast join over aggregate-sized data), the same
-    post-sink bridge stream_hourly_active_users uses for its join.
-
-    At 100 TB/day: state is one counter per (type, dow, hour) — at most
-    |types|·168 entries, the smallest state footprint in the streaming
-    tier; the post-sink share/chi2 derivation reads only the aggregate."""
-    ev = stream_events(spark, sf_dir)
-    day = F.expr("unix_micros(ts) div 1000000 div 86400")
-    hour = F.expr("unix_micros(ts) div 1000000 % 86400 div 3600")
-    g = (
-        ev.select(
-            "event_type",
-            ((day + F.lit(3)) % 7).alias("dow"),
-            hour.alias("hour"),
-        )
-        .groupBy("event_type", "dow", "hour")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    tbl = run_to_table(g, "stream_dow_hour_profile", mode="complete")
-    # Per-type totals via a window over the ≤|types|·168-row sink table
-    # (aggregate-sized — the bounded-window shape the plan guard exempts;
-    # a groupBy + self-join back onto the memory sink trips Spark's
-    # conflicting-reference resolution on MemoryPlan attributes).
-    from pyspark.sql import Window
-
-    total = F.sum("n_events").over(Window.partitionBy("event_type"))
-    e = total / F.lit(168).cast("double")
-    return tbl.select(
-        "event_type",
-        "dow",
-        "hour",
-        "n_events",
-        (F.col("n_events").cast("double") / total).alias("share"),
-        ((F.col("n_events") - e) * (F.col("n_events") - e) / e).alias(
-            "chi2_term"
-        ),
-    )
 
 
 @query(
     "stream_backlog_daily",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
+    oracle=_REGISTRY["order_fulfillment_backlog"].oracle,
     tags=("streaming", "inventory", "prefix-sum"),
 )
 def stream_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Open-order backlog series computed INCREMENTALLY — the streaming
-    twin of temporal.order_fulfillment_backlog, same oracle verbatim (the
-    shared BACKLOG_ORACLE constant), extending the batch↔stream twin
-    matrix (OHLC, ingest dedup, anomaly z-score, dow/hour profile) to the
-    fulfillment tier.
+    twin of temporal.order_fulfillment_backlog under its oracle, sharing
+    its per-order close-day cells and its `_backlog_report` derivation.
 
-    The row-volume work is two incremental KEYED aggregates, one per
-    input stream: per-order open day over streamed `orders`
-    (min(o_orderdate) — o_orderkey is unique, so min is just the value,
-    but min makes the fold idempotent under replays) and per-order close
-    day over streamed `lineitem` (max(l_shipdate) — the genuinely
-    streaming fold: an order's close day is only final at end-of-input,
-    which is exactly what a running MAX in keyed state expresses). State
-    is ONE int64 per order key on each side, living in the state store
-    partitioned by key — the standard streaming-dedup state shape, never
-    on the driver.
-
-    The backlog DERIVATION (inner-join the two per-order tables, per-day
-    open/close deltas, cumulative series) is not incrementally
-    expressible per row (closes retract), so it runs POST-SINK over the
-    two |orders|-row aggregate tables — per-order cardinality, already
-    3–4× smaller than lineitem, and everything after the one delta
-    group-by is CALENDAR-bounded (one row per active day). The in-memory
-    sink is the test bridge; a deployment sinks both keyed aggregates to
-    durable tables and runs the same bounded derivation as the downstream
-    batch step. The cumulative uses the same global-form
-    `bucketed_prefix_sum` as the batch twin — no single-partition window
-    anywhere."""
-    from ..functions.ranks import bucketed_prefix_sum
-
+    Shares only those two pieces, not a whole ``Twin``: a complete-mode
+    sink needs an aggregate, so the per-order open day is a keyed
+    min(o_orderdate) here (o_orderkey is unique, so min is just the
+    value, and min keeps the fold idempotent under replays) where the
+    batch query reads the plain projection. State is one int64 per order
+    key on each side; the two streams aggregate different inputs and only
+    meet in the report, so they run concurrently."""
     od_s = (
         stream_table(spark, sf_dir, "orders")
-        .select(
-            "o_orderkey",
-            F.expr("unix_micros(o_orderdate) div 1000000 div 86400").alias(
-                "d"
-            ),
-        )
         .groupBy("o_orderkey")
-        .agg(F.min("d").alias("dopen"))
-    )
-    cd_s = (
-        stream_table(spark, sf_dir, "lineitem")
-        .select(
-            "l_orderkey",
-            F.expr("unix_micros(l_shipdate) div 1000000 div 86400").alias(
-                "d"
-            ),
+        .agg(
+            F.min(
+                F.expr("unix_micros(o_orderdate) div 1000000 div 86400")
+            ).alias("dopen")
         )
-        .groupBy("l_orderkey")
-        .agg(F.max("d").alias("dclose"))
     )
-    # The opens and closes streams aggregate different inputs and only
-    # meet at the post-sink join — run them concurrently (one combined
-    # bridge latency; each sink fully materialized before the join).
+    cd_s = temporal._backlog_closes(spark, sf_dir, stream_table)
     od, cd = run_to_tables(
-        [
-            (od_s, "stream_backlog_opens"),
-            (cd_s, "stream_backlog_closes"),
-        ],
-        mode="complete",
+        [(od_s, "stream_backlog_opens"), (cd_s, "stream_backlog_closes")]
     )
-    oc = od.join(cd, od.o_orderkey == cd.l_orderkey).select("dopen", "dclose")
-    ev = oc.select(
-        F.col("dopen").alias("day"),
-        F.lit(1).alias("opened"),
-        F.lit(0).alias("closed"),
-    ).unionByName(
-        oc.select(
-            F.col("dclose").alias("day"),
-            F.lit(0).alias("opened"),
-            F.lit(1).alias("closed"),
-        )
-    )
-    g = ev.groupBy("day").agg(
-        F.sum("opened").alias("n_opened"),
-        F.sum("closed").alias("n_closed"),
-    )
-    return bucketed_prefix_sum(
-        g,
-        [],
-        "day",
-        F.col("n_opened") - F.col("n_closed"),
-        cum_alias="backlog",
-    )
+    return temporal._backlog_report(od, cd)
 
 
-@query(
+stream_trade_balance_matrix = stream_twin(
     "stream_trade_balance_matrix",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "tpch", "join", "matrix"),
+    "nation_trade_balance_matrix",
+    ("streaming", "tpch", "join", "matrix"),
 )
-def stream_trade_balance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bilateral trade-flow matrix maintained INCREMENTALLY — the
-    streaming twin of tpch_extra.nation_trade_balance_matrix, same oracle
-    verbatim (the shared TRADE_MATRIX_ORACLE constant). This twin adds
-    the STREAM-STATIC-JOIN shape to the twin matrix: the fact stream
-    (lineitem — the table that grows forever) is enriched against three
-    BATCH dimension tables (orders→customer for the customer nation,
-    supplier for the supplier nation) inside the micro-batch, then folds
-    into ONE incremental hash aggregate keyed by the ≤|nations|² cell.
-
-    Per micro-batch the static sides are ordinary batch relations (Spark
-    re-plans size-based broadcast per batch); state is one (count, sum)
-    pair per (ck, sk) cell — ≤625 entries, dow/hour-profile-class
-    footprint. The share derivation needs the WORLD total, not
-    incrementally expressible per row — derived POST-SINK from the
-    ≤625-row memory table (one aggregate + two 25-row nation-name
-    broadcasts + a 1-row total broadcast), the same post-sink bridge as
-    the other twins. In a deployment the dimensions come from a slowly
-    changing store and the enrich is the same stream-static join; only
-    their refresh cadence changes.
-
-    At 100 TB/day: the only row-volume stage is the per-batch enrich of
-    new lineitem files; orders/customer/supplier scale with SF, so at
-    cluster scale the per-batch join shuffles (size-based planning, no
-    hard hint — the tpch_extra module's scale note), while cell state
-    stays ≤625 rows regardless."""
-    from ..catalog import load_table
-
-    li = stream_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    s = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    g = (
-        li.select("l_orderkey", "l_suppkey", cents.alias("cents"))
-        .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("ck"), F.col("s_nationkey").alias("sk")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum("cents").alias("revenue_cents"),
-        )
-    )
-    tbl = run_to_table(g, "stream_trade_balance_matrix", mode="complete")
-    n = load_table(spark, sf_dir, "nation")
-    t = tbl.agg(F.sum("revenue_cents").alias("total"))
-    cn = n.select(
-        F.col("n_nationkey").alias("ck"), F.col("n_name").alias("cust_nation")
-    )
-    sn = n.select(
-        F.col("n_nationkey").alias("sk"), F.col("n_name").alias("supp_nation")
-    )
-    return (
-        tbl.join(F.broadcast(cn), "ck")
-        .join(F.broadcast(sn), "sk")
-        .crossJoin(F.broadcast(t))
-        .select(
-            "cust_nation",
-            "supp_nation",
-            "n_lines",
-            "revenue_cents",
-            (F.col("revenue_cents").cast("double") / F.col("total")).alias(
-                "revenue_share"
-            ),
-        )
-    )
 
 
-@query(
-    "stream_weekly_trend",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "trend", "agg"),
+stream_weekly_trend = stream_twin(
+    "stream_weekly_trend", "order_volume_weekly_trend", ("streaming", "trend", "agg")
 )
-def stream_weekly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Week-over-week order-volume trend maintained INCREMENTALLY — the
-    streaming twin of temporal.order_volume_weekly_trend, same oracle
-    verbatim (the shared WEEKLY_TREND_ORACLE constant).
-
-    The row-volume work is ONE incremental hash aggregate keyed by the
-    TZ-proof epoch-week (count + exact cents sum fold per micro-batch) —
-    state is one (count, sum) pair per calendar week, the smallest state
-    in the twin matrix after the dow/hour profile. The week-over-week
-    derivation is not incrementally expressible (a new batch can touch
-    LAST week's row, retroactively changing THIS week's delta), so it
-    runs POST-SINK as the same broadcast week = week + 1 self-join over
-    the calendar-bounded weekly table the batch twin uses — never a
-    global lag window."""
-    o = stream_table(spark, sf_dir, "orders")
-    week = F.expr("unix_micros(o_orderdate) div 1000000 div 86400 div 7")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    g = (
-        o.select(week.alias("week"), cents.alias("cents"))
-        .groupBy("week")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum("cents").alias("revenue_cents"),
-        )
-    )
-    tbl = run_to_table(g, "stream_weekly_trend", mode="complete")
-    prev = tbl.select(
-        (F.col("week") + 1).alias("week"),
-        F.col("n_orders").alias("prev_n_orders"),
-    )
-    return tbl.join(F.broadcast(prev), "week", "left").select(
-        "week",
-        "n_orders",
-        "revenue_cents",
-        "prev_n_orders",
-        (F.col("n_orders") - F.col("prev_n_orders")).alias("wow_delta_orders"),
-        (F.col("n_orders").cast("double") / F.col("prev_n_orders")).alias(
-            "wow_ratio"
-        ),
-    )
 
 
-@query(
+stream_event_mix_drift = stream_twin(
     "stream_event_mix_drift",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "events", "drift", "stats"),
+    "event_mix_weekly_drift",
+    ("streaming", "events", "drift", "stats"),
 )
-def stream_event_mix_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly event-mix drift maintained INCREMENTALLY — the streaming
-    twin of temporal.event_mix_weekly_drift, same oracle verbatim (the
-    shared EVENT_MIX_DRIFT_ORACLE constant).
-
-    The row-volume work is ONE incremental hash aggregate keyed by
-    (epoch-week, event_type) — state is one counter per cell,
-    calendar×|types|-bounded. The drift derivation (week totals, the two
-    previous-week lookups, per-cell share and chi2 terms) is not
-    incrementally expressible — a new batch touching LAST week's cell
-    retroactively changes THIS week's expectation — so it runs POST-SINK
-    over the bounded cell table. Unlike the batch twin's broadcast
-    self-joins, the memory-sink table cannot self-join (Spark's
-    conflicting-reference resolution fails on MemoryPlan attributes —
-    the same pitfall stream_dow_hour_profile documents), so the same
-    relations are stated as BOUNDED windows over the sink: week totals
-    via a per-week sum window, the previous-week cell and total via
-    lag() within each type gated on lag(week) = week − 1 — NULL on
-    first-observed and after-gap weeks, exactly the batch twin's
-    left-join convention (and when prev_n is non-null, the type WAS
-    present in week − 1, so its lagged week_total IS week − 1's total).
-    Per-cell chi2 terms are emitted, never summed (the dow/hour
-    convention)."""
-    from pyspark.sql import Window
-
-    ev = stream_events(spark, sf_dir)
-    week = F.expr("unix_micros(ts) div 1000000 div 86400 div 7")
-    g = (
-        ev.select(week.alias("week"), "event_type")
-        .groupBy("week", "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    tbl = run_to_table(g, "stream_event_mix_drift", mode="complete")
-    w_total = Window.partitionBy("week")
-    w_type = Window.partitionBy("event_type").orderBy("week")
-    contiguous = F.lag("week").over(w_type) == F.col("week") - 1
-    totals = tbl.select(
-        "week",
-        "event_type",
-        "n_events",
-        F.sum("n_events").over(w_total).alias("week_total"),
-    )
-    cells = totals.select(
-        "week",
-        "event_type",
-        "n_events",
-        "week_total",
-        F.when(contiguous, F.lag("n_events").over(w_type)).alias("prev_n"),
-        F.when(contiguous, F.lag("week_total").over(w_type)).alias(
-            "prev_week_total"
-        ),
-    )
-    e = (
-        F.col("prev_n").cast("double")
-        * F.col("week_total")
-        / F.col("prev_week_total")
-    )
-    return cells.select(
-        "week",
-        "event_type",
-        "n_events",
-        "week_total",
-        (F.col("n_events").cast("double") / F.col("week_total")).alias(
-            "share"
-        ),
-        "prev_n",
-        F.when(
-            F.col("prev_n").isNotNull(),
-            (F.col("n_events") - e) * (F.col("n_events") - e) / e,
-        ).alias("chi2_term"),
-    )
 
 
-@query(
+stream_leadtime_weekly_trend = stream_twin(
     "stream_leadtime_weekly_trend",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "tpch", "percentile", "trend"),
+    "leadtime_weekly_trend",
+    ("streaming", "tpch", "percentile", "trend"),
 )
-def stream_leadtime_weekly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fulfillment-SLA trend (per ship epoch-week exact p50/p90 ship lag)
-    maintained INCREMENTALLY — the streaming twin of
-    tpch_extra.leadtime_weekly_trend, same oracle verbatim (the shared
-    LEADTIME_WEEKLY_ORACLE constant). Extends the twin matrix with the
-    HISTOGRAM-CELL state shape: the fact stream (lineitem) is enriched
-    against the batch orders dimension inside the micro-batch (the
-    stream-static-join pattern stream_trade_balance_matrix established),
-    then folds into ONE incremental hash aggregate keyed by the
-    (week, lag_days) histogram cell — both axes calendar-bounded, so
-    state is |weeks|·|lag domain| counts (~2.5k/century-of-lag per week)
-    no matter how many lines stream through.
-
-    The PERCENTILE derivation (cumulative counts within a week, discrete
-    p50/p90 selection) is not incrementally expressible per row (a new
-    line shifts every higher rank), so it runs POST-SINK over the
-    bounded cell table — the same cells-then-derive bridge as
-    stream_event_mix_drift, and literally the batch twin's
-    hist_cume_counts/hist_disc_percentile tail (the window runs over
-    histogram-cardinality input). The in-memory sink is the test bridge;
-    a deployment sinks the keyed cell aggregate to a durable table and
-    runs the same bounded derivation downstream.
-
-    At 100 TB/day: the only row-volume stage is the per-batch enrich of
-    new lineitem files against orders (size-based join planning per
-    batch); cell state and the derivation stay calendar-bounded."""
-    from pyspark.sql import Window
-
-    from ..catalog import load_table
-    from ..functions.ranks import hist_disc_percentile
-
-    li = stream_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        F.expr("unix_micros(l_shipdate) div 1000000 div 86400").alias(
-            "dship"
-        ),
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.expr("unix_micros(o_orderdate) div 1000000 div 86400").alias(
-            "dopen"
-        ),
-    )
-    cells_s = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.expr("dship div 7").alias("week"),
-            (F.col("dship") - F.col("dopen")).alias("lag_days"),
-        )
-        .groupBy("week", "lag_days")
-        .agg(F.count(F.lit(1)).alias("m"))
-    )
-    cells = run_to_table(cells_s, "stream_leadtime_cells", mode="complete")
-    before = (
-        Window.partitionBy("week")
-        .orderBy("lag_days")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    whole = Window.partitionBy("week")
-    cume = cells.select(
-        "week",
-        "lag_days",
-        "m",
-        F.sum("m").over(before).cast("long").alias("cum"),
-        F.sum("m").over(whole).cast("long").alias("n_stratum"),
-    )
-    return cume.groupBy("week").agg(
-        F.sum("m").alias("n_lines"),
-        hist_disc_percentile("lag_days", 0.5, "p50_lag_days"),
-        hist_disc_percentile("lag_days", 0.9, "p90_lag_days"),
-    )
 
 
-@query(
+stream_user_lifetime_spans = stream_twin(
     "stream_user_lifetime_spans",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "users", "percentile"),
+    "events_user_lifetime_span_percentiles",
+    ("streaming", "users", "percentile"),
+    persist=True,
 )
-def stream_user_lifetime_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-touch lifetime-span percentiles maintained INCREMENTALLY —
-    the streaming twin of temporal.events_user_lifetime_span_percentiles,
-    same oracle verbatim (the shared USER_LIFETIME_SPAN_ORACLE constant).
-    The row-volume work is ONE user-keyed incremental hash aggregate over
-    the event stream: running min/max unix_micros plus the lexicographic
-    struct-min that carries the first-touch event type — three int64-ish
-    values of state per user key in the state store (the per-order-key
-    state shape stream_backlog_daily established), updated in place as
-    batches arrive; a user's span and first touch are only final at
-    end-of-input, which is exactly what running MIN/MAX in keyed state
-    express.
-
-    The PERCENTILE derivation is not incrementally expressible per row
-    (a new user shifts every higher rank), so it runs POST-SINK over the
-    |users|-row aggregate table via the SAME `_lifetime_span_report`
-    tail as the batch twin (bounded census + stratified narrower) — the
-    cells-then-derive bridge of the other twins, with the sink table
-    persisted so the narrowing rounds re-scan the small cached frame.
-    In a deployment the keyed aggregate sinks to a durable table and the
-    same bounded derivation runs downstream."""
-    from ..llm.cache import tracked_persist
-    from ..operators.temporal import _lifetime_span_report
-
-    ev = stream_table(spark, sf_dir, "events")
-    us = F.expr("unix_micros(ts)")
-    g_s = ev.groupBy("user_id").agg(
-        F.min(
-            F.struct(
-                us.alias("u"),
-                F.col("event_id").alias("i"),
-                F.col("event_type").alias("t"),
-            )
-        ).alias("fst"),
-        F.min(us).alias("s"),
-        F.max(us).alias("e"),
-    )
-    sink = run_to_table(g_s, "stream_user_spans", mode="complete")
-    u = tracked_persist(
-        sink.select(
-            F.col("fst.t").alias("first_type"),
-            (F.col("e") - F.col("s")).alias("span_us"),
-        ),
-        f"stream_user_lifetime_spans:{sf_dir}",
-    )
-    return _lifetime_span_report(spark, u)
 
 
-@query(
+stream_return_rate_matrix = stream_twin(
     "stream_return_rate_matrix",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "tpch", "join", "matrix", "quality"),
+    "return_rate_by_nation_parttype",
+    ("streaming", "tpch", "join", "matrix", "quality"),
 )
-def stream_return_rate_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Return-rate matrix per (supplier nation × part type) maintained
-    INCREMENTALLY — the streaming twin of
-    tpch_extra.return_rate_by_nation_parttype, same oracle verbatim (the
-    shared RETURN_RATE_ORACLE constant). Extends the stream-static-join
-    twin shape (stream_trade_balance_matrix) to a FOUR-table star: the
-    fact stream (lineitem) is enriched against the supplier, nation and
-    part batch dimensions inside the micro-batch, then folds into ONE
-    incremental hash aggregate keyed by the |nations|·|types| cell —
-    state is two exact int64 counts per cell, ≤25·|types| entries no
-    matter how many lines stream through.
-
-    The rate derivation is one IEEE division per cell, computed
-    POST-SINK over the bounded cell table (a retraction-free derived
-    column, but kept post-sink so the sink rows stay exact counters —
-    the same cells-then-derive bridge as the other twins). Per
-    micro-batch the dimension sides are ordinary batch relations (nation
-    hard-broadcast, supplier/part size-planned per batch, matching the
-    batch twin's hint policy)."""
-    from ..catalog import load_table
-
-    li = stream_table(spark, sf_dir, "lineitem").select(
-        "l_suppkey", "l_partkey", "l_returnflag"
-    )
-    s = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    ret = F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
-    g_s = (
-        li.join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(p, li.l_partkey == p.p_partkey)
-        .groupBy(F.col("n_name").alias("supp_nation"), "p_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum(ret).cast("long").alias("n_returned"),
-        )
-    )
-    cells = run_to_table(g_s, "stream_return_rate_cells", mode="complete")
-    return cells.select(
-        "supp_nation",
-        "p_type",
-        "n_lines",
-        "n_returned",
-        (F.col("n_returned").cast("double") / F.col("n_lines")).alias(
-            "return_rate"
-        ),
-    )
 
 
-@query(
-    "stream_pricing_summary",
-    oracle=None,  # set below — shares the flagship batch oracle verbatim
-    tags=("streaming", "agg", "flagship"),
+stream_pricing_summary = stream_twin(
+    "stream_pricing_summary", "q1_pricing_summary", ("streaming", "agg", "flagship")
 )
-def stream_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FLAGSHIP pricing summary (TPC-H Q1 shape) maintained
-    INCREMENTALLY — the streaming twin of
-    relational.q1_pricing_summary, same oracle verbatim (the shared
-    Q1_ORACLE constant). The whole aggregate runs INSIDE the streaming
-    hash aggregate: per (l_returnflag, l_linestatus) cell the state is
-    the exact DECIMAL power sums + count that functions/exact.py's
-    dsum/davg helpers fold (associative and order-independent, so
-    micro-batch arrival order — the streaming analogue of partitioning
-    order — cannot change a bit of the result; the same property that
-    makes the batch query identical at 32 threads and 1000 executors
-    makes the twin identical at ANY batch split). The filter pushes into
-    each micro-batch's file scan; no post-sink derivation is needed —
-    the ≤|flags|·|statuses| sink table IS the report."""
-    li = stream_table(spark, sf_dir, "lineitem")
-    disc_price = disc_rev()
-    charge = disc_price.cast("decimal(18,4)") * (F.lit(1) + dec("l_tax"))
-    g_s = (
-        li.filter(F.col("l_shipdate") <= "2000-12-31")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dsum("l_quantity", "sum_qty"),
-            dsum("l_extendedprice", "sum_base_price"),
-            rnd(F.sum(disc_price).cast("double"), 2).alias("sum_disc_price"),
-            rnd(F.sum(charge).cast("double"), 2).alias("sum_charge"),
-            davg("l_quantity", "avg_qty"),
-            davg("l_extendedprice", "avg_price"),
-            lcount("count_order"),
-        )
-    )
-    return run_to_table(g_s, "stream_pricing_summary", mode="complete")
 
 
-@query(
+stream_part_demand_concentration = stream_twin(
     "stream_part_demand_concentration",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "stats", "percentile", "concentration"),
+    "part_demand_concentration",
+    ("streaming", "stats", "percentile", "concentration"),
+    persist=True,
 )
-def stream_part_demand_concentration(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Part-demand skew telemetry maintained INCREMENTALLY — the
-    streaming twin of stats.part_demand_concentration, same oracle
-    verbatim (the shared PART_DEMAND_ORACLE constant): LIVE shuffle-skew
-    monitoring for the l_partkey join domain, so a pipeline can see hot
-    parts forming as data arrives instead of discovering them in a
-    post-mortem. The row-volume work is ONE part-keyed incremental hash
-    aggregate (running count per part — the per-key int64 state shape of
-    stream_backlog_daily); the thresholds and the concentration fold are
-    not incrementally expressible (a new line can shift every rank), so
-    they run POST-SINK via the same narrower + single fold as the batch
-    twin, over the persisted |parts|-row sink table."""
-    from ..functions.ranks import kth_order_statistics
-    from ..llm.cache import tracked_persist
-
-    li = stream_table(spark, sf_dir, "lineitem").select("l_partkey")
-    g_s = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n"))
-    cm = tracked_persist(
-        run_to_table(g_s, "stream_part_counts", mode="complete"),
-        f"stream_part_line_counts:{sf_dir}",
-    )
-    # Both quantiles ride ONE census sequence — the batch twin's exact
-    # form (multi-rank narrower; rank = max(1, ceil(q*n)) with the same
-    # Python multiply the two sequential calls used, and n = the per-part
-    # count column's non-null count = the cm.count() they used).
-    pr = kth_order_statistics(cm, "n", {"p50": 0.5, "p90": 0.9})
-    p50, p90 = pr["p50"], pr["p90"]
-    top = F.col("n") >= F.lit(p90)
-    return cm.agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.lit(p50).alias("p50_lines"),
-        F.lit(p90).alias("p90_lines"),
-        F.sum(F.when(top, 1).otherwise(0)).cast("long").alias("n_top_parts"),
-        F.sum(F.when(top, F.col("n")).otherwise(0)).alias("top_lines"),
-        (
-            F.sum(F.when(top, F.col("n")).otherwise(0)).cast("double")
-            / F.sum("n")
-        ).alias("top_line_share"),
-    )
 
 
 @query(
     "stream_doc_token_concentration",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
+    oracle=_REGISTRY["doc_token_concentration_by_source"].oracle,
     tags=("streaming", "text", "llm", "percentile", "concentration"),
 )
 def stream_doc_token_concentration(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Per-source token-mass concentration maintained INCREMENTALLY —
-    the streaming twin of llm.text.doc_token_concentration_by_source,
-    same oracle verbatim (the shared DOC_TOKEN_CONCENTRATION_ORACLE
-    constant). The row-volume work is ONE keyed incremental hash
-    aggregate over (source, n_tokens) HISTOGRAM CELLS: each arriving
-    document folds into its cell's count at scan speed (the tokenize
-    expression runs inside the micro-batch), so state is
-    |sources| × |distinct token counts| — bounded by the corpus's
-    length-cap policy rather than by doc volume, the same cell-state
-    contract as stream_leadtime_weekly_trend.
+    """Per-source token-mass concentration maintained INCREMENTALLY — the
+    streaming twin of llm.text.doc_token_concentration_by_source under
+    its oracle, sharing its `_token_concentration_report` fold.
 
-    The derivation differs from the batch twin ON PURPOSE, and the twin
-    test pins that the two forms agree: the batch query narrows over
-    per-doc rows (`kth_order_statistics_by` — nothing bounded exists
-    yet at that point), while here the sink ALREADY IS the count-value
-    histogram, so the p90 threshold comes from the histogram closed
-    form (cume over cells + the same MIN(value WHERE cum/n >= q)
-    discrete selection — identical percentile_disc semantics), and the
-    concentration is one fold over the SAME cells (counts and token
-    masses recovered exactly as m and n_tokens·m). Everything post-sink
-    touches only cell-cardinality data."""
-    from pyspark.sql import Window
+    Shares only the report, not a whole ``Twin``, because the p90
+    threshold takes a different percentile form ON PURPOSE: the batch
+    query narrows over per-doc rows (`kth_order_statistics_by`), while
+    here the sink already IS the (source, n_tokens) count histogram, so
+    the threshold comes from the histogram closed form (same
+    percentile_disc semantics; the twin test pins that the two agree).
+    State is |sources| × |distinct token counts|, bounded by the corpus's
+    length-cap policy rather than by doc volume."""
+    from ..functions.ranks import hist_cume_counts, hist_disc_percentile
 
-    from ..functions.ranks import hist_disc_percentile
-    from ..llm.text import tokens_col
-
-    docs = stream_table(spark, sf_dir, "documents")
     cells_s = (
-        docs.select(
-            "source", F.size(tokens_col()).cast("long").alias("n_tokens")
-        )
+        text._doc_token_rows(spark, sf_dir, stream_table)
         .groupBy("source", "n_tokens")
         .agg(F.count(F.lit(1)).alias("m"))
     )
-    cells = run_to_table(cells_s, "stream_doc_token_cells", mode="complete")
-    before = (
-        Window.partitionBy("source")
-        .orderBy("n_tokens")
-        .rowsBetween(Window.unboundedPreceding, 0)
+    (cells,) = run_to_tables([(cells_s, "stream_doc_token_cells")])
+    th = (
+        hist_cume_counts(cells, ["source"], "n_tokens", m_col="m")
+        .groupBy("source")
+        .agg(hist_disc_percentile("n_tokens", 0.9, "threshold_tokens"))
     )
-    whole = Window.partitionBy("source")
-    cume = cells.select(
-        "source",
-        "n_tokens",
-        "m",
-        F.sum("m").over(before).cast("long").alias("cum"),
-        F.sum("m").over(whole).cast("long").alias("n_stratum"),
-    )
-    th = cume.groupBy("source").agg(
-        hist_disc_percentile("n_tokens", 0.9, "threshold_tokens")
-    )
-    # th derives from the same memory-sink view as cells (spark.table
-    # hands back identical attribute ids), so a direct join trips
-    # conflicting-reference resolution; localCheckpoint breaks the
-    # shared lineage on the |sources|-row side only.
-    th = th.localCheckpoint(eager=True)
-    top = F.col("n_tokens") >= F.col("threshold_tokens")
-    g = (
-        cells.join(F.broadcast(th), "source")
-        .groupBy("source", "threshold_tokens")
-        .agg(
-            F.sum("m").alias("n_docs"),
-            F.sum(F.when(top, F.col("m")).otherwise(0))
-            .cast("long")
-            .alias("n_top"),
-            F.sum(
-                F.when(top, F.col("n_tokens") * F.col("m")).otherwise(0)
-            ).alias("top_tokens"),
-            F.sum(F.col("n_tokens") * F.col("m")).alias("_total"),
-        )
-    )
-    return g.select(
-        "source",
-        "n_docs",
-        "threshold_tokens",
-        "n_top",
-        "top_tokens",
-        (F.col("top_tokens").cast("double") / F.col("_total")).alias(
-            "top_token_share"
-        ),
-    )
+    return text._token_concentration_report(cells, th)
 
 
-@query(
+stream_orders_priority_mix_drift = stream_twin(
     "stream_orders_priority_mix_drift",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "tpch", "trend", "drift"),
+    "orders_priority_mix_weekly_drift",
+    ("streaming", "tpch", "trend", "drift"),
 )
-def stream_orders_priority_mix_drift(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Weekly order-priority mix drift maintained INCREMENTALLY — the
-    streaming twin of temporal.orders_priority_mix_weekly_drift, same
-    oracle verbatim (the shared ORDERS_PRIORITY_MIX_ORACLE constant).
-    One incremental hash aggregate keyed by (epoch-week, priority) —
-    state is one counter per calendar×5 cell; the drift derivation runs
-    POST-SINK as the bounded gated-lag windows stream_event_mix_drift
-    established (the memory sink cannot self-join), with the identical
-    NULL-on-gap convention the batch twin's left joins state."""
-    from pyspark.sql import Window
-
-    o = stream_table(spark, sf_dir, "orders")
-    week = F.expr("unix_micros(o_orderdate) div 1000000 div 86400 div 7")
-    g = (
-        o.select(week.alias("week"), "o_orderpriority")
-        .groupBy("week", "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
-    tbl = run_to_table(g, "stream_orders_priority_mix", mode="complete")
-    w_total = Window.partitionBy("week")
-    w_pri = Window.partitionBy("o_orderpriority").orderBy("week")
-    contiguous = F.lag("week").over(w_pri) == F.col("week") - 1
-    totals = tbl.select(
-        "week",
-        "o_orderpriority",
-        "n_orders",
-        F.sum("n_orders").over(w_total).alias("week_total"),
-    )
-    cells = totals.select(
-        "week",
-        "o_orderpriority",
-        "n_orders",
-        "week_total",
-        F.when(contiguous, F.lag("n_orders").over(w_pri)).alias("prev_n"),
-        F.when(contiguous, F.lag("week_total").over(w_pri)).alias(
-            "prev_week_total"
-        ),
-    )
-    e = (
-        F.col("prev_n").cast("double")
-        * F.col("week_total")
-        / F.col("prev_week_total")
-    )
-    return cells.select(
-        "week",
-        "o_orderpriority",
-        "n_orders",
-        "week_total",
-        (F.col("n_orders").cast("double") / F.col("week_total")).alias(
-            "share"
-        ),
-        "prev_n",
-        F.when(
-            F.col("prev_n").isNotNull(),
-            (F.col("n_orders") - e) * (F.col("n_orders") - e) / e,
-        ).alias("chi2_term"),
-    )
 
 
-@query(
+stream_discount_band_margin = stream_twin(
     "stream_discount_band_margin",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "tpch", "agg", "pricing"),
+    "discount_band_margin_report",
+    ("streaming", "tpch", "agg", "pricing"),
 )
-def stream_discount_band_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pricing-band report maintained INCREMENTALLY — the streaming
-    twin of tpch_extra.discount_band_margin_report, same oracle verbatim
-    (the shared DISCOUNT_BAND_ORACLE constant): live what-is-discounting
-    -costing-us telemetry as order lines stream in, instead of a nightly
-    batch read. The whole fold runs INSIDE the streaming hash aggregate:
-    per integer discount band the state is three exact int64 counters
-    (lines, rounded quantity, gross cents) plus the exact DECIMAL
-    discount-cost sum — all associative and order-independent, so
-    micro-batch arrival order cannot change a bit of the state (the
-    stream_pricing_summary property), and state is ≤101 cells no matter
-    how many lines stream through. The percent bridge (one IEEE division
-    of two bit-stable operands, ×10000 unit bridge stated token-for-token
-    in the oracle) derives POST-SINK so the sink rows stay exact
-    counters — the cells-then-derive discipline of the other twins."""
-    li = stream_table(spark, sf_dir, "lineitem").select(
-        "l_discount", "l_quantity", "l_extendedprice"
-    )
-    band = F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long")
-    qty = F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long")
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    cost = dec("l_extendedprice") * dec("l_discount")
-    g_s = li.groupBy(band.alias("discount_pct")).agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.sum(qty).alias("total_qty"),
-        F.sum(cents).alias("gross_cents"),
-        F.sum(cost).alias("_cost"),
-    )
-    from ..operators.tpch_extra import _discount_band_report
-
-    cells = run_to_table(g_s, "stream_discount_band_cells", mode="complete")
-    return _discount_band_report(cells)
 
 
-@query(
+stream_order_linecount_distribution = stream_twin(
     "stream_order_linecount_distribution",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "tpch", "stats", "histogram", "skew"),
+    "order_linecount_distribution",
+    ("streaming", "tpch", "stats", "histogram", "skew"),
+    persist=True,
 )
-def stream_order_linecount_distribution(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The l_orderkey fan-out distribution maintained INCREMENTALLY —
-    the streaming twin of stats.order_linecount_distribution, same
-    oracle verbatim (the shared ORDER_LINECOUNT_ORACLE constant): LIVE
-    join-fan-out telemetry, so a pipeline sizing stream-stream join
-    state or AQE advisory partitions watches the distribution form as
-    lines arrive instead of profiling a finished table. The row-volume
-    work is ONE order-keyed incremental hash aggregate (running line
-    count per order — the per-key int64 state shape of
-    stream_part_demand_concentration; the AGGREGATE state lives in the
-    executor state store, |orders|-bounded like any per-order
-    stream-stream join's). The memory-format sink that materializes the
-    per-order counts here is the module's oracle-check BRIDGE, not the
-    deployment shape — at 100 TB the complete-mode cells write to a
-    file/Delta sink and the post-sink tail reads that table, so nothing
-    row-scale transits the driver. The histogram,
-    shares and cumulative are not incrementally expressible (one new
-    line moves an order BETWEEN cells), so they run POST-SINK via the
-    batch twin's shared `_linecount_report` tail over the persisted
-    sink table — string-identity oracle, function-identity derivation."""
-    from ..llm.cache import tracked_persist
-    from ..operators.stats import _linecount_report
-
-    li = stream_table(spark, sf_dir, "lineitem").select("l_orderkey")
-    g_s = li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("k"))
-    c = tracked_persist(
-        run_to_table(g_s, "stream_order_linecounts", mode="complete"),
-        f"stream_order_linecounts:{sf_dir}",
-    )
-    return _linecount_report(c, f"stream_order_linecount_hist:{sf_dir}")
 
 
-@query(
+stream_customer_revenue_concentration = stream_twin(
     "stream_customer_revenue_concentration",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "stats", "percentile", "iterative", "concentration"),
+    "customer_revenue_concentration",
+    ("streaming", "stats", "percentile", "iterative", "concentration"),
+    persist=True,
 )
-def stream_customer_revenue_concentration(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The customer revenue-concentration report maintained
-    INCREMENTALLY — the streaming twin of
-    stats.customer_revenue_concentration, same oracle verbatim (the
-    shared CUSTOMER_REV_CONCENTRATION_ORACLE constant): the LIVE whale
-    watch — as orders stream in, which spend percentile carries how much
-    of revenue right now. The row-volume work is ONE customer-keyed
-    incremental hash aggregate (running exact-cents spend per customer —
-    per-key int64 state in the executor state store, |customers|-bounded,
-    the same state shape as stream_part_demand_concentration; the
-    memory-format sink materializing it here is the module's
-    oracle-check bridge — a deployment writes the complete-mode rows to
-    a file/Delta sink and the tail reads that table, keeping row-scale
-    data off the driver). The five thresholds and the
-    membership fold are not incrementally expressible (one new order can
-    shift every rank), so they run POST-SINK via the batch twin's shared
-    `_revenue_concentration_report` tail over the persisted sink table —
-    string-identity oracle, function-identity derivation."""
-    from ..llm.cache import tracked_persist
-    from ..operators.stats import _revenue_concentration_report
-
-    o = stream_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_totalprice"
-    )
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    g_s = o.groupBy("o_custkey").agg(F.sum(cents).alias("cents"))
-    cm = tracked_persist(
-        run_to_table(g_s, "stream_cust_spend", mode="complete"),
-        f"stream_cust_spend_cents:{sf_dir}",
-    )
-    return _revenue_concentration_report(spark, cm)
 
 
-@query(
+stream_priority_leadtime_sla = stream_twin(
     "stream_priority_leadtime_sla",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "tpch", "percentile", "quality"),
+    "priority_leadtime_sla_profile",
+    ("streaming", "tpch", "percentile", "quality"),
+    persist=True,
 )
-def stream_priority_leadtime_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The per-priority lead-time SLA profile maintained INCREMENTALLY —
-    the streaming twin of tpch_extra.priority_leadtime_sla_profile, same
-    oracle verbatim (the shared PRIORITY_SLA_ORACLE constant): LIVE SLA
-    monitoring — watch the URGENT tail fan out as lines arrive instead
-    of reading it in tomorrow's batch scorecard. Per micro-batch the
-    lineitem stream enriches against the orders batch relation (the
-    stream-static join of stream_leadtime_weekly_trend) and folds into
-    ONE incremental hash aggregate keyed by (priority, lag-day)
-    HISTOGRAM CELL — state is 5 × |distinct lag days|, calendar-bounded
-    no matter how many lines stream through. Percentiles and the late
-    share are derived POST-SINK by the batch twin's shared
-    `_priority_sla_report` tail over the persisted cell table —
-    string-identity oracle, function-identity derivation."""
-    from ..catalog import load_table
-    from ..llm.cache import tracked_persist
-    from ..operators.tpch_extra import _priority_sla_report
-
-    li = stream_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        F.expr("unix_micros(l_shipdate) div 1000000 div 86400").alias(
-            "dship"
-        ),
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.expr("unix_micros(o_orderdate) div 1000000 div 86400").alias(
-            "dord"
-        ),
-    )
-    g_s = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            "o_orderpriority", (F.col("dship") - F.col("dord")).alias("lag")
-        )
-        .groupBy("o_orderpriority", "lag")
-        .agg(F.count(F.lit(1)).alias("m"))
-    )
-    cells = tracked_persist(
-        run_to_table(g_s, "stream_priority_sla_cells", mode="complete"),
-        f"stream_priority_sla_cells:{sf_dir}",
-    )
-    return _priority_sla_report(cells)
 
 
-@query(
+stream_modal_priority_by_nation = stream_twin(
     "stream_modal_priority_by_nation",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "tpch", "agg", "mode"),
+    "modal_priority_by_nation",
+    ("streaming", "tpch", "agg", "mode"),
 )
-def stream_modal_priority_by_nation(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Exact grouped MODE per customer nation maintained INCREMENTALLY —
-    the streaming twin of tpch_extra.modal_priority_by_nation, same
-    oracle verbatim (the shared MODAL_PRIORITY_ORACLE constant). The
-    fact stream (orders) enriches against the customer and nation batch
-    dimensions inside the micro-batch (nation hard-broadcast, customer
-    size-planned per batch — the batch twin's hint policy) and folds
-    into ONE incremental hash aggregate keyed by the ≤|nations|·5 cell —
-    state is one exact int64 count per cell no matter how many orders
-    stream through.
-
-    The argmax CANNOT be maintained incrementally without retractions (a
-    cell overtaking another flips the mode mid-stream), so it derives
-    POST-SINK over the bounded cell table through the SAME
-    `_modal_priority_report` tail the batch query runs — sink rows stay
-    exact counters, and the tie order ((−cnt, priority) lexicographic
-    struct-min) is stated once for both shapes; the same cells-then-
-    derive bridge as the other twins."""
-    from ..catalog import load_table
-    from ..operators.tpch_extra import _modal_priority_report
-
-    o = stream_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderpriority"
-    )
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    g_s = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"), "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    cells = run_to_table(g_s, "stream_modal_priority_cells", mode="complete")
-    return _modal_priority_report(cells)
 
 
-@query(
+stream_events_value_dow_hour_profile = stream_twin(
     "stream_events_value_dow_hour_profile",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "events", "weighted", "calendar"),
+    "events_value_weighted_dow_hour_profile",
+    ("streaming", "events", "weighted", "calendar"),
 )
-def stream_events_value_dow_hour_profile(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The 168-cell value-weighted weekly calendar profile maintained
-    INCREMENTALLY — the streaming twin of
-    stats.events_value_weighted_dow_hour_profile, same oracle verbatim
-    (the shared DOW_HOUR_VALUE_ORACLE constant): live where-does-the-
-    money-sit telemetry, so a capacity plan sized off event counts can
-    see the value mass migrating across the week as events arrive. The
-    row-volume work is ONE incremental hash aggregate keyed by the fixed
-    (dow, hour_utc) grid — state is two exact int64 counters per cell
-    (count + micro-unit value mass) no matter how many events stream
-    through; dow/hour derive from the same epoch-integer arithmetic as
-    the batch twin (TZ-proof — the hostile gate flips the session zone).
-
-    The shares and the value-per-event index CANNOT ride the incremental
-    aggregate (each event moves both totals, re-weighting every cell),
-    so they derive POST-SINK over the bounded cell table through the
-    SAME `_dow_hour_value_report` tail the batch query runs — sink rows
-    stay exact counters, derivations stated once for both shapes."""
-    from ..operators.stats import _dow_hour_value_report
-
-    ev = stream_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull()
-    )
-    g_s = (
-        ev.select(
-            F.expr(
-                "(unix_micros(ts) div 1000000 div 86400 + 3) % 7 + 1"
-            ).alias("dow"),
-            F.expr("(unix_micros(ts) div 1000000 div 3600) % 24").alias(
-                "hour_utc"
-            ),
-            F.floor(F.col("value") * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("m"),
-        )
-        .groupBy("dow", "hour_utc")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("m").alias("value_micro"),
-        )
-    )
-    cells = run_to_table(
-        g_s, "stream_events_value_dow_hour_cells", mode="complete"
-    )
-    return _dow_hour_value_report(cells)
 
 
-@query(
+stream_events_user_value_concentration = stream_twin(
     "stream_events_user_value_concentration",
-    oracle=None,  # set below — shares the batch twin's oracle verbatim
-    tags=("streaming", "events", "stats", "percentile", "iterative",
-          "concentration"),
+    "events_user_value_concentration",
+    ("streaming", "events", "stats", "percentile", "iterative", "concentration"),
+    persist=True,
 )
-def stream_events_user_value_concentration(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The user value-mass concentration report maintained INCREMENTALLY
-    — the streaming twin of stats.events_user_value_concentration, same
-    oracle verbatim (the shared EVENTS_USER_VALUE_CONCENTRATION_ORACLE
-    constant): the LIVE abuse/capacity watch — as events stream in,
-    which user-value percentile carries how much of the value mass
-    right now (a 99th-checkpoint share climbing live is the skew signal
-    a user-keyed streaming aggregation must salt for, seen while it
-    forms). The row-volume work is ONE user-keyed incremental hash
-    aggregate (running exact-micro value mass per user — per-key int64
-    state in the executor state store, |users|-bounded, the same state
-    shape as stream_customer_revenue_concentration on the orders axis;
-    the memory-format sink materializing it here is the module's
-    oracle-check bridge — a deployment writes the complete-mode rows to
-    a file/Delta sink and the tail reads that table, keeping row-scale
-    data off the driver). NULL values are dropped pre-fold (stated in
-    the oracle's WHERE). The five thresholds and the membership fold
-    are not incrementally expressible (one new event can shift every
-    rank), so they run POST-SINK via the batch twin's shared
-    `_revenue_concentration_report` tail (parameterized to the user
-    vocabulary) over the persisted sink table — string-identity oracle,
-    function-identity derivation."""
-    from ..llm.cache import tracked_persist
-    from ..operators.stats import _revenue_concentration_report
-
-    ev = stream_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull()
-    )
-    micro = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long")
-    g_s = ev.groupBy("user_id").agg(F.sum(micro).alias("micro"))
-    um = tracked_persist(
-        run_to_table(g_s, "stream_user_value_micro", mode="complete"),
-        f"stream_user_value_micro:{sf_dir}",
-    )
-    return _revenue_concentration_report(
-        spark,
-        um.select("micro"),
-        value_col="micro",
-        threshold_col="threshold_micro",
-        n_col="n_users",
-        mass_col="value_micro",
-        share_col="value_share",
-    )
-
-
-# Late-bind the shared oracles (import at module top would be circular-prone
-# and the constants live beside their batch twins).
-from ..operators.temporal import BACKLOG_ORACLE as _BL_ORACLE  # noqa: E402
-from ..operators.temporal import DOW_HOUR_PROFILE_ORACLE as _DHP_ORACLE  # noqa: E402
-from ..operators.temporal import EVENT_MIX_DRIFT_ORACLE as _EMD_ORACLE  # noqa: E402
-from ..operators.temporal import ORDERS_PRIORITY_MIX_ORACLE as _OPM_ORACLE  # noqa: E402
-from ..operators.temporal import USER_LIFETIME_SPAN_ORACLE as _ULS_ORACLE  # noqa: E402
-from ..operators.temporal import WEEKLY_TREND_ORACLE as _WT_ORACLE  # noqa: E402
-from ..operators.relational import Q1_ORACLE as _Q1_ORACLE  # noqa: E402
-from ..operators.tpch_extra import DISCOUNT_BAND_ORACLE as _DB_ORACLE  # noqa: E402
-from ..operators.tpch_extra import LEADTIME_WEEKLY_ORACLE as _LW_ORACLE  # noqa: E402
-from ..operators.tpch_extra import PRIORITY_SLA_ORACLE as _PSLA_ORACLE  # noqa: E402
-from ..llm.text import DOC_TOKEN_CONCENTRATION_ORACLE as _DTC_ORACLE  # noqa: E402
-from ..operators.stats import CUSTOMER_REV_CONCENTRATION_ORACLE as _CRC_ORACLE  # noqa: E402
-from ..operators.stats import DOW_HOUR_VALUE_ORACLE as _DHV_ORACLE  # noqa: E402
-from ..operators.stats import (  # noqa: E402
-    EVENTS_USER_VALUE_CONCENTRATION_ORACLE as _EUVC_ORACLE,
-)
-from ..operators.stats import ORDER_LINECOUNT_ORACLE as _OLC_ORACLE  # noqa: E402
-from ..operators.stats import PART_DEMAND_ORACLE as _PD_ORACLE  # noqa: E402
-from ..operators.tpch_extra import MODAL_PRIORITY_ORACLE as _MP_ORACLE  # noqa: E402
-from ..operators.tpch_extra import RETURN_RATE_ORACLE as _RR_ORACLE  # noqa: E402
-from ..operators.tpch_extra import TRADE_MATRIX_ORACLE as _TM_ORACLE  # noqa: E402
-from ..registry import _REGISTRY as _REG  # noqa: E402
-
-_REG["stream_dow_hour_profile"].oracle = _DHP_ORACLE
-_REG["stream_events_value_dow_hour_profile"].oracle = _DHV_ORACLE
-_REG["stream_backlog_daily"].oracle = _BL_ORACLE
-_REG["stream_trade_balance_matrix"].oracle = _TM_ORACLE
-_REG["stream_weekly_trend"].oracle = _WT_ORACLE
-_REG["stream_event_mix_drift"].oracle = _EMD_ORACLE
-_REG["stream_leadtime_weekly_trend"].oracle = _LW_ORACLE
-_REG["stream_user_lifetime_spans"].oracle = _ULS_ORACLE
-_REG["stream_return_rate_matrix"].oracle = _RR_ORACLE
-_REG["stream_pricing_summary"].oracle = _Q1_ORACLE
-_REG["stream_part_demand_concentration"].oracle = _PD_ORACLE
-_REG["stream_doc_token_concentration"].oracle = _DTC_ORACLE
-_REG["stream_orders_priority_mix_drift"].oracle = _OPM_ORACLE
-_REG["stream_discount_band_margin"].oracle = _DB_ORACLE
-_REG["stream_order_linecount_distribution"].oracle = _OLC_ORACLE
-_REG["stream_customer_revenue_concentration"].oracle = _CRC_ORACLE
-_REG["stream_events_user_value_concentration"].oracle = _EUVC_ORACLE
-_REG["stream_priority_leadtime_sla"].oracle = _PSLA_ORACLE
-_REG["stream_modal_priority_by_nation"].oracle = _MP_ORACLE

@@ -123,3 +123,36 @@ def test_kmeans_plan_broadcasts_and_single_source_scan(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     assert "InMemoryTableScan" in plan  # pts persisted, not re-scanned
+
+
+def test_grain_dist_kernel_exact_past_int64_edge(spark):
+    """Coordinate differences of 7e4 make each grain term 4.9e18, so a
+    two-term row sums past 2**63: the int64 sum would wrap. Both the
+    vectorized batch path and the per-row path (forced by a NaN row in
+    the same Arrow batch) must return the exact DECIMAL sum."""
+    from decimal import Decimal
+
+    from mapreduce_infrastructure_spark.llm import kmeans as K
+
+    rows = [
+        (1, [70000.0, 70000.0], [0.0, 0.0]),
+        (2, [0.0, 100000.0], [100000.0, 0.0]),
+        (3, [1.5, 70000.0], [0.5, 0.0]),
+    ]
+
+    def exact(x, c):
+        s = sum((Decimal(a) - Decimal(b)) ** 2 for a, b in zip(x, c))
+        return (s * Decimal(10) ** 9).to_integral_value() / Decimal(10) ** 9
+
+    want = {i: exact(x, c) for i, x, c in rows}
+    assert want[1] > Decimal(2**63) / Decimal(10) ** 9  # past the edge
+    nan_row = [(4, [float("nan"), 0.0], [0.0, 0.0])]
+    for data in (rows, rows + nan_row):
+        df = spark.createDataFrame(
+            data, "vec_id int, x array<double>, c array<double>"
+        ).coalesce(1)
+        got = {
+            r.vec_id: r.dist
+            for r in df.select("vec_id", K._dist_col().alias("dist")).collect()
+        }
+        assert {i: got[i] for i in want} == want

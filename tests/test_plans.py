@@ -4,6 +4,8 @@ dimensions, no cartesian products, codegen'd hot paths."""
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import functions as F
 
 from mapreduce_infrastructure_spark.catalog import load_table
@@ -308,22 +310,32 @@ _SINGLE_PARTITION_ALLOWED = {
 }
 
 
-def test_no_registered_query_squeezes_volume_through_one_partition(spark, sf_dir):
-    """Repo-wide scale guard: no registered query's physical plan may route
-    a volume-scaled input through an ``Exchange SinglePartition`` (the
-    round-7 q15/q11 finding — invisible at test SF, fatal at 100 TB).
+@functools.lru_cache(maxsize=1)
+def _registry_plans(spark, sf_dir: str) -> dict[str, str]:
+    """The simple-mode physical plan of every non-streaming registered
+    query, built once for the registry-wide audits below (building a plan
+    runs the query's eager build-time jobs, so each build costs seconds).
     Streaming queries are excluded: their callables execute full
     micro-batch pipelines (covered by tests/test_streaming.py), and their
     stateful plans are per-micro-batch, not volume-scaled."""
     from mapreduce_infrastructure_spark.registry import all_queries
 
+    return {
+        name: checks.explain_str(q.fn(spark, sf_dir), "simple")
+        for name, q in all_queries().items()
+        if "streaming" not in q.tags
+    }
+
+
+def test_no_registered_query_squeezes_volume_through_one_partition(spark, sf_dir):
+    """Repo-wide scale guard: no registered query's physical plan may route
+    a volume-scaled input through an ``Exchange SinglePartition`` (the
+    round-7 q15/q11 finding — invisible at test SF, fatal at 100 TB)."""
     failures = {}
-    for name, q in all_queries().items():
-        if "streaming" in q.tags or name in _SINGLE_PARTITION_ALLOWED:
+    for name, plan in _registry_plans(spark, sf_dir).items():
+        if name in _SINGLE_PARTITION_ALLOWED:
             continue
-        bad = checks.single_partition_squeezes(
-            checks.explain_str(q.fn(spark, sf_dir), "simple")
-        )
+        bad = checks.single_partition_squeezes(plan)
         if bad:
             failures[name] = bad
     assert not failures, failures
@@ -340,15 +352,9 @@ def test_no_registered_query_windows_volume_by_low_card_stratum(spark, sf_dir):
     value column) as the count-value-histogram closed form, whose window
     input is |distinct values|, not |rows| (functions/ranks.py). No
     allowlist — every registered query must pass as-is."""
-    from mapreduce_infrastructure_spark.registry import all_queries
-
     failures = {}
-    for name, q in all_queries().items():
-        if "streaming" in q.tags:
-            continue
-        bad = checks.low_card_stratum_windows(
-            checks.explain_str(q.fn(spark, sf_dir), "simple")
-        )
+    for name, plan in _registry_plans(spark, sf_dir).items():
+        bad = checks.low_card_stratum_windows(plan)
         if bad:
             failures[name] = bad
     assert not failures, failures

@@ -555,3 +555,25 @@ def test_shared_value_computes_once_per_slot_and_app(spark):
     finally:
         C._VALUES.pop(key, None)
         C._VALUES.pop(f"{slot}2@{spark.sparkContext.applicationId}", None)
+
+
+def test_shared_value_caches_a_none_result(spark):
+    """A build() that returns None is a value, not a miss: it runs once
+    per slot and application id like any other build."""
+    from mapreduce_infrastructure_spark.llm import cache as C
+
+    calls = {"n": 0}
+
+    def build():
+        calls["n"] += 1
+        return None
+
+    slot = "test_shared_value_none_slot"
+    key = f"{slot}@{spark.sparkContext.applicationId}"
+    C._VALUES.pop(key, None)
+    try:
+        assert C.shared_value(spark, build, slot) is None
+        assert C.shared_value(spark, build, slot) is None
+        assert calls["n"] == 1
+    finally:
+        C._VALUES.pop(key, None)

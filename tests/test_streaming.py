@@ -53,7 +53,7 @@ def test_append_mode_emits_only_finalized_windows(spark, sf_dir):
             "n_events",
         )
     )
-    emitted = stream.run_to_table(agg, "append_windows", mode="append")
+    emitted = stream.run_to_tables([(agg, "append_windows")], mode="append")[0]
     batch = (
         batch_windows.window_tumbling_hourly(spark, sf_dir)
         .groupBy("wstart")
@@ -99,7 +99,7 @@ def test_stream_stream_left_outer_semantics(spark, sf_dir):
     joined = clicks.join(purchases, cond, "left_outer").select(
         "click_id", "purchase_id", "c_user"
     )
-    out = stream.run_to_table(joined, "stream_left_outer", mode="append")
+    out = stream.run_to_tables([(joined, "stream_left_outer")], mode="append")[0]
     rows = out.collect()
     matched = {(r.click_id, r.purchase_id) for r in rows if r.purchase_id is not None}
     unmatched = [r for r in rows if r.purchase_id is None]
@@ -197,9 +197,9 @@ def test_stream_anomaly_multibatch_state_seeding(spark, sf_dir, tmp_path):
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    from mapreduce_infrastructure_spark.streaming.stream import run_to_table
+    from mapreduce_infrastructure_spark.streaming.stream import run_to_tables
 
-    got = run_to_table(sdf, "anomaly_multibatch_test", mode="append")
+    got = run_to_tables([(sdf, "anomaly_multibatch_test")], mode="append")[0]
     want = anomaly_zscore_events(spark, sf_dir)
     cols = ["user_id", "event_id", "ts_us", "n_window", "mean_20", "std_20", "z", "flag"]
     assert _rows(got, cols) == _rows(want, cols)
@@ -217,7 +217,7 @@ def test_stream_anomaly_survives_identical_value_window(spark, tmp_path):
 
     from mapreduce_infrastructure_spark.streaming.stream import (
         _anomaly_fn,
-        run_to_table,
+        run_to_tables,
     )
 
     src = str(tmp_path / "src")
@@ -253,7 +253,7 @@ def test_stream_anomaly_survives_identical_value_window(spark, tmp_path):
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    got = run_to_table(sdf, "anomaly_identical_vals", mode="append").collect()
+    got = run_to_tables([(sdf, "anomaly_identical_vals")], mode="append")[0].collect()
     assert len(got) == 4
     # warm-up row (n=1): no std, no z; degenerate windows (n>=2): NaN std
     # like the batch twin, z NaN, never flagged
@@ -279,7 +279,7 @@ def test_stream_topk_multibatch_ranked_state(spark, sf_dir, tmp_path):
     from mapreduce_infrastructure_spark.catalog import load_table
     from mapreduce_infrastructure_spark.streaming.stream import (
         _topk_window_fn,
-        run_to_table,
+        run_to_tables,
     )
 
     ev = load_table(spark, sf_dir, "events")
@@ -311,7 +311,7 @@ def test_stream_topk_multibatch_ranked_state(spark, sf_dir, tmp_path):
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    per_batch = run_to_table(sdf, "topk_multibatch_test", mode="update")
+    per_batch = run_to_tables([(sdf, "topk_multibatch_test")], mode="update")[0]
     final = (
         per_batch.groupBy("wstart")
         .agg(F.max(F.struct("n_total", "users", "counts")).alias("s"))
@@ -354,7 +354,7 @@ def test_stream_session_topk_multibatch_bridges_sessions(spark, tmp_path):
 
     from mapreduce_infrastructure_spark.streaming.stream import (
         _session_topk_fn,
-        run_to_table,
+        run_to_tables,
     )
 
     src = str(tmp_path / "src")
@@ -386,7 +386,7 @@ def test_stream_session_topk_multibatch_bridges_sessions(spark, tmp_path):
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    per_batch = run_to_table(sdf, "session_topk_bridge_test", mode="update")
+    per_batch = run_to_tables([(sdf, "session_topk_bridge_test")], mode="update")[0]
     rows = sorted(per_batch.collect(), key=lambda r: r.upd)
     assert len(rows) >= 2, "expected one emit per micro-batch"
     first, last = rows[0], rows[-1]
@@ -410,7 +410,7 @@ def test_stream_session_topk_multibatch_equals_single_batch(spark, sf_dir, tmp_p
     from mapreduce_infrastructure_spark.catalog import load_table
     from mapreduce_infrastructure_spark.streaming.stream import (
         _session_topk_fn,
-        run_to_table,
+        run_to_tables,
         stream_session_topk_event_types,
     )
 
@@ -451,7 +451,7 @@ def test_stream_session_topk_multibatch_equals_single_batch(spark, sf_dir, tmp_p
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    per_batch = run_to_table(sdf, "session_topk_split_test", mode="update")
+    per_batch = run_to_tables([(sdf, "session_topk_split_test")], mode="update")[0]
     last = per_batch.groupBy("user_id").agg(
         F.max(F.struct("upd", "starts", "n_events", "top_types", "top_counts")).alias("s")
     )
@@ -475,7 +475,7 @@ def test_stream_left_join_multibatch_same_final_set(spark, sf_dir, tmp_path):
 
     from mapreduce_infrastructure_spark.catalog import load_table
     from mapreduce_infrastructure_spark.streaming.stream import (
-        run_to_table,
+        run_to_tables,
         stream_left_join_click_purchase,
     )
 
@@ -524,10 +524,8 @@ def test_stream_left_join_multibatch_same_final_set(spark, sf_dir, tmp_path):
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
         "left_outer",
     ).select("click_id", "purchase_id")
-    got = {
-        (r.click_id, r.purchase_id)
-        for r in run_to_table(joined, "left_join_split_test", mode="append").collect()
-    }
+    (out,) = run_to_tables([(joined, "left_join_split_test")], mode="append")
+    got = {(r.click_id, r.purchase_id) for r in out.collect()}
     assert got == single
 
 
@@ -546,7 +544,7 @@ def test_stream_ingest_dedup_demotes_provisional_novel_across_batches(spark, tmp
     from mapreduce_infrastructure_spark.llm.dedup import _INCR_OLD_MAX, content_fp
     from mapreduce_infrastructure_spark.streaming.stream import (
         _ingest_dedup_fn,
-        run_to_table,
+        run_to_tables,
     )
 
     old_text = "previously ingested corpus text"
@@ -585,7 +583,7 @@ def test_stream_ingest_dedup_demotes_provisional_novel_across_batches(spark, tmp
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    per_batch = run_to_table(stream, "ingest_dedup_demote_test", mode="update")
+    per_batch = run_to_tables([(stream, "ingest_dedup_demote_test")], mode="update")[0]
     rows = per_batch.collect()
     # the duplicate fingerprint must have been emitted twice: first with
     # only the larger id (provisional novel), then with both
@@ -625,7 +623,7 @@ def test_stream_ohlc_multibatch_merges_struct_extremes(spark, sf_dir, tmp_path):
     from mapreduce_infrastructure_spark.operators.temporal import (
         ohlc_hourly_purchases,
     )
-    from mapreduce_infrastructure_spark.streaming.stream import run_to_table
+    from mapreduce_infrastructure_spark.streaming.stream import run_to_tables
 
     cols = ["hr", "open", "high", "low", "close", "n_trades"]
     want = _rows(ohlc_hourly_purchases(spark, sf_dir), cols)
@@ -661,7 +659,7 @@ def test_stream_ohlc_multibatch_merges_struct_extremes(spark, sf_dir, tmp_path):
         F.max(F.struct("us", "event_id", "value"))["value"].alias("close"),
         F.count(F.lit(1)).alias("n_trades"),
     )
-    got = _rows(run_to_table(agg, "ohlc_split_test", mode="complete"), cols)
+    got = _rows(run_to_tables([(agg, "ohlc_split_test")], mode="complete")[0], cols)
     assert got == want
 
 
@@ -674,7 +672,7 @@ def test_stream_full_join_multibatch_same_final_set(spark, sf_dir, tmp_path):
 
     from mapreduce_infrastructure_spark.catalog import load_table
     from mapreduce_infrastructure_spark.streaming.stream import (
-        run_to_table,
+        run_to_tables,
         stream_full_join_click_purchase,
     )
 
@@ -725,10 +723,8 @@ def test_stream_full_join_multibatch_same_final_set(spark, sf_dir, tmp_path):
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
         "full_outer",
     ).select("click_id", "purchase_id")
-    got = {
-        (r.click_id, r.purchase_id)
-        for r in run_to_table(joined, "full_join_split_test", mode="append").collect()
-    }
+    (out,) = run_to_tables([(joined, "full_join_split_test")], mode="append")
+    got = {(r.click_id, r.purchase_id) for r in out.collect()}
     assert got == single
 
 
@@ -1405,3 +1401,39 @@ def test_stream_events_user_value_concentration_matches_batch_twin(
         qs["stream_events_user_value_concentration"].oracle
         is qs["events_user_value_concentration"].oracle
     )
+
+
+def test_bridge_stops_started_queries_when_a_later_start_fails(spark, sf_dir):
+    """A failing second start() must not leak the first query: the bridge
+    stops every query it started before re-raising, so nothing stays
+    active and a retry under the same sink names succeeds. The first
+    stream sleeps in its micro-batch so it is still running when the
+    second start() fails."""
+    import time
+
+    import pytest
+
+    from mapreduce_infrastructure_spark.streaming.stream import (
+        run_to_tables,
+        stream_events,
+    )
+
+    def slow(batches):
+        time.sleep(3)
+        yield from batches
+
+    ev = stream_events(spark, sf_dir).select("event_type")
+    slow_counts = (
+        ev.mapInPandas(slow, "event_type string")
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    names = ("bridge_leak_first", "bridge_leak_second")
+    # complete mode needs an aggregate: the second start() raises
+    with pytest.raises(Exception):
+        run_to_tables([(slow_counts, names[0]), (ev, names[1])])
+    assert spark.streams.active == []
+    counts = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    first, second = run_to_tables([(slow_counts, names[0]), (counts, names[1])])
+    assert _rows(first, ["event_type", "n"]) == _rows(second, ["event_type", "n"])
+    assert spark.streams.active == []
