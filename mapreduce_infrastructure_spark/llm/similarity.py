@@ -9,10 +9,14 @@
                            sign-LSH at the same scan fraction on these
                            fixtures)
 
-All vector arithmetic is JVM-side higher-order functions (zip_with /
-aggregate) over double-cast arrays — no Python in the scoring loop, and
-double-exact math so Spark and the DuckDB oracle agree to the last bit
-before rounding.
+Vector arithmetic is double-exact, so Spark and the DuckDB oracle agree to
+the last bit before rounding. Most of it is JVM-side: unrolled codegen
+folds or higher-order functions (zip_with / aggregate) over double-cast
+arrays. The exceptions are the Arrow kernels. The IVF cell assignment,
+the PQ sub-distances and codes, and the exact all-pairs cosine of
+`neardup_cosine_pairs` replay the JVM fold's IEEE operations in numpy; the
+last ships vectors, never pairs, across the boundary. The PCA Gram
+partials use BLAS and are tolerance-pinned.
 
 Scale design: brute force is O(|Q|·N) with Q broadcast — right when the
 query set is small; for N×N or big-Q workloads the bucketed plans survive:
@@ -232,6 +236,150 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Block-pair exact cosine (neardup_cosine_pairs). Tile edge of the Gram
+# fold: the accumulator and product temporaries are 256×256 doubles
+# (512 KB each), which stay cache-resident; 256 measured fastest of
+# 128/256/512/1024 for a 1000×1000 block on a 4-core x86 host (0.09 s vs
+# 0.13 s at 1024).
+_GRAM_TILE = 256
+
+
+def _neardup_blocks(spark: SparkSession) -> int:
+    """Block count of the block-pair kernel: the largest nb with
+    nb·(nb+1)/2 ≤ defaultParallelism (at least 2), so the block pairs fill
+    one wave of task slots. Every Python task pays a fixed worker setup
+    cost (README, "Python only at Arrow boundaries"), so more, smaller
+    groups than slots buy nothing."""
+    slots = spark.sparkContext.defaultParallelism
+    nb = 2
+    while (nb + 1) * (nb + 2) // 2 <= slots:
+        nb += 1
+    return nb
+
+
+def _cosine_block_pair_kernel():
+    """applyInArrow kernel of one block pair (bi, bj): every vector pair
+    with one side in block bi and the other in block bj, scored as
+    rnd(dot / (nrm_a·nrm_b), 4) in the exact IEEE steps of the JVM
+    expression, and the pairs with cosine ≥ 0.4 returned as
+    (min id, max id, cosine). On the diagonal (bi = bj) rows are sorted by
+    id and only the upper tiles are folded; an id pair scores once there
+    since ids of one value hash to one block. Vectors of different widths
+    never pair (the JVM dot is null for them). A closure, so the worker
+    unpickles it by value without importing this package."""
+    tile = _GRAM_TILE
+
+    def gram_fold(At: np.ndarray, Bt: np.ndarray) -> np.ndarray:
+        # Dot products of every column of At (dim×m) with every column of
+        # Bt (dim×n) as the JVM folds them: acc = 0.0, then
+        # acc = acc + a[k]·b[k] for k = 0..dim−1, one IEEE multiply and one
+        # add per step (numpy never fuses or reorders elementwise ufuncs;
+        # no BLAS).
+        acc = np.zeros((At.shape[1], Bt.shape[1]))
+        tmp = np.empty_like(acc)
+        for k in range(len(At)):
+            np.multiply(At[k][:, None], Bt[k][None, :], out=tmp)
+            np.add(acc, tmp, out=acc)
+        return acc
+
+    def kernel(key, tbl):
+        import pyarrow as pa
+
+        bi, bj = key[0].as_py(), key[1].as_py()
+        nrm = tbl.column("nrm").to_numpy()
+        if (nrm * nrm == 0).any():
+            # The JVM join condition scores the cosine before it compares
+            # ids, self-pairs included, so one zero-norm vector fails the
+            # whole query under ANSI.
+            raise ArithmeticError(
+                "[DIVIDE_BY_ZERO] Division by zero in the cosine of a "
+                "zero-norm vector."
+            )
+        ids = tbl.column("vec_id").to_numpy()
+        blk = tbl.column("blk").to_numpy()
+        d = tbl.column("d").combine_chunks()
+        widths = d.value_lengths().to_numpy()
+        starts = d.offsets.to_numpy()[:-1]
+        vals = d.values.to_numpy(zero_copy_only=False)
+
+        def side(rows):
+            rows = rows[np.argsort(ids[rows], kind="stable")]
+            w = widths[rows[0]] if len(rows) else 0
+            Xt = vals[starts[rows][None, :] + np.arange(w)[:, None]]
+            return ids[rows], nrm[rows], Xt
+
+        out_a, out_b, out_c = [], [], []
+        for w in np.unique(widths):
+            same = widths == w
+            ia, norm_a, At = side(np.flatnonzero(same & (blk == bi)))
+            ib, norm_b, Bt = side(np.flatnonzero(same & (blk == bj)))
+            for i0 in range(0, len(ia), tile):
+                for j0 in range(i0 if bi == bj else 0, len(ib), tile):
+                    sa, sb = slice(i0, i0 + tile), slice(j0, j0 + tile)
+                    x = gram_fold(At[:, sa], Bt[:, sb]) / (
+                        norm_a[sa, None] * norm_b[None, sb]
+                    )
+                    cos = np.floor(x * 10000.0 + 0.5) / 10000.0
+                    keep = cos >= 0.4
+                    if bi == bj:
+                        keep &= ia[sa, None] < ib[None, sb]
+                    r, c = np.nonzero(keep)
+                    a, b = ia[sa][r], ib[sb][c]
+                    out_a.append(np.minimum(a, b))
+                    out_b.append(np.maximum(a, b))
+                    out_c.append(cos[r, c])
+
+        def cat(xs, t):
+            return np.concatenate(xs).astype(t) if xs else np.empty(0, t)
+
+        return pa.table(
+            {
+                "vec_a": cat(out_a, np.int64),
+                "vec_b": cat(out_b, np.int64),
+                "cosine": cat(out_c, np.float64),
+            }
+        )
+
+    return kernel
+
+
+def _neardup_block_pairs(vecs: DataFrame, nb: int | None = None) -> DataFrame:
+    """Exact all-pairs cosine ≥ 0.4 over ``vecs`` (vec_id, d, nrm) as a
+    block-pair kernel. vec_id hashes into ``nb`` blocks; each row is
+    replicated to the nb block pairs (min(b, k), max(b, k)) that contain
+    its block, so every unordered vector pair meets in exactly one group,
+    and `_cosine_block_pair_kernel` scores each group in numpy. Only
+    vectors cross the Arrow boundary (nb copies of N rows), never pairs.
+    Rows with a null vec_id or a null norm (null vector, null element) are
+    dropped first, as the JVM join's inferred not-null filters drop them.
+    Hash partitioning can put two block pairs in one task (at nb = 2, two
+    of the three); a collision-free partition key measured no faster at
+    sf0.01 or sf0.1 on 4 cores, so the plain repartition stays."""
+    nb = nb or _neardup_blocks(vecs.sparkSession)
+    blk = F.pmod(F.hash("vec_id"), F.lit(nb))
+    k = F.explode(F.sequence(F.lit(0), F.lit(nb - 1)))
+    rows = (
+        vecs.filter(F.col("vec_id").isNotNull() & F.col("nrm").isNotNull())
+        .select("vec_id", "d", "nrm", blk.alias("blk"))
+        .select("*", k.alias("k"))
+        .select(
+            "vec_id",
+            "d",
+            "nrm",
+            "blk",
+            F.least("blk", "k").alias("bi"),
+            F.greatest("blk", "k").alias("bj"),
+        )
+    )
+    return (
+        rows.repartition(nb * (nb + 1) // 2, "bi", "bj")
+        .groupBy("bi", "bj")
+        .applyInArrow(
+            _cosine_block_pair_kernel(), "vec_a long, vec_b long, cosine double"
+        )
+    )
+
+
 @query(
     "neardup_cosine_pairs",
     oracle=_ORACLE_VECTORS
@@ -246,23 +394,30 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "dedup"),
 )
 def neardup_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (exact, threshold 0.4).
-    Deliberately quadratic — the ground-truth tier; the documented scale
-    path for N×N is LSH bucketing first (ann_lsh_topk's bucketer) with this
-    exact score as the verify step."""
-    vecs = _vectors(spark, sf_dir)
-    a, b = vecs.alias("a"), vecs.alias("b")
-    cosine = rnd(
-        _dot("a.d", "b.d") / (F.col("a.nrm") * F.col("b.nrm")), 4)
-    return (
-        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            cosine.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= 0.4)
-    )
+    """Embedding-cosine near-duplicate pairs (exact, threshold 0.4): the
+    ground-truth tier of the dedup contract, scored by the block-pair
+    kernel `_neardup_block_pairs`.
+
+    Deliberately all-pairs. Exact metric-space pruning (ClusterJoin) cannot
+    help at this threshold: cos ≥ 0.4 is an L2 radius of about 1.095 on
+    the unit sphere while random 64-d vectors sit about √2 apart, so every
+    cell's replication bound covers every cell. The levers left are verify
+    throughput and parallelism: numpy folds replace the per-pair JVM
+    expression, and nb·(nb+1)/2 groups replace the one-task broadcast
+    nested-loop join.
+
+    Bit-identical to the JVM formulation rnd(_dot(a, b) / (a.nrm·b.nrm), 4)
+    by construction. The norms are still the JVM `_norm` column. The dot
+    is the same left-to-right fold (0.0 + a0·b0) + a1·b1 + … for width 64
+    and for the HOF fallback of any other equal width, in binary64 with
+    no fused multiply-add (the JVM has none; numpy ufuncs apply none). The
+    division, ·10000, +0.5, floor and /10000 are separate correctly
+    rounded IEEE operations on both sides (Spark's floor goes through a
+    long, which is exact below 2⁵³). Edge rows follow the JVM plan, pinned
+    against it in tests/test_dedup_similarity.py: null vector, null
+    element or mismatched widths give no pair; a null vec_id never pairs;
+    a zero-norm vector raises DIVIDE_BY_ZERO."""
+    return _neardup_block_pairs(_vectors(spark, sf_dir))
 
 
 # Deterministic random hyperplanes (seed fixed; regenerated identically on

@@ -1752,6 +1752,7 @@ def _lifetime_span_cells(
 @query(
     "events_user_lifetime_span_percentiles",
     oracle=USER_LIFETIME_SPAN_ORACLE,
+    tags=("temporal", "users", "percentile", "iterative"),
     twin=Twin(_lifetime_span_cells, _lifetime_span_report),
 )
 def events_user_lifetime_span_percentiles(

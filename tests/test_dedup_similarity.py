@@ -2243,3 +2243,107 @@ def test_ann_recall_report_full_partial_oracle_pure_python(spark, sf_dir):
     assert r.n_truth == len(truth)
     assert r.recall_at_3 == len(opq & truth) / len(truth)
     assert len(truth) == 30  # 10 queries x exact top-3, non-vacuous
+
+
+def _hand_vectors(spark, rows):
+    """A (vec_id, d, nrm) frame shaped like `similarity._vectors` from
+    hand-made (vec_id, array<float>) rows."""
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return emb.select(
+        "vec_id", similarity._as_double("embedding").alias("d")
+    ).select("vec_id", "d", similarity._norm("d").alias("nrm"))
+
+
+def _jvm_neardup_pairs(vecs):
+    """The JVM formulation `neardup_cosine_pairs` used before the
+    block-pair kernel: a nested-loop self-join scoring
+    rnd(_dot / (a.nrm·b.nrm), 4) per pair. Kept as the reference the
+    kernel is pinned against, edge rows included."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_infrastructure_spark.functions.exact import rnd
+
+    a, b = vecs.alias("a"), vecs.alias("b")
+    cosine = rnd(
+        similarity._dot("a.d", "b.d") / (F.col("a.nrm") * F.col("b.nrm")), 4
+    )
+    return (
+        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(
+            F.col("a.vec_id").alias("vec_a"),
+            F.col("b.vec_id").alias("vec_b"),
+            cosine.alias("cosine"),
+        )
+        .filter(F.col("cosine") >= 0.4)
+    )
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_neardup_kernel_edge_semantics_match_jvm_formulation(spark):
+    """The block-pair kernel reproduces the JVM formulation's edge rows
+    exactly: null vectors, null elements and mismatched widths give no
+    pair; a null vec_id never pairs; equal non-64 widths take the fold
+    fallback; duplicates score 1.0; the rounded-0.4 boundary is kept and
+    0.3999 dropped; a zero-norm vector raises DIVIDE_BY_ZERO."""
+    import math
+
+    import pytest
+
+    def vec(*head, width=64):
+        return list(head) + [0.0] * (width - len(head))
+
+    def at(x, axis):
+        return vec(x, *([0.0] * (axis - 1)), math.sqrt(1 - x * x))
+
+    e0 = vec(1.0)
+    rows = [
+        (1, e0),
+        (2, e0),  # exact duplicate of 1
+        (3, at(0.39996, 1)),  # rounds to 0.4 against 1 and 2: kept
+        (4, at(0.39994, 2)),  # rounds to 0.3999 against 1 and 2: dropped
+        (5, None),  # null vector
+        (6, [1.0, None] + [0.0] * 62),  # null element
+        (7, [3.0, 2.0, 1.0]),  # width 3: null against every 64-wide row
+        (8, [1.0, 2.0, 3.0]),
+        (9, [1.0, 2.0, 3.0]),
+        (None, e0),  # null vec_id
+    ]
+    vecs = _hand_vectors(spark, rows)
+    ref = _sorted_rows(_jvm_neardup_pairs(vecs))
+    assert ref == [
+        (1, 2, 1.0),
+        (1, 3, 0.4),
+        (2, 3, 0.4),
+        (7, 8, 0.7143),
+        (7, 9, 0.7143),
+        (8, 9, 1.0),
+    ]
+    for nb in (2, 3):
+        assert _sorted_rows(similarity._neardup_block_pairs(vecs, nb)) == ref
+
+    zero = _hand_vectors(spark, rows + [(10, vec())])
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        _jvm_neardup_pairs(zero).collect()
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        similarity._neardup_block_pairs(zero, 2).collect()
+
+
+def test_neardup_kernel_block_count_invariance_and_plan(spark, sf_dir):
+    """Any block count gives the same exact pair set as the JVM
+    formulation, each pair once; the query plan has no nested-loop,
+    cartesian or single-partition step."""
+    from mapreduce_infrastructure_spark.plans import checks
+
+    vecs = similarity._vectors(spark, sf_dir)
+    ref = _sorted_rows(_jvm_neardup_pairs(vecs))
+    assert ref, "fixture has no near-duplicate pair"
+    for nb in (2, 3, 4, 5):
+        got = _sorted_rows(similarity._neardup_block_pairs(vecs, nb))
+        assert got == ref, nb
+        assert len({(a, b) for a, b, _ in got}) == len(got), nb
+    plan = checks.explain_str(similarity.neardup_cosine_pairs(spark, sf_dir))
+    for banned in ("BroadcastNestedLoopJoin", "CartesianProduct", "SinglePartition"):
+        assert banned not in plan, banned
