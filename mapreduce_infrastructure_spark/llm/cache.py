@@ -1,11 +1,18 @@
-"""Bounded per-slot persist tracking, shared by the LLM-tier operators.
+"""Session caches of the LLM-tier operators, all kept in the one session
+store (``session.get_or_create``/``session.replace``).
 
-A query that references an expensive intermediate several times persists
-it — but a query function can't unpersist before returning (the caller
-hasn't consumed the DataFrame yet). Instead each call site registers its
-persisted working set under a (query, sf_dir) slot; re-invoking the same
-query unpersists the previous invocation's copy first, so session storage
-is bounded at one copy per slot instead of leaking a copy per call.
+Every entry is keyed by ``session.store_key(spark, slot)``: the slot string
+the call site chose (typically ``"<intermediate>:<sf_dir>"``) and the Spark
+application id. No input fingerprint is part of these keys, so an entry
+lives until the process ends or the application changes. Three policies:
+
+- ``tracked_persist``: replace. A query that references an expensive
+  intermediate several times persists it, but cannot unpersist before
+  returning (the caller has not consumed the DataFrame yet). Re-invoking
+  the query unpersists the previous occupant of its slot first, so
+  session storage is bounded at one copy per slot.
+- ``shared_persist``: get-or-create of a persisted frame.
+- ``shared_value``: get-or-create of a small, frozen driver-side value.
 """
 
 from __future__ import annotations
@@ -14,18 +21,19 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_CACHE: dict[str, DataFrame] = {}
+from ..session import get_or_create, replace
 
 
 def tracked_persist(df: DataFrame, slot: str) -> DataFrame:
-    prev = _CACHE.get(slot)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    _CACHE[slot] = df.persist()
-    return _CACHE[slot]
+    def persist(prev):
+        if prev is not None:
+            try:
+                prev.unpersist()
+            except Exception:
+                pass
+        return df.persist()
+
+    return replace(df.sparkSession, slot, persist)
 
 
 def shared_persist(
@@ -37,25 +45,9 @@ def shared_persist(
     session genuinely share a single cached copy. ``tracked_persist`` is
     wrong for this shape — it unconditionally unpersists the (already
     materialized) previous occupant and re-registers an identical cold
-    plan, making every consumer recompute.
-
-    The slot is additionally keyed by the Spark application id so a frame
-    built on one session is never handed to another (the hostile-session
-    tests run a second session in the same process).
-    """
-    key = f"{slot}@{spark.sparkContext.applicationId}"
-    df = _CACHE.get(key)
-    if df is None:
-        df = build().persist()
-        _CACHE[key] = df
-    return df
-
-
-_VALUES: dict[str, object] = {}
-_VALUES_LOCK = __import__("threading").Lock()
-# Miss marker for _VALUES lookups: a build() may legitimately return None,
-# which must be cached like any other value.
-_MISSING = object()
+    plan, making every consumer recompute. The store lock makes two driver
+    threads racing on one fresh slot build and persist one copy."""
+    return get_or_create(spark, slot, lambda: build().persist())
 
 
 def _freeze(v):
@@ -77,28 +69,14 @@ def _freeze(v):
 
 def shared_value(spark: SparkSession, build: Callable[[], object], slot: str):
     """``shared_persist`` for small driver-side values (quantizer fits,
-    fit-mode decisions): get-or-create keyed by slot + application id, so
-    several consumer queries in one session share one bounded, deterministic
-    intermediate instead of re-deriving it per invocation — exactly the
-    shingle-table pattern, applied to the k×dim centroid matrices.
-
-    Session-scoped only: the dict dies with the process, so every bench /
-    oracle invocation still computes the fit from the parquet inputs.
+    fit-mode decisions): several consumer queries in one session share one
+    deterministic intermediate instead of re-deriving it per invocation.
     Values are frozen (numpy write flag cleared) before caching, so an
-    accidental in-place edit by a consumer raises instead of corrupting
-    shared state. The slot freezes the first invocation's value for the
-    session: if the parquet under the slot's sf_dir is REWRITTEN mid-session
-    (the fixtures never are — they are deterministic per driver round),
-    later consumers would see the first fit; re-key by an input fingerprint
-    before supporting mutable inputs. A lock guards the check-then-set so a
-    multi-threaded driver (guide §2.6 overlapping jobs) cannot build twice
-    and hand out different object identities."""
-    key = f"{slot}@{spark.sparkContext.applicationId}"
-    v = _VALUES.get(key, _MISSING)
-    if v is _MISSING:
-        with _VALUES_LOCK:
-            v = _VALUES.get(key, _MISSING)
-            if v is _MISSING:
-                v = _freeze(build())
-                _VALUES[key] = v
-    return v
+    in-place edit by a consumer raises instead of corrupting shared state;
+    a build that returns None is cached like any other value.
+
+    Staleness: the key is (slot, application id) and covers no input, so
+    the first value built in an application is served for the rest of it.
+    If the parquet under the slot's sf_dir is rewritten mid-session (the
+    fixtures never are), later consumers still see the first fit."""
+    return get_or_create(spark, slot, lambda: _freeze(build()))

@@ -11,11 +11,16 @@ The reference configures its job from a flat INI (``src/mapreduce_spec.h:58-100`
 Scale posture (100 TB / 1000 executors): AQE is always on so skewed shuffle
 partitions are split and tiny ones coalesced at runtime; Arrow is on so any
 pandas-UDF boundary is vectorized, never row-at-a-time.
+
+The session store below is the engine's one cache: parquet schemas, shared
+persisted frames, shared fits and tracked persists, under one key function.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -123,3 +128,46 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return tune(spark)
+
+
+# The session store. Keys are store_key(...) triples; a value may be None
+# (a cached None is a hit), so lookups compare against _MISSING. The lock is
+# re-entrant because builds nest (a fit's build loads tables, whose schemas
+# are themselves store entries) and is held across a build, so concurrent
+# driver threads asking for one key build it once; a miss on another thread
+# waits for the running build.
+_STORE: dict[tuple, object] = {}
+_LOCK = threading.RLock()
+_MISSING = object()
+
+
+def store_key(spark: SparkSession, slot: str, fingerprint: tuple = ()) -> tuple:
+    """(slot, application id, input fingerprint): the application id keeps
+    a value built on one session from being handed to another; a caller
+    that supplies an input fingerprint misses (and rebuilds) as soon as
+    its input changes on disk."""
+    return (slot, spark.sparkContext.applicationId, fingerprint)
+
+
+def get_or_create(
+    spark: SparkSession, slot: str, build: Callable[[], object], fingerprint=()
+):
+    """The stored value under ``store_key(spark, slot, fingerprint)``,
+    running ``build()`` once on a miss."""
+    key = store_key(spark, slot, fingerprint)
+    v = _STORE.get(key, _MISSING)
+    if v is _MISSING:
+        with _LOCK:
+            v = _STORE.get(key, _MISSING)
+            if v is _MISSING:
+                v = _STORE[key] = build()
+    return v
+
+
+def replace(spark: SparkSession, slot: str, build: Callable[[object], object]):
+    """Store ``build(previous value or None)`` under
+    ``store_key(spark, slot)`` unconditionally, under the store lock."""
+    key = store_key(spark, slot)
+    with _LOCK:
+        v = _STORE[key] = build(_STORE.get(key))
+    return v

@@ -43,7 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..catalog import load_table, normalize_ts, scratch_dir
+from ..catalog import fingerprint, load_table, normalize_ts, parquet_schema
+from ..catalog import scratch_dir
 from ..llm import text
 from ..llm.cache import tracked_persist
 from ..llm.dedup import _INCR_OLD_MAX, INCR_DEDUP_ORACLE, content_fp
@@ -58,9 +59,8 @@ from . import batch_windows  # noqa: F401
 # Wire schema for the Kafka JSON path ONLY (our own serialization: ts as
 # epoch-nanos BIGINT). File-source readers must NOT assume a ts storage
 # type — the fixture has changed between TIMESTAMP(NANOS) and naive
-# TIMESTAMP(µs) across driver rounds — so they take the schema from the
-# parquet footer via a one-off batch read and normalize with
-# catalog.normalize_ts.
+# TIMESTAMP(µs) across driver rounds — so they take the schema from
+# catalog.parquet_schema and normalize with catalog.normalize_ts.
 _RAW_EVENTS = (
     "event_id bigint, ts long, user_id bigint, event_type string,"
     " value double, props string"
@@ -98,19 +98,6 @@ def _staged_table_dir(sf_dir: str, table: str) -> str:
     return d
 
 
-# Footer-schema cache for the staged table dirs: one batch footer read
-# per (staged dir, fixture fingerprint) per process instead of one per
-# query call — at 100 TB the schema read is cheap but it is a full driver
-# job, and the bench runs stream_* queries back to back. Keyed on the
-# fixture file's (mtime_ns, size) so a regenerated fixture invalidates.
-_FOOTER_SCHEMA_CACHE: dict = {}
-
-
-def _table_fingerprint(sf_dir: str, table: str) -> tuple:
-    st = os.stat(os.path.join(os.path.abspath(sf_dir), f"{table}.parquet"))
-    return (st.st_mtime_ns, st.st_size)
-
-
 def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """File-source readStream over any fixture table — the streaming
     counterpart of catalog.load_table (same signature, same ts
@@ -121,18 +108,14 @@ def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     TIMESTAMP(µs) files hands back the raw stored int64 in whatever unit
     the file used, so downstream math assuming epoch-nanos divided µs by
     1000 and silently landed every event in 1970 — windowed streams emitted
-    near-empty results with no error. A batch footer read (cached per
-    staged dir + fixture fingerprint) keeps the stream schema in lockstep
-    with the files, and ``normalize_ts`` (a no-op without a ``ts``
-    column) converts any ts storage type to the engine's µs TIMESTAMP."""
-    tune(spark)
+    near-empty results with no error. The stream takes the fixture's
+    schema from ``catalog.parquet_schema`` (the same session-store entry
+    ``load_table`` uses, re-inferred when the fixture's fingerprint
+    changes), and ``normalize_ts`` (a no-op without a ``ts`` column)
+    converts any ts storage type to the engine's µs TIMESTAMP."""
     d = _staged_table_dir(sf_dir, table)
-    key = (d, _table_fingerprint(sf_dir, table))
-    file_schema = _FOOTER_SCHEMA_CACHE.get(key)
-    if file_schema is None:
-        file_schema = spark.read.parquet(d).schema
-        _FOOTER_SCHEMA_CACHE[key] = file_schema
-    return normalize_ts(spark.readStream.schema(file_schema).parquet(d))
+    schema = parquet_schema(spark, os.path.join(sf_dir, f"{table}.parquet"))
+    return normalize_ts(spark.readStream.schema(schema).parquet(d))
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -284,30 +267,13 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stream_join_click_purchase",
-    oracle="""
-    SELECT c.event_id AS click_id,
-           p.event_id AS purchase_id,
-           c.user_id,
-           epoch_us(c.ts) AS click_us,
-           epoch_us(p.ts) AS purchase_us
-    FROM (SELECT * FROM events WHERE event_type = 'click') c
-    JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-      ON c.user_id = p.user_id
-     AND p.ts >= c.ts
-     AND p.ts <= c.ts + INTERVAL '30 minutes'
-    """,
-    tags=("streaming", "join"),
-)
-def stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM-STREAM inner join: clicks joined to purchases by the same user
-    within the following 30 minutes. Both sides carry watermarks and the
-    join condition bounds event time in both directions, so Spark can evict
-    buffered state as the watermark advances — the only formulation whose
-    state stays bounded on an infinite stream. Run to end-of-input, the
-    result equals the equivalent batch interval join, which the oracle
-    states directly."""
+def _click_purchase_join(
+    spark: SparkSession, sf_dir: str, how: str, name: str
+) -> DataFrame:
+    """Clicks joined (mode ``how``) to the same user's purchases in the
+    following 30 minutes under 1-hour watermarks, run into sink ``name``.
+    ``user_id`` is the purchase's where a full outer join emits a purchase
+    with no click."""
     ev = stream_events(spark, sf_dir)
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -332,14 +298,42 @@ def stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_user") == F.col("p_user"))
         & (F.col("p_ts") >= F.col("c_ts"))
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
+        how,
     ).select(
         "click_id",
         "purchase_id",
-        F.col("c_user").alias("user_id"),
+        F.coalesce("c_user", "p_user").alias("user_id"),
         F.unix_micros("c_ts").alias("click_us"),
         F.unix_micros("p_ts").alias("purchase_us"),
     )
-    return run_to_tables([(joined, "stream_join_click_purchase")], mode="append")[0]
+    return run_to_tables([(joined, name)], mode="append")[0]
+
+
+@query(
+    "stream_join_click_purchase",
+    oracle="""
+    SELECT c.event_id AS click_id,
+           p.event_id AS purchase_id,
+           c.user_id,
+           epoch_us(c.ts) AS click_us,
+           epoch_us(p.ts) AS purchase_us
+    FROM (SELECT * FROM events WHERE event_type = 'click') c
+    JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
+      ON c.user_id = p.user_id
+     AND p.ts >= c.ts
+     AND p.ts <= c.ts + INTERVAL '30 minutes'
+    """,
+    tags=("streaming", "join"),
+)
+def stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """STREAM-STREAM inner join: clicks joined to purchases by the same user
+    within the following 30 minutes. Both sides carry watermarks and the
+    join condition bounds event time in both directions, so Spark can evict
+    buffered state as the watermark advances — the only formulation whose
+    state stays bounded on an infinite stream. Run to end-of-input, the
+    result equals the equivalent batch interval join, which the oracle
+    states directly."""
+    return _click_purchase_join(spark, sf_dir, "inner", "stream_join_click_purchase")
 
 
 @query(
@@ -390,41 +384,9 @@ def stream_left_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFra
 
     State/scale: identical eviction bound to the inner join — both
     sides buffered only inside the watermark horizon."""
-    ev = stream_events(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
+    return _click_purchase_join(
+        spark, sf_dir, "left_outer", "stream_left_join_click_purchase"
     )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.col("c_user").alias("user_id"),
-        F.unix_micros("c_ts").alias("click_us"),
-        F.unix_micros("p_ts").alias("purchase_us"),
-    )
-    return run_to_tables(
-        [(joined, "stream_left_join_click_purchase")], mode="append"
-    )[0]
 
 
 @query(
@@ -480,41 +442,9 @@ def stream_full_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFra
 
     State/scale: identical per-side eviction bounds to the inner/left
     joins — nothing is buffered beyond the watermark horizon."""
-    ev = stream_events(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
+    return _click_purchase_join(
+        spark, sf_dir, "full_outer", "stream_full_join_click_purchase"
     )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "full_outer",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.coalesce("c_user", "p_user").alias("user_id"),
-        F.unix_micros("c_ts").alias("click_us"),
-        F.unix_micros("p_ts").alias("purchase_us"),
-    )
-    return run_to_tables(
-        [(joined, "stream_full_join_click_purchase")], mode="append"
-    )[0]
 
 
 @query(
@@ -1013,23 +943,23 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     gold = os.path.join(scratch, sfb, "gold")
     ckpt = os.path.join(scratch, sfb, "ckpt")
     # Stage the event log as multiple files so availableNow yields real
-    # micro-batches. Staged through the production read path (footer schema
-    # + normalize_ts) so ts is a real TIMESTAMP regardless of fixture
-    # storage — a hardcoded `ts long` schema here reproduced the
-    # CORRECTNESS_r03 unit bug (raw µs treated as ns). Cache is keyed on a
-    # fixture fingerprint marker so a regenerated fixture rebuilds the
-    # staging instead of silently serving stale/unit-mismatched data.
+    # micro-batches. Staged through load_table so ts is a real TIMESTAMP
+    # regardless of fixture storage — a hardcoded `ts long` schema here
+    # reproduced the CORRECTNESS_r03 unit bug (raw µs treated as ns). The
+    # staging is keyed on a marker holding the fixture's catalog
+    # fingerprint, so a regenerated fixture rebuilds it instead of
+    # silently serving stale/unit-mismatched data.
     marker = os.path.join(scratch, sfb, "src.fingerprint")
-    fp = repr(_table_fingerprint(sf_dir, "events"))
+    fp = repr(fingerprint(os.path.join(os.path.abspath(sf_dir), "events.parquet")))
     stale = True
     if os.path.isdir(src) and os.path.isfile(marker):
         with open(marker) as fh:
             stale = fh.read() != fp
     if stale:
         shutil.rmtree(src, ignore_errors=True)
-        normalize_ts(
-            spark.read.parquet(os.path.join(os.path.abspath(sf_dir), "events.parquet"))
-        ).repartition(6).write.mode("overwrite").parquet(src)
+        load_table(spark, sf_dir, "events").repartition(6).write.mode(
+            "overwrite"
+        ).parquet(src)
         os.makedirs(os.path.dirname(marker), exist_ok=True)
         with open(marker, "w") as fh:
             fh.write(fp)
@@ -1100,7 +1030,7 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(old, ignore_errors=True)
 
     stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
+        spark.readStream.schema(parquet_schema(spark, src))
         .option("maxFilesPerTrigger", 2)
         .parquet(src)
     )

@@ -8,6 +8,7 @@ mode: a silent TIMESTAMP_NTZ flip broke 5 certified queries)."""
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 
@@ -15,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
 from mapreduce_infrastructure_spark.catalog import load_table, normalize_ts
+from mapreduce_infrastructure_spark.streaming.stream import stream_table
 
 # One instant, three encodings. 2024-03-01T12:34:56.789123 UTC.
 _WALL = datetime.datetime(2024, 3, 1, 12, 34, 56, 789123)
@@ -63,3 +65,49 @@ def test_load_table_tripwire_on_unknown_encoding(spark, tmp_path):
 def test_load_table_normalizes_current_fixture(spark, sf_dir):
     df = load_table(spark, sf_dir, "events")
     assert isinstance(df.schema["ts"].dataType, TimestampType)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run fn() in Spark job group ``group``; return the ids of the jobs it
+    started, read from the status tracker once the listener bus drains."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_load_table_runs_no_spark_job(spark, sf_dir):
+    # The first call may infer the schema; the warm call reuses it from the
+    # session store and builds an identical frame without a job.
+    load_table(spark, sf_dir, "orders")
+    df, jobs = _jobs_in_group(
+        spark, "test_warm_load_table", lambda: load_table(spark, sf_dir, "orders")
+    )
+    assert jobs == []
+    inferred = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    assert df.schema == inferred.schema
+    assert sorted(df.collect()) == sorted(inferred.collect())
+
+
+def test_overwritten_table_shows_new_column(spark, tmp_path):
+    # Rewriting a table in place changes its fingerprint, so the next
+    # load_table and stream_table see the new schema, not a cached one.
+    sf = str(tmp_path)
+    path = f"{sf}/region.parquet"
+    spark.createDataFrame(
+        [(0, "AFRICA")], "r_regionkey bigint, r_name string"
+    ).write.mode("overwrite").parquet(path)
+    assert load_table(spark, sf, "region").columns == ["r_regionkey", "r_name"]
+    assert stream_table(spark, sf, "region").columns == ["r_regionkey", "r_name"]
+    spark.createDataFrame(
+        [(0, "AFRICA", "lar deposits")],
+        "r_regionkey bigint, r_name string, r_comment string",
+    ).write.mode("overwrite").parquet(path)
+    df = load_table(spark, sf, "region")
+    assert df.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert df.collect()[0].r_comment == "lar deposits"
+    assert stream_table(spark, sf, "region").columns == df.columns

@@ -531,6 +531,7 @@ def test_sql_band_explode_matches_column_api(spark, sf_dir):
 
 def test_shared_value_computes_once_per_slot_and_app(spark):
     from mapreduce_infrastructure_spark.llm import cache as C
+    from mapreduce_infrastructure_spark.session import _STORE, store_key
 
     calls = {"n": 0}
 
@@ -539,28 +540,29 @@ def test_shared_value_computes_once_per_slot_and_app(spark):
         return object()
 
     slot = "test_shared_value_slot_r16w5"
-    key = f"{slot}@{spark.sparkContext.applicationId}"
-    C._VALUES.pop(key, None)
+    key = store_key(spark, slot)
+    _STORE.pop(key, None)
     try:
         a = C.shared_value(spark, build, slot)
         b = C.shared_value(spark, build, slot)
         assert a is b
         assert calls["n"] == 1
         # a different slot builds independently
-        key2 = f"{slot}2@{spark.sparkContext.applicationId}"
-        C._VALUES.pop(key2, None)
+        key2 = store_key(spark, slot + "2")
+        _STORE.pop(key2, None)
         c = C.shared_value(spark, build, slot + "2")
         assert calls["n"] == 2
         assert c is not a
     finally:
-        C._VALUES.pop(key, None)
-        C._VALUES.pop(f"{slot}2@{spark.sparkContext.applicationId}", None)
+        _STORE.pop(key, None)
+        _STORE.pop(store_key(spark, slot + "2"), None)
 
 
 def test_shared_value_caches_a_none_result(spark):
     """A build() that returns None is a value, not a miss: it runs once
     per slot and application id like any other build."""
     from mapreduce_infrastructure_spark.llm import cache as C
+    from mapreduce_infrastructure_spark.session import _STORE, store_key
 
     calls = {"n": 0}
 
@@ -569,11 +571,59 @@ def test_shared_value_caches_a_none_result(spark):
         return None
 
     slot = "test_shared_value_none_slot"
-    key = f"{slot}@{spark.sparkContext.applicationId}"
-    C._VALUES.pop(key, None)
+    key = store_key(spark, slot)
+    _STORE.pop(key, None)
     try:
         assert C.shared_value(spark, build, slot) is None
         assert C.shared_value(spark, build, slot) is None
         assert calls["n"] == 1
     finally:
-        C._VALUES.pop(key, None)
+        _STORE.pop(key, None)
+
+
+def test_shared_persist_builds_once_for_racing_threads(spark):
+    """Two driver threads asking for one fresh shared_persist slot at once
+    build and persist it once and get the same frame: a second persisted
+    copy would sit in the session cache with no slot to unpersist it."""
+    import threading
+    import time
+
+    from mapreduce_infrastructure_spark.llm import cache as C
+    from mapreduce_infrastructure_spark.session import _STORE, store_key
+
+    slot = "test_shared_persist_race_slot"
+    _STORE.pop(store_key(spark, slot), None)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    calls = []
+    out = [None, None]
+    barrier = threading.Barrier(2, timeout=60)
+
+    def build():
+        calls.append(1)
+        time.sleep(0.5)
+        # a distinct plan per building thread, so the cache manager cannot
+        # fold two persisted copies into one entry
+        return spark.range(8).withColumn("t", F.lit(threading.get_ident()))
+
+    def worker(i):
+        barrier.wait()
+        out[i] = C.shared_persist(spark, build, slot)
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    try:
+        assert not any(t.is_alive() for t in threads)
+        for df in out:
+            df.count()
+        assert len(calls) == 1
+        assert out[0] is out[1]
+        assert jsc.getPersistentRDDs().size() - before <= 1
+    finally:
+        for df in out:
+            if df is not None:
+                df.unpersist()
+        _STORE.pop(store_key(spark, slot), None)

@@ -81,20 +81,18 @@ def test_ivf_fit_slot_consumers_build_identical_fits(spark):
     here instead of silently serving wrong centroids to the other."""
     import numpy as np
 
-    from mapreduce_infrastructure_spark.llm import cache
     from mapreduce_infrastructure_spark.registry import all_queries
+    from mapreduce_infrastructure_spark.session import _STORE, store_key
 
     qs = all_queries()
-    key = f"ivf_fit_sample:{SF}@{spark.sparkContext.applicationId}"
+    key = store_key(spark, f"ivf_fit_sample:{SF}")
     fits = {}
     for name in ("ann_ivf_topk", "neardup_cosine_ivf"):
-        cache._VALUES.pop(key, None)
-        cache._VALUES.pop(
-            f"ivf_fit_kind:{SF}@{spark.sparkContext.applicationId}", None
-        )
+        _STORE.pop(key, None)
+        _STORE.pop(store_key(spark, f"ivf_fit_kind:{SF}"), None)
         qs[name].fn(spark, SF).write.format("noop").mode("overwrite").save()
-        assert key in cache._VALUES, f"{name} no longer populates {key}"
-        fits[name] = np.asarray(cache._VALUES[key])
+        assert key in _STORE, f"{name} no longer populates {key}"
+        fits[name] = np.asarray(_STORE[key])
     assert fits["ann_ivf_topk"].tobytes() == fits["neardup_cosine_ivf"].tobytes()
 
 
@@ -104,10 +102,11 @@ def test_shared_value_freezes_numpy_results(spark):
     import numpy as np
     import pytest
 
-    from mapreduce_infrastructure_spark.llm.cache import _VALUES, shared_value
+    from mapreduce_infrastructure_spark.llm.cache import shared_value
+    from mapreduce_infrastructure_spark.session import _STORE, store_key
 
     key = "r17_freeze_probe"
-    _VALUES.pop(f"{key}@{spark.sparkContext.applicationId}", None)
+    _STORE.pop(store_key(spark, key), None)
     v = shared_value(spark, lambda: np.ones((2, 2)), key)
     with pytest.raises(ValueError):
         v[0, 0] = 5.0
@@ -336,10 +335,10 @@ def test_kmeans_seeds_greedy_driver_matches_spark(spark):
     }
     # the tracked persists are still registered; rebuild the Spark-side
     # greedy from them (the pre-round-17 formulation, verbatim)
-    from mapreduce_infrastructure_spark.llm.cache import _CACHE
+    from mapreduce_infrastructure_spark.session import _STORE, store_key
 
-    candw = _CACHE[f"kmeans_seeds_candw:{SF}"]
-    cdist = _CACHE[f"kmeans_seeds_cdist:{SF}"]
+    candw = _STORE[store_key(spark, f"kmeans_seeds_candw:{SF}")]
+    cdist = _STORE[store_key(spark, f"kmeans_seeds_cdist:{SF}")]
     first = candw.orderBy(F.col("w").desc(), "cid").limit(1).collect()
     chosen = [(int(first[0]["cid"]), 1)]
     for k in range(2, K.K + 1):

@@ -8,10 +8,13 @@ our plumbing (schema, staging, sink layout) preserves it."""
 
 from __future__ import annotations
 
-import os
 import time
 
-from mapreduce_infrastructure_spark.catalog import normalize_ts
+from mapreduce_infrastructure_spark.catalog import (
+    load_table,
+    normalize_ts,
+    parquet_schema,
+)
 
 
 def test_kill_restart_exactly_once(spark, sf_dir, tmp_path):
@@ -20,13 +23,13 @@ def test_kill_restart_exactly_once(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     # Stage the fixture as 6 separate files so the stream has multiple
     # micro-batches to be killed between. Read + restage via the PRODUCTION
-    # path (footer schema + catalog.normalize_ts, same as
-    # streaming.stream.stream_events) so the test tracks fixture ts-storage
-    # changes instead of pinning a stale wire schema.
-    events = normalize_ts(spark.read.parquet(os.path.join(sf_dir, "events.parquet")))
+    # path (catalog.load_table + catalog.parquet_schema, same as
+    # streaming.stream.stream_merge_upsert) so the test tracks fixture
+    # ts-storage changes instead of pinning a stale wire schema.
+    events = load_table(spark, sf_dir, "events")
     events.repartition(6).write.mode("overwrite").parquet(src)
     expected = {r.event_id for r in events.select("event_id").collect()}
-    file_schema = spark.read.parquet(src).schema
+    file_schema = parquet_schema(spark, src)
 
     def start(trigger_kwargs):
         stream = normalize_ts(
