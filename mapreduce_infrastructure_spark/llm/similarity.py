@@ -15,8 +15,9 @@ folds or higher-order functions (zip_with / aggregate) over double-cast
 arrays. The exceptions are the Arrow kernels. The IVF cell assignment,
 the PQ sub-distances and codes, and the exact all-pairs cosine of
 `neardup_cosine_pairs` replay the JVM fold's IEEE operations in numpy; the
-last ships vectors, never pairs, across the boundary. The PCA Gram
-partials use BLAS and are tolerance-pinned.
+last ships vectors, never pairs, across the boundary, in one wave of
+block pairs: more blocks would replicate each vector further without adding
+parallelism. The PCA Gram partials use BLAS and are tolerance-pinned.
 
 Scale design: brute force is O(|Q|·N) with Q broadcast — right when the
 query set is small; for N×N or big-Q workloads the bucketed plans survive:
@@ -247,9 +248,11 @@ _GRAM_TILE = 256
 def _neardup_blocks(spark: SparkSession) -> int:
     """Block count of the block-pair kernel: the largest nb with
     nb·(nb+1)/2 ≤ defaultParallelism (at least 2), so the block pairs fill
-    one wave of task slots. Every Python task pays a fixed worker setup
-    cost (README, "Python only at Arrow boundaries"), so more, smaller
-    groups than slots buy nothing."""
+    one wave of task slots. Each vector is replicated to the nb block pairs
+    holding its block, so past one wave a larger nb adds replicated bytes
+    across the shuffle and the Arrow boundary, and no parallelism. The
+    per-task fixed cost that once argued the same way is down to tens of
+    milliseconds (README, "Scale posture")."""
     slots = spark.sparkContext.defaultParallelism
     nb = 2
     while (nb + 1) * (nb + 2) // 2 <= slots:

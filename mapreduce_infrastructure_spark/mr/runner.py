@@ -119,7 +119,8 @@ def write_sorted_text(
     repartitionByRange + sortWithinPartitions gives *globally* sorted output
     across the R files without a single-partition global sort — the plan
     that survives at scale (orderBy().repartition(R) would destroy order;
-    orderBy().coalesce(1) would serialize).
+    orderBy().coalesce(1) would serialize). The range bounds come from a
+    sample job over ``df``, so an unpersisted ``df`` is computed twice.
 
     DELIBERATE DEVIATION from the reference: ``src/mr_tasks.h:112-115``
     opens ``output_{i}`` with ``ios::app``, so a re-run against the same
@@ -173,9 +174,15 @@ def run_job(spark: SparkSession, config_path: str) -> list[str]:
         "spark.sql.files.maxPartitionBytes", str(max(spec.map_kilobytes, 1) * 1024)
     )
     try:
+        # The sink's range bounds come from a sample job over its input.
+        # Persisted, the Python reduce (and its shuffle read) runs once for
+        # that job and the write, not once per job.
         result = run_mr_job(
             spark, spec.input_files, spec.user_id, spec.n_output_files
-        )
-        return write_sorted_text(result, spec.output_dir, spec.n_output_files)
+        ).persist()
+        try:
+            return write_sorted_text(result, spec.output_dir, spec.n_output_files)
+        finally:
+            result.unpersist()
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)

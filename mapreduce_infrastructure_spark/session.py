@@ -7,6 +7,9 @@ The reference configures its job from a flat INI (``src/mapreduce_spec.h:58-100`
 - ``map_kilobytes``    → ``spark.sql.files.maxPartitionBytes`` (input split size)
 - ``n_output_files``   → ``spark.sql.shuffle.partitions`` / explicit repartition(R)
 - straggler re-exec    → ``spark.speculation`` (reference ``src/master.h:131-138``)
+- long-lived worker    → ``spark.python.daemon.module`` = ``pyworker``: tasks
+  run in forked, reused workers with no per-task archive re-reads
+  (reference ``src/worker.h:77-217``)
 
 Scale posture (100 TB / 1000 executors): AQE is always on so skewed shuffle
 partitions are split and tiny ones coalesced at runtime; Arrow is on so any
@@ -22,7 +25,14 @@ import os
 import threading
 from collections.abc import Callable
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
+
+# The directory holding this package. Python workers get it on their
+# PYTHONPATH, so they can import the worker daemon (``pyworker``) and every
+# engine function pickled by reference, whatever the cwd or environment
+# of the process that started Spark.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Runtime-settable confs applied to ANY session (including one the driver
 # owns). All are dynamic SQL confs — safe to set after session creation.
@@ -83,6 +93,14 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _worker_pythonpath() -> str:
+    """The package's parent directory, then any PYTHONPATH entries the
+    caller already set for executors (spark-defaults or submit args)."""
+    prior = SparkConf().get("spark.executorEnv.PYTHONPATH", "")
+    entries = [p for p in prior.split(os.pathsep) if p and p != _PACKAGE_PARENT]
+    return os.pathsep.join([_PACKAGE_PARENT, *entries])
+
+
 def get_spark(
     app_name: str = "mapreduce-infrastructure-spark",
     master: str | None = None,
@@ -122,6 +140,11 @@ def get_spark(
         # the operative knob on a 1000-executor cluster.
         .config("spark.speculation", "true")
         .config("spark.speculation.multiplier", "3")
+        # Python workers fork from the engine's daemon, which keeps each
+        # task from re-reading pyspark.zip and the spark-core jar (see
+        # pyworker). Spark-core confs, like speculation above.
+        .config("spark.python.daemon.module", f"{__package__}.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)

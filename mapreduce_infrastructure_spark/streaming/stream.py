@@ -977,6 +977,10 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("long").alias("last_eid"),
     )
     base.write.mode("overwrite").parquet(gold)
+    # Gold is rewritten every batch, so the fingerprint-keyed schema store
+    # cannot serve it; each read takes the schema of the frame last written
+    # there instead of inferring it (one Spark job per read).
+    gold_schema = [base.schema]
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
@@ -996,7 +1000,7 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") == 1)
             .drop("rn")
         )
-        g = batch_df.sparkSession.read.parquet(gold)
+        g = batch_df.sparkSession.read.schema(gold_schema[0]).parquet(gold)
         j = g.alias("g").join(changes.alias("c"), "key", "full_outer")
         newer = F.col("c.op").isNotNull() & (
             F.col("g.last_us").isNull()
@@ -1023,6 +1027,7 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         tmp = gold + f"__b{batch_id}"
         merged.write.mode("overwrite").parquet(tmp)
+        gold_schema[0] = merged.schema
         old = gold + "__old"
         shutil.rmtree(old, ignore_errors=True)
         os.rename(gold, old)
@@ -1044,7 +1049,7 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.exact import rnd
 
-    final = spark.read.parquet(gold)
+    final = spark.read.schema(gold_schema[0]).parquet(gold)
     return final.filter(
         F.coalesce(F.col("last_op"), F.lit("keep")) != "delete"
     ).select(
