@@ -110,6 +110,45 @@ def fingerprint(path: str) -> tuple:
     return tuple(sorted(files))
 
 
+def table_paths(sf_dir: str, *names: str) -> tuple[str, ...]:
+    """The file (or dataset directory) of each named fixture table: what a
+    session-store slot built from those tables names as its inputs."""
+    return tuple(os.path.join(sf_dir, f"{name}.parquet") for name in names)
+
+
+def parquet_footer_rows(sf_dir: str, table: str) -> int:
+    """Total row count of a fixture table from its parquet FOOTER metadata —
+    a driver-side file read, no Spark job (guide §1: don't schedule a
+    distributed count for a number the storage layer already holds; at
+    100 TB a table format serves this from its manifest). Handles both the
+    single-file fixture layout and a directory of part files (the
+    tools/scale_check.py replicas), skipping the ``_``/``.`` files Spark
+    skips. Raises on anything else; `table_rows` falls back to a Spark
+    count()."""
+    import pyarrow.parquet as pq
+
+    [path] = table_paths(os.path.abspath(sf_dir), table)
+    if os.path.isdir(path):
+        total = 0
+        for root, _dirs, files in os.walk(path):
+            for fn in files:
+                if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
+                    total += pq.ParquetFile(
+                        os.path.join(root, fn)
+                    ).metadata.num_rows
+        return total
+    return pq.ParquetFile(path).metadata.num_rows
+
+
+def table_rows(spark: SparkSession, sf_dir: str, table: str) -> int:
+    """Row count of a fixture table: its parquet footers, or a Spark
+    count() of `load_table` when the footers cannot be read."""
+    try:
+        return parquet_footer_rows(sf_dir, table)
+    except Exception:
+        return load_table(spark, sf_dir, table).count()
+
+
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """The schema Spark infers for the parquet file or dataset at ``path``
     under the engine's confs (``tune``), inferred once per path
@@ -135,7 +174,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     not surface as silent hash mismatches downstream — the TIMESTAMP_NTZ
     flip between rounds 2 and 3 cost two rounds precisely because nothing
     asserted the post-normalization type."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    [path] = table_paths(sf_dir, name)
     df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_ts(df)

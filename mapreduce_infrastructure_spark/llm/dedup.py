@@ -26,14 +26,15 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
-from ..catalog import load_table
+from ..catalog import load_table, table_paths
 from ..functions.exact import rnd
 from ..functions.ranks import bucketed_prefix_sum, ntile_from_rank
 from ..registry import query
 from .text import quality_keep_col, quality_keep_sql, tokens_col
 
-# Persisted working sets, one slot per (query, sf_dir) — bounded-cache
-# helper shared across the LLM tier (see llm/cache.py).
+# Persisted working sets and candidate indexes, one slot per (query,
+# sf_dir), keyed by the fingerprint of the table they read (see
+# llm/cache.py).
 from .cache import shared_persist, tracked_persist as _tracked_persist
 
 # --------------------------------------------------------------------------
@@ -97,11 +98,14 @@ def _shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, lang, sh) distinct-shingle table, get-or-created under
     ONE sf_dir-keyed slot (shared_persist) so the dedup tier's consumers
     (Jaccard/containment pairs, MinHash, cluster edges, PPJoin) share a
-    single cached copy per session — tracked_persist under a common slot
-    would unpersist the materialized copy and force every consumer to
-    re-tokenize and re-shingle the corpus."""
+    single cached copy per version of ``documents`` — tracked_persist
+    under a common slot would unpersist the materialized copy and force
+    every consumer to re-tokenize and re-shingle the corpus."""
     return shared_persist(
-        spark, lambda: _doc_shingles(spark, sf_dir), f"shingles:{sf_dir}"
+        spark,
+        lambda: _doc_shingles(spark, sf_dir),
+        f"shingles:{sf_dir}",
+        table_paths(sf_dir, "documents"),
     )
 
 
@@ -120,6 +124,7 @@ def _gram_incidence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("sh") > 0)
         .select("doc_id", "source", F.explode("sh").alias("g")),
         f"gram_incidence:{sf_dir}",
+        table_paths(sf_dir, "documents"),
     )
 
 
@@ -505,16 +510,19 @@ def minhash_signatures(
     return sig.select(*cols)
 
 
-def _cap_hot_bands(bands: DataFrame, cap: int, slot: str = "") -> DataFrame:
+def _cap_hot_bands(bands: DataFrame, cap: int) -> tuple[DataFrame, tuple]:
     """Bound every (band_id, band_hash) bucket to ``cap`` docs before the
     bucket self-join (SURVEY §7's "salted keys for skew" risk, applied to
     LSH): keep the ``cap`` lowest doc_ids per bucket (deterministic under
-    any partitioning), drop the rest FROM THAT BAND ONLY, and report the
-    truncation with a RuntimeWarning carrying bucket/row counts so recall
-    loss is visible, never silent. The one extra aggregation runs on the
-    already-persisted band table and collects a single row."""
+    any partitioning) and drop the rest FROM THAT BAND ONLY. Returns the
+    capped band table and the truncation census ``(buckets, dropped)``.
+    The one extra aggregation runs on the already-persisted band table and
+    collects a single row; it runs once per version of the corpus, as part
+    of the band index (`_band_index`), and `_warn_hot_bands` reports a
+    non-zero census on every call that reads it, so recall loss is
+    visible, never silent."""
     if not cap or cap <= 0:
-        return bands
+        return bands, (0, 0)
     # Detection first, via groupBy count (map-side partial agg on the
     # persisted band table — far cheaper than a window sort); the window
     # row_number pass runs ONLY when a hot bucket actually exists, so the
@@ -529,17 +537,9 @@ def _cap_hot_bands(bands: DataFrame, cap: int, slot: str = "") -> DataFrame:
         )
         .collect()
     )
+    census = (int(hot.buckets), int(hot.dropped))
     if not hot.dropped:
-        return bands
-    import warnings
-
-    warnings.warn(
-        f"LSH hot-band cap: dropping {hot.dropped} doc-band rows across "
-        f"{hot.buckets} buckets over cap={cap}; pairs in those buckets "
-        "are found only if another band re-pairs them",
-        RuntimeWarning,
-        stacklevel=3,
-    )
+        return bands, census
     from pyspark.sql import Window
 
     w = Window.partitionBy("band_id", "band_hash").orderBy("doc_id")
@@ -551,7 +551,63 @@ def _cap_hot_bands(bands: DataFrame, cap: int, slot: str = "") -> DataFrame:
     # The caller self-joins this result; without a persist the row_number
     # window recomputes for BOTH join sides. Only reached when truncation
     # actually occurred, so the healthy-corpus path pays nothing.
-    return _tracked_persist(capped, slot or "lsh_bands_capped")
+    return capped.persist(), census
+
+
+def _warn_hot_bands(census: tuple, cap: int) -> None:
+    """The truncation RuntimeWarning of a band index whose census dropped
+    rows, raised for the caller of the query that reads the index."""
+    buckets, dropped = census
+    if not dropped:
+        return
+    import warnings
+
+    warnings.warn(
+        f"LSH hot-band cap: dropping {dropped} doc-band rows across "
+        f"{buckets} buckets over cap={cap}; pairs in those buckets "
+        "are found only if another band re-pairs them",
+        RuntimeWarning,
+        stacklevel=3,
+    )
+
+
+def _band_index(
+    spark: SparkSession, sf_dir: str, cap: int
+) -> tuple[DataFrame, DataFrame, tuple]:
+    """The MinHash band index of ``documents``: (band table, band table
+    capped at ``cap`` docs per bucket, truncation census). One store entry
+    per version of the corpus and cap: a warm call runs no Spark job (the
+    signatures, band explode and census all ran in the build), and a
+    rewritten corpus evicts the entry, unpersisting both tables. The band
+    table carries only (doc_id, band_id, band_hash) — the heavy shingle
+    arrays are joined back solely for the (small) candidate set."""
+
+    def build():
+        # Wave 5: the band explode is one parsed SQL string — the
+        # identical transform/struct/slice tree the Column-API lambda
+        # built (python lambdas route through py4j named-lambda
+        # scaffolding on every call), pinned exceptAll-equal in
+        # tests/test_r16_kernels.py.
+        bands = (
+            _signatures(_shingle_table(spark, sf_dir))
+            .selectExpr(
+                "doc_id",
+                f"explode(transform(sequence(0, {LSH_BANDS - 1}), "
+                f"b -> struct(b AS band_id, xxhash64(slice(sig, "
+                f"b * {LSH_ROWS} + 1, {LSH_ROWS})) AS band_hash))) AS band",
+            )
+            .selectExpr("doc_id", "band.band_id AS band_id",
+                        "band.band_hash AS band_hash")
+            .persist()
+        )
+        return (bands, *_cap_hot_bands(bands, cap))
+
+    return shared_persist(
+        spark,
+        build,
+        f"minhash_band_index:{sf_dir}:{cap}",
+        table_paths(sf_dir, "documents"),
+    )
 
 
 @query("minhash_lsh_pairs", tags=("dedup", "minhash", "lsh"))
@@ -565,31 +621,23 @@ def minhash_lsh_pairs(
     (band_id, band_hash) — linear in corpus size — and only candidates pay
     the exact comparison. The band table carries only (doc_id, band) — the
     heavy shingle arrays are joined back solely for the (small) candidate
-    set, and the band/shingle tables are persisted so the self-join does not
-    recompute the pipeline per side. Band buckets over ``hot_band_cap``
-    docs are truncated (deterministically, lowest doc_ids kept) with a loud
-    warning, so boilerplate corpora cannot push the self-join quadratic —
-    see HOT_BAND_CAP. No SQL oracle (DuckDB has no xxhash64), but since
-    round 15 the ENTIRE pair set + jaccard values are re-derived from raw
-    text by the pure-python XXH64 reference (tests/test_dedup_similarity.py
-    partial oracle — signatures, band hashes, cap, verify all recomputed
-    outside the engine); recall-vs-exact tests stand alongside.
+    set. The band table with its hot-band census (`_band_index`) and the
+    shingle table are session-store entries keyed by the corpus
+    fingerprint: the census runs once per version of ``documents``, a warm
+    call runs no Spark job before its action, and a rewritten corpus is
+    re-indexed. Band buckets over ``hot_band_cap`` docs are truncated
+    (deterministically, lowest doc_ids kept) with a loud warning, raised on
+    every call whose index dropped rows, so boilerplate corpora cannot push
+    the self-join quadratic — see HOT_BAND_CAP. No SQL oracle (DuckDB has
+    no xxhash64), but since round 15 the ENTIRE pair set + jaccard values
+    are re-derived from raw text by the pure-python XXH64 reference
+    (tests/test_dedup_similarity.py partial oracle — signatures, band
+    hashes, cap, verify all recomputed outside the engine); recall-vs-exact
+    tests stand alongside.
     """
     t = _shingle_table(spark, sf_dir)
-    sig = _signatures(t)
-    # Wave 5: the band explode is one parsed SQL string — the identical
-    # transform/struct/slice tree the Column-API lambda built (python
-    # lambdas route through py4j named-lambda scaffolding on every call),
-    # pinned exceptAll-equal in tests/test_r16_kernels.py.
-    bands = sig.selectExpr(
-        "doc_id",
-        f"explode(transform(sequence(0, {LSH_BANDS - 1}), "
-        f"b -> struct(b AS band_id, xxhash64(slice(sig, "
-        f"b * {LSH_ROWS} + 1, {LSH_ROWS})) AS band_hash))) AS band",
-    ).selectExpr("doc_id", "band.band_id AS band_id",
-                 "band.band_hash AS band_hash")
-    bands = _tracked_persist(bands, f"minhash_bands:{sf_dir}")
-    bands = _cap_hot_bands(bands, hot_band_cap, f"minhash_bands_capped:{sf_dir}")
+    _, bands, census = _band_index(spark, sf_dir, hot_band_cap)
+    _warn_hot_bands(census, hot_band_cap)
 
     a, b = bands.alias("a"), bands.alias("b")
     candidates = (
@@ -693,28 +741,34 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     blake2b reference (tests/test_dedup_similarity.py partial oracle —
     fingerprint, banding, verify and dedup all recomputed outside the
     engine); recall-vs-exact tests stand alongside."""
-    docs = load_table(spark, sf_dir, "documents")
-    fp = docs.select(
-        "doc_id", _simhash64(tokens_col()).alias("simhash")
+
+    def build() -> DataFrame:
+        fp = load_table(spark, sf_dir, "documents").select(
+            "doc_id", _simhash64(tokens_col()).alias("simhash")
+        )
+        return fp.select(
+            "doc_id",
+            "simhash",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(i).alias("chunk_id"),
+                            F.shiftrightunsigned(F.col("simhash"), 8 * i)
+                            .bitwiseAND(F.lit(0xFF))
+                            .alias("chunk"),
+                        )
+                        for i in range(8)
+                    ]
+                )
+            ).alias("c"),
+        ).select("doc_id", "simhash", "c.chunk_id", "c.chunk")
+
+    # The chunk table is the SimHash candidate index: one store entry per
+    # version of the corpus, read by both sides of the bucket self-join.
+    chunks = shared_persist(
+        spark, build, f"simhash_chunks:{sf_dir}", table_paths(sf_dir, "documents")
     )
-    chunks = fp.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk_id"),
-                        F.shiftrightunsigned(F.col("simhash"), 8 * i)
-                        .bitwiseAND(F.lit(0xFF))
-                        .alias("chunk"),
-                    )
-                    for i in range(8)
-                ]
-            )
-        ).alias("c"),
-    ).select("doc_id", "simhash", "c.chunk_id", "c.chunk")
-    chunks = _tracked_persist(chunks, f"simhash_chunks:{sf_dir}")
     a, b = chunks.alias("a"), chunks.alias("b")
     hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
@@ -1443,6 +1497,7 @@ def _dup_mass_base(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(tokens_col()).cast("long").alias("n_tokens"),
         ),
         f"dup_mass_base:{sf_dir}",
+        table_paths(sf_dir, "documents"),
     )
 
 

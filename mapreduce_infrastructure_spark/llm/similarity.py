@@ -28,20 +28,19 @@ in both; only the bucketer differs.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, table_paths, table_rows
 from ..functions.exact import rnd
 from ..registry import query
 
 
 # Persisted working sets, one slot per (query, sf_dir) — bounded-cache
 # helper shared across the LLM tier (see llm/cache.py).
+from .cache import shared_persist as _shared_persist
 from .cache import shared_value as _shared_value
 from .cache import tracked_persist as _tracked_persist
 
@@ -544,29 +543,6 @@ _IVF_SAMPLE = 4096  # quantizer-fit sample size (driver-side)
 _IVF_ITERS = 5
 
 
-def _parquet_footer_rows(sf_dir: str, table: str) -> int:
-    """Total row count of a fixture table from its parquet FOOTER metadata —
-    a driver-side file read, no Spark job (guide §1: don't schedule a
-    distributed count for a number the storage layer already holds; at
-    100 TB a table format serves this from its manifest). Handles both the
-    single-file fixture layout and a directory of part files (the
-    tools/scale_check.py replicas). Raises on anything else — callers fall
-    back to a Spark count()."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(root, fn)
-                    ).metadata.num_rows
-        return total
-    return pq.ParquetFile(path).metadata.num_rows
-
-
 def _sample_matrix(df: DataFrame, col: str) -> np.ndarray:
     """The deterministic quantizer-fit sample (lowest vec_ids, bounded at
     _IVF_SAMPLE rows) as a float64 matrix. Fetched via ``toPandas`` so the
@@ -762,38 +738,37 @@ def ann_ivf_topk(
         # the scan's — readable driver-side from file metadata with no
         # Spark job (~0.2 s saved per session; at 100 TB this is the
         # manifest/footer count a table format serves for free). Falls
-        # back to the column-pruned count() job if the path is not plain
-        # local parquet. The fixtures stay on the sample path, a 100 TB
-        # corpus lands on the distributed fit. Wave 5 (r16): the decision
-        # and the fit below are session-shared per sf_dir (shared_value —
-        # the shingle-table pattern), so the IVF family derives each once
-        # per session instead of once per invocation.
-        def _corpus_rows() -> int:
-            try:
-                return _parquet_footer_rows(sf_dir, "embeddings")
-            except Exception:
-                return vecs.count()
-
+        # back to a Spark count() if the path is not plain local parquet
+        # (catalog.table_rows). The fixtures stay on the sample path, a
+        # 100 TB corpus lands on the distributed fit. Wave 5 (r16): the
+        # decision and the fit below are session-shared per sf_dir and
+        # embeddings version (shared_value — the shingle-table pattern),
+        # so the IVF family derives each once per input version instead
+        # of once per invocation.
         fit = _shared_value(
             spark,
             lambda: (
                 "distributed"
-                if _corpus_rows() >= _IVF_DISTRIBUTED_MIN_ROWS
+                if table_rows(spark, sf_dir, "embeddings")
+                >= _IVF_DISTRIBUTED_MIN_ROWS
                 else "sample"
             ),
             f"ivf_fit_kind:{sf_dir}",
+            table_paths(sf_dir, "embeddings"),
         )
     if fit == "distributed":
         C = _shared_value(
             spark,
             lambda: _fit_centroids_distributed(vecs),
             f"ivf_fit_distributed:{sf_dir}",
+            table_paths(sf_dir, "embeddings"),
         )
     else:
         C = _shared_value(
             spark,
             lambda: _fit_centroids_sample(vecs),
             f"ivf_fit_sample:{sf_dir}",
+            table_paths(sf_dir, "embeddings"),
         )
 
     # Cell assignment rides the Arrow kernel (round 16, backlog item 1):
@@ -947,7 +922,10 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _vectors(spark, sf_dir)
     unit = vecs.select("vec_id", _unit().alias("u"))
     books = _shared_value(
-        spark, lambda: _fit_pq_codebooks(unit), f"pq_codebooks:{sf_dir}"
+        spark,
+        lambda: _fit_pq_codebooks(unit),
+        f"pq_codebooks:{sf_dir}",
+        table_paths(sf_dir, "embeddings"),
     )
     return _pq_adc_topk(unit, books, slot=f"pq:{sf_dir}")
 
@@ -1094,7 +1072,10 @@ def ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _vectors(spark, sf_dir)
     unit = vecs.select("vec_id", _unit().alias("u"))
     R, books = _shared_value(
-        spark, lambda: _fit_opq(unit), f"opq_fit:{sf_dir}"
+        spark,
+        lambda: _fit_opq(unit),
+        f"opq_fit:{sf_dir}",
+        table_paths(sf_dir, "embeddings"),
     )
 
     @pandas_udf(ArrayType(DoubleType()))
@@ -1362,20 +1343,25 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             unit.select("vec_id", F.col("u").alias("d"))
         ),
         f"ivf_fit_unit_sample:{sf_dir}",
+        table_paths(sf_dir, "embeddings"),
     )
     # 3-nearest-cell assignment rides the Arrow kernel (round 16, backlog
     # item 1): bit-identical (dist, cell) order — see _cells_topk_udf.
-    # Persisted: the bucket self-join reads this twice, and without the
-    # barrier projection collapse re-inlines the normalize + 16-centroid
-    # distance expressions into both sides. ID + cell ONLY — the exact
-    # verify re-joins the unit vectors fresh, so caching the 64-double
-    # payload here would inflate the working set ~65× for nothing.
-    assigned = _tracked_persist(
-        unit.select(
+    # Persisted as the tier's candidate index, one store entry per
+    # embeddings version: the bucket self-join reads this twice, and
+    # without the barrier projection collapse re-inlines the normalize +
+    # 16-centroid distance expressions into both sides. ID + cell ONLY —
+    # the exact verify re-joins the unit vectors fresh, so caching the
+    # 64-double payload here would inflate the working set ~65× for
+    # nothing.
+    assigned = _shared_persist(
+        spark,
+        lambda: unit.select(
             "vec_id",
             F.explode(_cells_topk_udf(C, _SEM_ASSIGN)("u")).alias("cell"),
         ),
         f"semantic_assigned:{sf_dir}",
+        table_paths(sf_dir, "embeddings"),
     )
     a, b = assigned.alias("a"), assigned.alias("b")
     candidates = (
@@ -1433,20 +1419,25 @@ def neardup_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         lambda: _fit_centroids_sample(vecs),
         f"ivf_fit_sample:{sf_dir}",
+        table_paths(sf_dir, "embeddings"),
     )
     # 2-nearest-cell assignment rides the Arrow kernel (round 16, backlog
     # item 1): bit-identical (dist, cell) order — see _cells_topk_udf.
-    # Persisted for the same reason as the semantic tier: the bucket
+    # Persisted as the candidate index, one store entry per embeddings
+    # version, for the same reason as the semantic tier: the bucket
     # self-join would otherwise recompute the 16-centroid assignment
-    # expression for both sides. ID + cell ONLY (the verify joins the
+    # expression for both sides, and a warm call reuses it instead of
+    # re-running the Arrow kernel. ID + cell ONLY (the verify joins the
     # vector payload back fresh) — caching d/nrm here would store dead
     # 64-double payloads per exploded assignment.
-    assigned = _tracked_persist(
-        vecs.select(
+    assigned = _shared_persist(
+        spark,
+        lambda: vecs.select(
             "vec_id",
             F.explode(_cells_topk_udf(C, 2)("d")).alias("cell"),
         ),
         f"neardup_ivf_assigned:{sf_dir}",
+        table_paths(sf_dir, "embeddings"),
     )
     # Candidates as ID pairs only, deduped BEFORE the exact verify: a pair
     # sharing both assigned cells would otherwise pay the 64-d cosine twice,

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, table_paths, table_rows
 from ..functions.exact import rnd
 from ..functions.ranks import bucketed_prefix_sum, hist_percent_rank, ntile_from_rank
 from ..registry import TableReader, query
@@ -349,7 +349,9 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    n_docs = docs.count()  # scalar, known at plan time (count at scale too)
+    # A scalar known at plan time, read from the parquet footers (no Spark
+    # job; catalog.table_rows falls back to a count()).
+    n_docs = table_rows(spark, sf_dir, "documents")
     tf = (
         docs.select("doc_id", F.explode(tokens_col()).alias("term"))
         .groupBy("doc_id", "term")
@@ -1618,6 +1620,7 @@ def _bigram_incidence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "source", "x", "y")
         .agg(F.count(F.lit(1)).alias("c")),
         f"bigram_incidence:{sf_dir}",
+        table_paths(sf_dir, "documents"),
     )
 
 
@@ -2315,6 +2318,7 @@ def _doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         lambda: _doc_token_rows(spark, sf_dir, load_table),
         f"doc_token_counts:{sf_dir}",
+        table_paths(sf_dir, "documents"),
     )
 
 

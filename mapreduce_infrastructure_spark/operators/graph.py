@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, table_paths
 from ..functions.exact import rnd
 from ..registry import query
 
@@ -80,7 +80,12 @@ def _build_graph(spark, sf_dir: str):
             pairs.selectExpr("supp AS src", "cust AS dst")
         )
 
-    edges = shared_persist(spark, build, f"trade_graph_edges:{sf_dir}")
+    edges = shared_persist(
+        spark,
+        build,
+        f"trade_graph_edges:{sf_dir}",
+        table_paths(sf_dir, "orders", "lineitem"),
+    )
     nodes = edges.select(F.col("src").alias("node")).distinct()
     deg = edges.groupBy(F.col("src").alias("deg_node")).agg(
         F.count(F.lit(1)).alias("out_deg")
@@ -105,7 +110,12 @@ def _edges_with_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "src", "dst", "out_deg"
         )
 
-    return shared_persist(spark, build, f"trade_graph_edges_deg:{sf_dir}")
+    return shared_persist(
+        spark,
+        build,
+        f"trade_graph_edges_deg:{sf_dir}",
+        table_paths(sf_dir, "orders", "lineitem"),
+    )
 
 
 def _wedges_with_wsum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,7 +132,12 @@ def _wedges_with_wsum(spark: SparkSession, sf_dir: str) -> DataFrame:
             "src", "dst", "w", "wsum"
         )
 
-    return shared_persist(spark, build, f"trade_graph_wedges_deg:{sf_dir}")
+    return shared_persist(
+        spark,
+        build,
+        f"trade_graph_wedges_deg:{sf_dir}",
+        table_paths(sf_dir, "orders", "lineitem"),
+    )
 
 
 def _pagerank_oracle(iters: int = N_ITERS) -> str:
@@ -338,7 +353,12 @@ def _part_cooccur_edges_weighted(
             )
         )
 
-    return shared_persist(spark, build, f"triangle_edges_weighted:{sf_dir}")
+    return shared_persist(
+        spark,
+        build,
+        f"triangle_edges_weighted:{sf_dir}",
+        table_paths(sf_dir, "lineitem"),
+    )
 
 
 def _part_cooccur_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,7 +577,12 @@ def _build_weighted_graph(spark, sf_dir: str) -> DataFrame:
             pairs.selectExpr("supp AS src", "cust AS dst", "w")
         )
 
-    return shared_persist(spark, build, f"trade_graph_wedges:{sf_dir}")
+    return shared_persist(
+        spark,
+        build,
+        f"trade_graph_wedges:{sf_dir}",
+        table_paths(sf_dir, "orders", "lineitem"),
+    )
 
 
 @query(
@@ -1379,7 +1404,12 @@ def _part_node_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return shared_persist(spark, build, f"part_degree_strength:{sf_dir}")
+    return shared_persist(
+        spark,
+        build,
+        f"part_degree_strength:{sf_dir}",
+        table_paths(sf_dir, "lineitem"),
+    )
 
 
 @query(

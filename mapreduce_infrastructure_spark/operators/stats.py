@@ -26,7 +26,7 @@ from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, table_paths
 from ..functions.exact import dec, rnd
 from ..functions.ranks import hist_cume_counts, hist_disc_percentile
 from ..registry import TableReader, Twin, query
@@ -1193,6 +1193,7 @@ def _cust_spend_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         lambda: _cust_spend_cells(spark, sf_dir, load_table),
         f"cust_spend_cents:{sf_dir}",
+        table_paths(sf_dir, "orders"),
     )
 
 
@@ -1220,7 +1221,9 @@ def _event_value_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", m.alias("m")
         )
 
-    return shared_persist(spark, build, f"event_value_micro:{sf_dir}")
+    return shared_persist(
+        spark, build, f"event_value_micro:{sf_dir}", table_paths(sf_dir, "events")
+    )
 
 
 @query(

@@ -16,7 +16,9 @@ partitions are split and tiny ones coalesced at runtime; Arrow is on so any
 pandas-UDF boundary is vectorized, never row-at-a-time.
 
 The session store below is the engine's one cache: parquet schemas, shared
-persisted frames, shared fits and tracked persists, under one key function.
+persisted frames and candidate indexes, shared fits and tracked persists,
+under one key function. Entries keyed by an input fingerprint are evicted
+when that input changes (see ``_evict``).
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ import threading
 from collections.abc import Callable
 
 from pyspark import SparkConf
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # The directory holding this package. Python workers get it on their
 # PYTHONPATH, so they can import the worker daemon (``pyworker``) and every
@@ -159,38 +161,65 @@ def get_spark(
 # are themselves store entries) and is held across a build, so concurrent
 # driver threads asking for one key build it once; a miss on another thread
 # waits for the running build.
+#
+# Eviction: a slot holds one input version per application. A miss on
+# (slot, application id) under a new input fingerprint first drops that
+# slot's entries for older fingerprints and unpersists every DataFrame they
+# hold (a frame, or a frame inside a tuple). Unpersisting is what makes the
+# rebuild correct, not just smaller: a plan rebuilt over a file rewritten
+# outside the session is identical to the old one, so Spark's cache
+# manager would hand it the old entry's cached data.
 _STORE: dict[tuple, object] = {}
 _LOCK = threading.RLock()
 _MISSING = object()
 
 
-def store_key(spark: SparkSession, slot: str, fingerprint: tuple = ()) -> tuple:
+def store_key(spark: SparkSession, slot: str, fingerprint: tuple) -> tuple:
     """(slot, application id, input fingerprint): the application id keeps
-    a value built on one session from being handed to another; a caller
-    that supplies an input fingerprint misses (and rebuilds) as soon as
-    its input changes on disk."""
+    a value built on one session from being handed to another; the input
+    fingerprint (``()`` for a slot that reads no file) makes a lookup miss,
+    and rebuild, as soon as its input changes on disk."""
     return (slot, spark.sparkContext.applicationId, fingerprint)
 
 
+def frames(v):
+    """The DataFrames a store value holds: itself, or its tuple members."""
+    if isinstance(v, DataFrame):
+        yield v
+    elif isinstance(v, tuple):
+        for x in v:
+            yield from frames(x)
+
+
+def _evict(key: tuple) -> None:
+    """Drop every entry of ``key``'s slot and application under another
+    fingerprint, unpersisting its frames. Called under the store lock."""
+    for k in [k for k in _STORE if k[:2] == key[:2] and k != key]:
+        for df in frames(_STORE.pop(k)):
+            df.unpersist()
+
+
 def get_or_create(
-    spark: SparkSession, slot: str, build: Callable[[], object], fingerprint=()
+    spark: SparkSession, slot: str, build: Callable[[], object], fingerprint: tuple
 ):
     """The stored value under ``store_key(spark, slot, fingerprint)``,
-    running ``build()`` once on a miss."""
+    running ``build()`` once on a miss, after evicting the slot's entries
+    for other fingerprints."""
     key = store_key(spark, slot, fingerprint)
     v = _STORE.get(key, _MISSING)
     if v is _MISSING:
         with _LOCK:
             v = _STORE.get(key, _MISSING)
             if v is _MISSING:
+                _evict(key)
                 v = _STORE[key] = build()
     return v
 
 
 def replace(spark: SparkSession, slot: str, build: Callable[[object], object]):
     """Store ``build(previous value or None)`` under
-    ``store_key(spark, slot)`` unconditionally, under the store lock."""
-    key = store_key(spark, slot)
+    ``store_key(spark, slot, ())`` unconditionally, under the store lock."""
+    key = store_key(spark, slot, ())
     with _LOCK:
         v = _STORE[key] = build(_STORE.get(key))
     return v

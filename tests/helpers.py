@@ -12,6 +12,20 @@ import pandas as pd
 from mapreduce_infrastructure_spark.catalog import TABLES
 
 
+def jobs_in_group(spark, group, fn):
+    """Run fn() in Spark job group ``group``; return its result and the ids
+    of the jobs it started, read from the status tracker once the listener
+    bus drains."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for name in TABLES:

@@ -18,6 +18,8 @@ from pyspark.sql.types import TimestampType
 from mapreduce_infrastructure_spark.catalog import load_table, normalize_ts
 from mapreduce_infrastructure_spark.streaming.stream import stream_table
 
+from .helpers import jobs_in_group
+
 # One instant, three encodings. 2024-03-01T12:34:56.789123 UTC.
 _WALL = datetime.datetime(2024, 3, 1, 12, 34, 56, 789123)
 _EPOCH_US = int(_WALL.replace(tzinfo=datetime.timezone.utc).timestamp() * 1_000_000)
@@ -67,24 +69,11 @@ def test_load_table_normalizes_current_fixture(spark, sf_dir):
     assert isinstance(df.schema["ts"].dataType, TimestampType)
 
 
-def _jobs_in_group(spark, group, fn):
-    """Run fn() in Spark job group ``group``; return the ids of the jobs it
-    started, read from the status tracker once the listener bus drains."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_warm_load_table_runs_no_spark_job(spark, sf_dir):
     # The first call may infer the schema; the warm call reuses it from the
     # session store and builds an identical frame without a job.
     load_table(spark, sf_dir, "orders")
-    df, jobs = _jobs_in_group(
+    df, jobs = jobs_in_group(
         spark, "test_warm_load_table", lambda: load_table(spark, sf_dir, "orders")
     )
     assert jobs == []

@@ -489,6 +489,11 @@ def test_lsh_hot_band_cap_bounds_boilerplate_corpus(spark, tmp_path):
 
     with pytest.warns(RuntimeWarning, match="hot-band cap"):
         pairs = dedup.minhash_lsh_pairs(spark, sf, hot_band_cap=cap).collect()
+    # A warm call reads the band index built above, census included, and
+    # still announces the truncation.
+    with pytest.warns(RuntimeWarning, match="hot-band cap"):
+        warm = dedup.minhash_lsh_pairs(spark, sf, hot_band_cap=cap).collect()
+    assert sorted(warm) == sorted(pairs)
     # Identical docs -> every surviving in-bucket pair verifies at 1.0; the
     # kept set is the cap lowest doc_ids, identical across bands.
     assert len(pairs) == cap * (cap - 1) // 2

@@ -540,22 +540,22 @@ def test_shared_value_computes_once_per_slot_and_app(spark):
         return object()
 
     slot = "test_shared_value_slot_r16w5"
-    key = store_key(spark, slot)
+    key = store_key(spark, slot, ())
     _STORE.pop(key, None)
     try:
-        a = C.shared_value(spark, build, slot)
-        b = C.shared_value(spark, build, slot)
+        a = C.shared_value(spark, build, slot, ())
+        b = C.shared_value(spark, build, slot, ())
         assert a is b
         assert calls["n"] == 1
         # a different slot builds independently
-        key2 = store_key(spark, slot + "2")
+        key2 = store_key(spark, slot + "2", ())
         _STORE.pop(key2, None)
-        c = C.shared_value(spark, build, slot + "2")
+        c = C.shared_value(spark, build, slot + "2", ())
         assert calls["n"] == 2
         assert c is not a
     finally:
         _STORE.pop(key, None)
-        _STORE.pop(store_key(spark, slot + "2"), None)
+        _STORE.pop(store_key(spark, slot + "2", ()), None)
 
 
 def test_shared_value_caches_a_none_result(spark):
@@ -571,11 +571,11 @@ def test_shared_value_caches_a_none_result(spark):
         return None
 
     slot = "test_shared_value_none_slot"
-    key = store_key(spark, slot)
+    key = store_key(spark, slot, ())
     _STORE.pop(key, None)
     try:
-        assert C.shared_value(spark, build, slot) is None
-        assert C.shared_value(spark, build, slot) is None
+        assert C.shared_value(spark, build, slot, ()) is None
+        assert C.shared_value(spark, build, slot, ()) is None
         assert calls["n"] == 1
     finally:
         _STORE.pop(key, None)
@@ -592,7 +592,7 @@ def test_shared_persist_builds_once_for_racing_threads(spark):
     from mapreduce_infrastructure_spark.session import _STORE, store_key
 
     slot = "test_shared_persist_race_slot"
-    _STORE.pop(store_key(spark, slot), None)
+    _STORE.pop(store_key(spark, slot, ()), None)
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
     calls = []
@@ -608,7 +608,7 @@ def test_shared_persist_builds_once_for_racing_threads(spark):
 
     def worker(i):
         barrier.wait()
-        out[i] = C.shared_persist(spark, build, slot)
+        out[i] = C.shared_persist(spark, build, slot, ())
 
     threads = [threading.Thread(target=worker, args=(i,)) for i in range(2)]
     for t in threads:
@@ -626,4 +626,4 @@ def test_shared_persist_builds_once_for_racing_threads(spark):
         for df in out:
             if df is not None:
                 df.unpersist()
-        _STORE.pop(store_key(spark, slot), None)
+        _STORE.pop(store_key(spark, slot, ()), None)

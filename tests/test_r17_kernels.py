@@ -81,15 +81,18 @@ def test_ivf_fit_slot_consumers_build_identical_fits(spark):
     here instead of silently serving wrong centroids to the other."""
     import numpy as np
 
+    from mapreduce_infrastructure_spark.catalog import table_paths
+    from mapreduce_infrastructure_spark.llm.cache import input_fingerprint
     from mapreduce_infrastructure_spark.registry import all_queries
     from mapreduce_infrastructure_spark.session import _STORE, store_key
 
     qs = all_queries()
-    key = store_key(spark, f"ivf_fit_sample:{SF}")
+    emb = input_fingerprint(table_paths(SF, "embeddings"))
+    key = store_key(spark, f"ivf_fit_sample:{SF}", emb)
     fits = {}
     for name in ("ann_ivf_topk", "neardup_cosine_ivf"):
         _STORE.pop(key, None)
-        _STORE.pop(store_key(spark, f"ivf_fit_kind:{SF}"), None)
+        _STORE.pop(store_key(spark, f"ivf_fit_kind:{SF}", emb), None)
         qs[name].fn(spark, SF).write.format("noop").mode("overwrite").save()
         assert key in _STORE, f"{name} no longer populates {key}"
         fits[name] = np.asarray(_STORE[key])
@@ -106,11 +109,11 @@ def test_shared_value_freezes_numpy_results(spark):
     from mapreduce_infrastructure_spark.session import _STORE, store_key
 
     key = "r17_freeze_probe"
-    _STORE.pop(store_key(spark, key), None)
-    v = shared_value(spark, lambda: np.ones((2, 2)), key)
+    _STORE.pop(store_key(spark, key, ()), None)
+    v = shared_value(spark, lambda: np.ones((2, 2)), key, ())
     with pytest.raises(ValueError):
         v[0, 0] = 5.0
-    t = shared_value(spark, lambda: (np.ones(3), "sample"), key + "_t")
+    t = shared_value(spark, lambda: (np.ones(3), "sample"), key + "_t", ())
     with pytest.raises(ValueError):
         t[0][1] = 2.0
     assert t[1] == "sample"
@@ -337,8 +340,8 @@ def test_kmeans_seeds_greedy_driver_matches_spark(spark):
     # greedy from them (the pre-round-17 formulation, verbatim)
     from mapreduce_infrastructure_spark.session import _STORE, store_key
 
-    candw = _STORE[store_key(spark, f"kmeans_seeds_candw:{SF}")]
-    cdist = _STORE[store_key(spark, f"kmeans_seeds_cdist:{SF}")]
+    candw = _STORE[store_key(spark, f"kmeans_seeds_candw:{SF}", ())]
+    cdist = _STORE[store_key(spark, f"kmeans_seeds_cdist:{SF}", ())]
     first = candw.orderBy(F.col("w").desc(), "cid").limit(1).collect()
     chosen = [(int(first[0]["cid"]), 1)]
     for k in range(2, K.K + 1):
@@ -364,12 +367,14 @@ def test_kmeans_seeds_greedy_driver_matches_spark(spark):
 def test_parquet_footer_rows_matches_spark_count(spark, tmp_path):
     """Footer-metadata row count equals the distributed count for both
     fixture layouts: a single parquet file and a directory of part files."""
+    from mapreduce_infrastructure_spark.catalog import parquet_footer_rows
+
     n_spark = S._vectors(spark, SF).count()
-    assert S._parquet_footer_rows(SF, "embeddings") == n_spark
+    assert parquet_footer_rows(SF, "embeddings") == n_spark
 
     # directory-of-parts layout (the tools/scale_check.py replica shape)
     d = tmp_path / "embeddings.parquet"
     spark.range(137).selectExpr("id AS vec_id").repartition(4).write.mode(
         "overwrite"
     ).parquet(str(d))
-    assert S._parquet_footer_rows(str(tmp_path), "embeddings") == 137
+    assert parquet_footer_rows(str(tmp_path), "embeddings") == 137
