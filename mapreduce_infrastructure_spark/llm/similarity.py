@@ -13,11 +13,17 @@ Vector arithmetic is double-exact, so Spark and the DuckDB oracle agree to
 the last bit before rounding. Most of it is JVM-side: unrolled codegen
 folds or higher-order functions (zip_with / aggregate) over double-cast
 arrays. The exceptions are the Arrow kernels. The IVF cell assignment,
-the PQ sub-distances and codes, and the exact all-pairs cosine of
-`neardup_cosine_pairs` replay the JVM fold's IEEE operations in numpy; the
-last ships vectors, never pairs, across the boundary, in one wave of
-block pairs: more blocks would replicate each vector further without adding
-parallelism. The PCA Gram partials use BLAS and are tolerance-pinned.
+the PQ sub-distances and codes, and the block-pair cosine kernel replay
+the JVM fold's IEEE operations in numpy. The cosine kernel scores the
+exact all-pairs tier of `neardup_cosine_pairs` in one wave of block pairs
+(more blocks would replicate each vector further without adding
+parallelism) and the IVF cells of `neardup_cosine_ivf`, one diagonal
+block per cell; both ship vectors, never pairs, across the boundary. The
+PCA Gram partials use BLAS and are tolerance-pinned.
+
+Every query reads its vectors through `_vectors`, one session-store entry
+per version of `embeddings`: a warm call scans no parquet and recomputes
+no norm, and a rewritten table is re-read.
 
 Scale design: brute force is O(|Q|·N) with Q broadcast — right when the
 query set is small; for N×N or big-Q workloads the bucketed plans survive:
@@ -168,12 +174,30 @@ def _unit(d: str = "d", nrm: str = "nrm") -> Column:
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    # Two-step select so the norm kernel references the NAMED cast column
-    # (projection collapse folds this into one Project; whole-stage codegen
-    # subexpression elimination evaluates the array cast once per row).
-    return emb.select("vec_id", _as_double("embedding").alias("d")).select(
-        "vec_id", "d", _norm("d").alias("nrm")
+    """The (vec_id, d, nrm) table every embedding query reads: the vectors
+    cast to array<double> and their JVM `_norm`. A store entry
+    (shared_persist) under ``vectors:{sf_dir}``, keyed by the fingerprint
+    of ``embeddings``: one cached copy per embeddings version serves the
+    exact and IVF near-dup tiers, the IVF/PQ/OPQ fits, `knn_bruteforce`,
+    the ANN queries and the cosine/k-NN reports, so a warm call scans no
+    parquet and re-runs no 64-term norm. A rewrite of the table evicts and
+    rebuilds the entry. Footprint: about 540 bytes a vector (64 doubles,
+    the id and the norm), about 1.1 MB for the 2,000 vectors of sf0.1. It
+    persists at the default level, so past executor memory it spills to
+    local disk like the shingle table."""
+
+    def build() -> DataFrame:
+        emb = load_table(spark, sf_dir, "embeddings")
+        # Two-step select so the norm kernel references the NAMED cast
+        # column (projection collapse folds this into one Project;
+        # whole-stage codegen subexpression elimination evaluates the
+        # array cast once per row).
+        return emb.select("vec_id", _as_double("embedding").alias("d")).select(
+            "vec_id", "d", _norm("d").alias("nrm")
+        )
+
+    return _shared_persist(
+        spark, build, f"vectors:{sf_dir}", table_paths(sf_dir, "embeddings")
     )
 
 
@@ -259,16 +283,25 @@ def _neardup_blocks(spark: SparkSession) -> int:
     return nb
 
 
-def _cosine_block_pair_kernel():
+def _cosine_block_pair_kernel(self_pairs: bool = True):
     """applyInArrow kernel of one block pair (bi, bj): every vector pair
     with one side in block bi and the other in block bj, scored as
     rnd(dot / (nrm_a·nrm_b), 4) in the exact IEEE steps of the JVM
     expression, and the pairs with cosine ≥ 0.4 returned as
-    (min id, max id, cosine). On the diagonal (bi = bj) rows are sorted by
-    id and only the upper tiles are folded; an id pair scores once there
-    since ids of one value hash to one block. Vectors of different widths
-    never pair (the JVM dot is null for them). A closure, so the worker
-    unpickles it by value without importing this package."""
+    (min id, max id, cosine). A one-column group key (blk) is the
+    diagonal block bi = bj = blk. On the diagonal rows are sorted by id
+    and only the upper tiles are folded, so an id pair scores once there.
+    Vectors of different widths never pair (the JVM dot is null for them).
+
+    A zero-norm vector raises DIVIDE_BY_ZERO, as the JVM division does
+    under ANSI. ``self_pairs`` says whether the formulation reproduced
+    scores each vector against itself too: the nested-loop join of
+    `neardup_cosine_pairs` does, so there any zero-norm row fails the
+    query. The cell join of `neardup_cosine_ivf` scores only distinct ids,
+    so there a zero-norm row raises only when its width group holds
+    another id (a partner of another width has a null dot, and null
+    divided by zero is null). A closure, so the worker unpickles it by
+    value without importing this package."""
     tile = _GRAM_TILE
 
     def gram_fold(At: np.ndarray, Bt: np.ndarray) -> np.ndarray:
@@ -287,22 +320,21 @@ def _cosine_block_pair_kernel():
     def kernel(key, tbl):
         import pyarrow as pa
 
-        bi, bj = key[0].as_py(), key[1].as_py()
+        bi, bj = key[0].as_py(), key[-1].as_py()
         nrm = tbl.column("nrm").to_numpy()
-        if (nrm * nrm == 0).any():
-            # The JVM join condition scores the cosine before it compares
-            # ids, self-pairs included, so one zero-norm vector fails the
-            # whole query under ANSI.
-            raise ArithmeticError(
-                "[DIVIDE_BY_ZERO] Division by zero in the cosine of a "
-                "zero-norm vector."
-            )
         ids = tbl.column("vec_id").to_numpy()
         blk = tbl.column("blk").to_numpy()
         d = tbl.column("d").combine_chunks()
         widths = d.value_lengths().to_numpy()
         starts = d.offsets.to_numpy()[:-1]
         vals = d.values.to_numpy(zero_copy_only=False)
+        zero = nrm * nrm == 0
+        for w in np.unique(widths[zero]):
+            if self_pairs or len(np.unique(ids[widths == w])) > 1:
+                raise ArithmeticError(
+                    "[DIVIDE_BY_ZERO] Division by zero in the cosine of a "
+                    "zero-norm vector."
+                )
 
         def side(rows):
             rows = rows[np.argsort(ids[rows], kind="stable")]
@@ -1395,23 +1427,53 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return labels.select(F.col("node_id").alias("vec_id"), "cluster")
 
 
+def _cell_pairs(vecs: DataFrame, assigned: DataFrame) -> DataFrame:
+    """Exact cosine ≥ 0.4 of the vector pairs of ``vecs`` (vec_id, d, nrm)
+    that share a cell of ``assigned`` (vec_id, cell), as (vec_a < vec_b,
+    cosine): each cell is one diagonal block of
+    `_cosine_block_pair_kernel`, and a pair sharing several cells is
+    returned once. Null vec_ids fall out of the equi-join, and null-norm
+    rows (null vector or element) are dropped first, as the JVM verify's
+    null cosine never passed its threshold."""
+    rows = assigned.join(vecs.filter(F.col("nrm").isNotNull()), "vec_id")
+    return (
+        rows.select("vec_id", "d", "nrm", F.col("cell").alias("blk"))
+        .groupBy("blk")
+        .applyInArrow(
+            _cosine_block_pair_kernel(self_pairs=False),
+            "vec_a long, vec_b long, cosine double",
+        )
+        .dropDuplicates(["vec_a", "vec_b"])
+    )
+
+
 @query("neardup_cosine_ivf", tags=("similarity", "dedup", "ivf"))
 def neardup_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs AT SCALE: every vector is assigned to
-    its 2 nearest IVF cells (multi-assignment catches boundary pairs), cells
-    become the blocking key of a bucket self-join, and only same-cell pairs
-    pay the exact cosine verify (threshold 0.4 — same contract as the exact
-    neardup_cosine_pairs, which is this query's ground truth in tests).
+    its 2 nearest IVF cells (multi-assignment catches boundary pairs), each
+    cell is a diagonal block of the block-pair cosine kernel, and only
+    same-cell pairs pay the exact cosine verify (threshold 0.4 — same
+    contract as the exact neardup_cosine_pairs, which is this query's
+    ground truth in tests).
 
     This replaces the O(N²) all-pairs scan with shuffles linear in N plus
     within-cell quadratics — the same candidates/verify shape as
     minhash_lsh_pairs, with k-means cells instead of hash bands. The
-    cells/assignments dials trade recall vs candidate volume. Since
-    round 15 a pure-python reference re-derives the ENTIRE pair set +
-    cosines token-for-token
-    (test_neardup_cosine_ivf_partial_oracle_pure_python)."""
-    from pyspark.sql import Window
+    cells/assignments dials trade recall vs candidate volume.
 
+    Verify (`_cell_pairs`): the cell assignments and the vectors, both
+    store entries, join on vec_id; one group per cell goes through
+    `_cosine_block_pair_kernel`, and the small scored output is deduped
+    on (vec_a, vec_b), so a pair sharing both cells is returned once.
+    Each vector crosses the Arrow boundary once per assigned cell, never
+    as a pair. Bit-identical to the JVM formulation it replaced (an ID
+    self-join on cell, then rnd(_dot / (na·nb), 4)); edge rows are
+    pinned against it in tests/test_dedup_similarity.py: a null vec_id,
+    null vector or null element never pairs, mismatched widths never
+    pair, and a zero-norm vector raises DIVIDE_BY_ZERO only when it
+    shares a cell with another vector of its width. Since round 15 a
+    pure-python reference re-derives the ENTIRE pair set + cosines
+    token-for-token (test_neardup_cosine_ivf_partial_oracle_pure_python)."""
     vecs = _vectors(spark, sf_dir)
     # Wave 5: identical fit to ann_ivf_topk's sample path — session-shared
     # under the same slot (shared_value, the shingle-table pattern).
@@ -1424,12 +1486,10 @@ def neardup_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2-nearest-cell assignment rides the Arrow kernel (round 16, backlog
     # item 1): bit-identical (dist, cell) order — see _cells_topk_udf.
     # Persisted as the candidate index, one store entry per embeddings
-    # version, for the same reason as the semantic tier: the bucket
-    # self-join would otherwise recompute the 16-centroid assignment
-    # expression for both sides, and a warm call reuses it instead of
-    # re-running the Arrow kernel. ID + cell ONLY (the verify joins the
-    # vector payload back fresh) — caching d/nrm here would store dead
-    # 64-double payloads per exploded assignment.
+    # version, so a warm call reuses it instead of re-running the Arrow
+    # kernel. ID + cell ONLY: the verify joins the cached vectors back, so
+    # caching d/nrm here would store a second copy of every vector per
+    # assigned cell.
     assigned = _shared_persist(
         spark,
         lambda: vecs.select(
@@ -1439,34 +1499,7 @@ def neardup_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"neardup_ivf_assigned:{sf_dir}",
         table_paths(sf_dir, "embeddings"),
     )
-    # Candidates as ID pairs only, deduped BEFORE the exact verify: a pair
-    # sharing both assigned cells would otherwise pay the 64-d cosine twice,
-    # and the dedup exchange would carry the vector arrays.
-    a, b = assigned.alias("a"), assigned.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-    va = vecs.select(
-        F.col("vec_id").alias("vec_a"), F.col("d").alias("da"), F.col("nrm").alias("na")
-    )
-    vb = vecs.select(
-        F.col("vec_id").alias("vec_b"), F.col("d").alias("db"), F.col("nrm").alias("nb")
-    )
-    cosine = rnd(_dot("da", "db") / (F.col("na") * F.col("nb")), 4)
-    return (
-        candidates.join(va, "vec_a")
-        .join(vb, "vec_b")
-        .select("vec_a", "vec_b", cosine.alias("cosine"))
-        .filter(F.col("cosine") >= 0.4)
-    )
+    return _cell_pairs(vecs, assigned)
 
 
 @query(

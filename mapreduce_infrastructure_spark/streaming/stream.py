@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 from typing import Any, Iterator, Tuple
 
 import numpy as np
@@ -135,13 +136,19 @@ def run_to_tables(
     same input, same answer, incremental execution. Several frames run
     CONCURRENTLY (start all, then await all), so independent sinks pay one
     start→commit→teardown latency instead of one each; a sink is only read
-    after every query has terminated. Callers pass DISJOINT sink names and
-    no data dependency between the frames.
+    after every query has terminated. The frames must have no data
+    dependency between them.
+
+    Each call names its sinks and checkpoints afresh (the given name plus
+    a unique suffix), so concurrent callers, or two frames given one name,
+    never collide on a query name or delete each other's checkpoint. Once
+    the result frames are built, the sinks' temp views are dropped and
+    the checkpoints removed: a frame holds its sink's data itself, and
+    nothing piles up in the session catalog or on disk across calls.
 
     Leak-safe: if a start() or an awaitTermination() raises, every query
     this call started that is still active is stopped before the error
-    propagates, so no query keeps its sink and checkpoint and a retry with
-    the same names starts clean.
+    propagates, so no query keeps its sink and checkpoint.
 
     Each result re-aliases the sink's columns. A memory-sink scan is a
     leaf Spark cannot re-instance, so a self-join of two frames derived
@@ -149,27 +156,32 @@ def run_to_tables(
     projection the sink joins like any batch relation, which is what lets
     a twin run its batch query's report unchanged."""
     spark = named_streams[0][0].sparkSession
+    sinks = [f"{name}_{uuid.uuid4().hex}" for _, name in named_streams]
     started = []
     try:
-        for stream_df, name in named_streams:
-            ckpt = os.path.join(_CHECKPOINTS, name)
-            shutil.rmtree(ckpt, ignore_errors=True)
+        for (stream_df, _), sink in zip(named_streams, sinks):
             started.append(
                 stream_df.writeStream.format("memory")
-                .queryName(name)
+                .queryName(sink)
                 .outputMode(mode)
-                .option("checkpointLocation", ckpt)
+                .option("checkpointLocation", os.path.join(_CHECKPOINTS, sink))
                 .trigger(availableNow=True)
                 .start()
             )
         for q in started:
             q.awaitTermination()
+        tables = [spark.table(sink) for sink in sinks]
+        return [
+            t.select([F.col(f"`{c}`").alias(c) for c in t.columns])
+            for t in tables
+        ]
     finally:
         for q in started:
             if q.isActive:
                 q.stop()
-    tables = [spark.table(name) for _, name in named_streams]
-    return [t.select([F.col(f"`{c}`").alias(c) for c in t.columns]) for t in tables]
+        for sink in sinks:
+            spark.catalog.dropTempView(sink)
+            shutil.rmtree(os.path.join(_CHECKPOINTS, sink), ignore_errors=True)
 
 
 def stream_twin(

@@ -1,7 +1,8 @@
-"""The dedup tier's candidate indexes are session-store entries keyed by the
-fingerprint of the table they read: a warm call reuses them, and a table
-rewritten outside the session (here with pyarrow, as another process would)
-is re-indexed, with the old copy unpersisted."""
+"""The dedup tier's candidate indexes, and the embedding vectors every
+similarity query reads, are session-store entries keyed by the fingerprint
+of the table they read: a warm call reuses them, and a table rewritten
+outside the session (here with pyarrow, as another process would) is
+re-indexed, with the old copy unpersisted."""
 
 from __future__ import annotations
 
@@ -94,9 +95,10 @@ def test_warm_minhash_lsh_pairs_runs_no_job_at_build(spark, sf_dir):
 
 def test_rewrites_keep_one_persisted_copy_per_slot(spark, sf_dir, tmp_path):
     """Three out-of-session rewrites of ``documents`` and ``embeddings``:
-    every call answers for the current files, and the
-    session holds no more persisted RDDs than after the first version (one
-    copy per slot: shingles, band table, SimHash chunks, IVF cells)."""
+    every call answers for the current files, as a cold computation in
+    another directory does, and the session holds no more persisted RDDs
+    than after the first version (one copy per slot: shingles, band
+    table, SimHash chunks, vectors, IVF cells)."""
     docs = _doc_versions(sf_dir)
     docs.append(docs[0])
     embs = _embedding_versions(sf_dir)
@@ -107,6 +109,8 @@ def test_rewrites_keep_one_persisted_copy_per_slot(spark, sf_dir, tmp_path):
             _rows(dedup.minhash_lsh_pairs(spark, sf)),
             _rows(dedup.simhash_neardup_pairs(spark, sf)),
             _rows(similarity.neardup_cosine_ivf(spark, sf)),
+            _rows(similarity.neardup_cosine_pairs(spark, sf)),
+            _rows(similarity.knn_bruteforce(spark, sf)),
         )
 
     expected = []
@@ -115,6 +119,8 @@ def test_rewrites_keep_one_persisted_copy_per_slot(spark, sf_dir, tmp_path):
         _write(d, cold, "documents")
         _write(e, cold, "embeddings")
         expected.append(answers(cold))
+    # every embedding query's answer changes with the embeddings rewrite
+    assert all(a != b for a, b in zip(expected[0][2:], expected[1][2:]))
 
     jsc = spark.sparkContext._jsc.sc()
     sf = str(tmp_path / "live")
@@ -125,3 +131,30 @@ def test_rewrites_keep_one_persisted_copy_per_slot(spark, sf_dir, tmp_path):
         assert answers(sf) == expected[k], f"version {k}"
         counts.append(jsc.getPersistentRDDs().size())
     assert max(counts) == counts[0], counts
+
+
+def _plan_leaves(df) -> set[str]:
+    """Class names of the leaves of ``df``'s optimized plan, where Spark
+    has already put each cached fragment's InMemoryRelation in place."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return {
+        leaves.apply(i).getClass().getSimpleName() for i in range(leaves.length())
+    }
+
+
+def test_warm_neardup_builds_read_the_cached_vectors(spark, sf_dir):
+    """A warm `neardup_cosine_pairs` or `neardup_cosine_ivf` builds with no
+    Spark job, and its plan reads only cached relations (the vectors
+    entry, and the IVF cell assignments), no parquet scan."""
+    queries = {
+        "neardup_cosine_pairs": similarity.neardup_cosine_pairs,
+        "neardup_cosine_ivf": similarity.neardup_cosine_ivf,
+    }
+    for name, fn in queries.items():
+        cold = _rows(fn(spark, sf_dir))
+        df, jobs = jobs_in_group(
+            spark, f"test_warm_{name}", lambda: fn(spark, sf_dir)
+        )
+        assert jobs == [], name
+        assert _plan_leaves(df) == {"InMemoryRelation"}, name
+        assert _rows(df) == cold, name

@@ -2352,3 +2352,140 @@ def test_neardup_kernel_block_count_invariance_and_plan(spark, sf_dir):
     plan = checks.explain_str(similarity.neardup_cosine_pairs(spark, sf_dir))
     for banned in ("BroadcastNestedLoopJoin", "CartesianProduct", "SinglePartition"):
         assert banned not in plan, banned
+
+
+def _jvm_cell_pairs(vecs, assigned):
+    """The JVM formulation `neardup_cosine_ivf` verified its candidates
+    with before the block-pair kernel: a self-join of the (vec_id, cell)
+    assignments to ID pairs, deduped, joined back to the vectors on both
+    sides and scored rnd(_dot / (na·nb), 4). Kept as the reference the
+    kernel verify (`similarity._cell_pairs`) is pinned against, edge rows
+    included."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_infrastructure_spark.functions.exact import rnd
+
+    a, b = assigned.alias("a"), assigned.alias("b")
+    candidates = (
+        a.join(
+            b,
+            (F.col("a.cell") == F.col("b.cell"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        )
+        .select(
+            F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
+        )
+        .dropDuplicates(["vec_a", "vec_b"])
+    )
+    va = vecs.select(
+        F.col("vec_id").alias("vec_a"),
+        F.col("d").alias("da"),
+        F.col("nrm").alias("na"),
+    )
+    vb = vecs.select(
+        F.col("vec_id").alias("vec_b"),
+        F.col("d").alias("db"),
+        F.col("nrm").alias("nb"),
+    )
+    cosine = rnd(similarity._dot("da", "db") / (F.col("na") * F.col("nb")), 4)
+    return (
+        candidates.join(va, "vec_a")
+        .join(vb, "vec_b")
+        .select("vec_a", "vec_b", cosine.alias("cosine"))
+        .filter(F.col("cosine") >= 0.4)
+    )
+
+
+def test_ivf_cell_verify_edge_semantics_match_jvm_formulation(spark):
+    """The kernel verify of `neardup_cosine_ivf` reproduces the cell
+    self-join formulation's edge rows on hand-built vectors and cells: a
+    null vector, a null element or a width mismatch gives no pair; a null
+    vec_id never pairs; a pair sharing both cells is returned once; the
+    rounded-0.4 boundary is kept and 0.3999 dropped; a zero-norm vector
+    alone in its cell, or beside a vector of another width only, raises
+    nothing; beside a vector of its own width it raises DIVIDE_BY_ZERO."""
+    import math
+
+    import pytest
+
+    def vec(*head, width=64):
+        return list(head) + [0.0] * (width - len(head))
+
+    def at(x, axis):
+        return vec(x, *([0.0] * (axis - 1)), math.sqrt(1 - x * x))
+
+    e0 = vec(1.0)
+    rows = [
+        (1, e0),
+        (2, e0),  # duplicate of 1, in both of its cells
+        (3, at(0.39996, 1)),  # rounds to 0.4 against 1 and 2: kept
+        (4, at(0.39994, 2)),  # rounds to 0.3999 against 1 and 2: dropped
+        (5, None),  # null vector
+        (6, [1.0, None] + [0.0] * 62),  # null element
+        (7, [3.0, 2.0, 1.0]),  # width 3, in cell 0 with the 64-wide rows
+        (8, [1.0, 2.0, 3.0]),  # shares cell 3 with 7
+        (9, [1.0, 2.0, 3.0]),  # equal to 8, but in no cell of 8
+        (None, e0),  # null vec_id
+        (10, vec()),  # zero norm, alone in cell 5
+        (11, vec()),  # zero norm, beside width 3 only in cell 6
+        (12, [1.0, 2.0, 3.0]),
+    ]
+    cells = [
+        (1, 0), (1, 1), (2, 0), (2, 1), (3, 0), (3, 2), (4, 0), (5, 0),
+        (6, 0), (7, 0), (7, 3), (8, 3), (9, 4), (None, 0), (10, 5),
+        (11, 6), (12, 6),
+    ]
+    vecs = _hand_vectors(spark, rows)
+    assigned = spark.createDataFrame(cells, "vec_id long, cell int")
+    ref = _sorted_rows(_jvm_cell_pairs(vecs, assigned))
+    assert ref == [(1, 2, 1.0), (1, 3, 0.4), (2, 3, 0.4), (7, 8, 0.7143)]
+    assert _sorted_rows(similarity._cell_pairs(vecs, assigned)) == ref
+
+    zero = _hand_vectors(spark, rows + [(13, vec())])
+    with_zero = spark.createDataFrame(cells + [(13, 0)], "vec_id long, cell int")
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        _jvm_cell_pairs(zero, with_zero).collect()
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        similarity._cell_pairs(zero, with_zero).collect()
+
+
+def test_neardup_cosine_ivf_matches_jvm_formulation_across_scales(spark, sf_dir):
+    """At sf0.001, sf0.01 and sf0.1, `neardup_cosine_ivf` returns exactly
+    the (vec_a, vec_b, cosine) rows of the formulation it replaced: the
+    same sample fit and 2-cell assignment, verified by the cell
+    self-join and the JVM dot."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    root = os.path.dirname(sf_dir.rstrip("/"))
+    for sf in dict.fromkeys(
+        [sf_dir] + [os.path.join(root, s) for s in ("sf0.001", "sf0.01", "sf0.1")]
+    ):
+        vecs = similarity._vectors(spark, sf)
+        C = similarity._fit_centroids_sample(vecs)
+        assigned = vecs.select(
+            "vec_id",
+            F.explode(similarity._cells_topk_udf(C, 2)("d")).alias("cell"),
+        )
+        ref = _sorted_rows(_jvm_cell_pairs(vecs, assigned))
+        assert ref, sf
+        assert _sorted_rows(similarity.neardup_cosine_ivf(spark, sf)) == ref, sf
+
+
+def test_neardup_cosine_ivf_plan_verifies_on_the_kernel(spark, sf_dir):
+    """The IVF verify is one Arrow group-map over the cells: the plan has
+    one FlatMapGroupsInArrow and one join (the assignments with the
+    vectors, so no self-join of the assignments), and no nested-loop,
+    cartesian or single-partition step."""
+    import re
+
+    from mapreduce_infrastructure_spark.plans import checks
+
+    df = similarity.neardup_cosine_ivf(spark, sf_dir)
+    plan = checks.explain_str(df, mode="simple")
+    assert len(re.findall(r"\bFlatMapGroupsInArrow\b", plan)) == 1, plan
+    joins = re.findall(r"\b(\w+Join)\b", plan)
+    assert joins in (["BroadcastHashJoin"], ["SortMergeJoin"], ["ShuffledHashJoin"]), plan
+    for banned in ("BroadcastNestedLoopJoin", "CartesianProduct", "SinglePartition"):
+        assert banned not in plan, banned

@@ -1437,3 +1437,25 @@ def test_bridge_stops_started_queries_when_a_later_start_fails(spark, sf_dir):
     first, second = run_to_tables([(slow_counts, names[0]), (counts, names[1])])
     assert _rows(first, ["event_type", "n"]) == _rows(second, ["event_type", "n"])
     assert spark.streams.active == []
+
+
+def test_concurrent_calls_of_one_twin_get_their_own_sinks(spark, sf_dir):
+    """Two threads run one streaming twin at once. Each bridge call names
+    its own memory sink and checkpoint, so neither start collides with
+    the other's query name or deletes its checkpoint, and both answer as
+    the batch query does. Each call drops its sink's temp view, so the
+    session catalog does not grow across calls."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    cols = ["wstart", "event_type", "n_events", "sum_value"]
+    want = _rows(batch_windows.window_tumbling_hourly(spark, sf_dir), cols)
+    tables = len(spark.catalog.listTables())
+
+    def run(_):
+        return _rows(stream.stream_tumbling_hourly(spark, sf_dir), cols)
+
+    with ThreadPoolExecutor(2) as pool:
+        assert list(pool.map(run, range(2), timeout=300)) == [want, want]
+    assert run(0) == want
+    assert len(spark.catalog.listTables()) == tables
+    assert spark.streams.active == []
