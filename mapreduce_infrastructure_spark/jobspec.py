@@ -7,10 +7,9 @@ The reference's job config is a flat ``key=value`` INI with comma lists
 files exist). Same surface here, mapped onto Spark knobs:
 
 - ``n_workers``       → parallelism hint (local[N] threads / executors)
-- ``map_kilobytes``   → ``spark.sql.files.maxPartitionBytes`` (split size;
-                        the reference snaps shards to newlines,
-                        ``src/file_shard.h:73-83`` — Spark's text splits are
-                        newline-aligned natively)
+- ``map_kilobytes``   → split size of the job's text read (the reference
+                        snaps shards to newlines, ``src/file_shard.h:73-83``
+                        — Hadoop text splits are newline-aligned natively)
 - ``n_output_files``  → number of reduce partitions / output files (R)
 - ``user_id``         → key into the mr.registry task registry
 """

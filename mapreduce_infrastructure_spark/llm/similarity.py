@@ -283,7 +283,11 @@ def _neardup_blocks(spark: SparkSession) -> int:
     return nb
 
 
-def _cosine_block_pair_kernel(self_pairs: bool = True):
+def _ansi(spark: SparkSession) -> bool:
+    return spark.conf.get("spark.sql.ansi.enabled") == "true"
+
+
+def _cosine_block_pair_kernel(self_pairs: bool = True, ansi: bool = True):
     """applyInArrow kernel of one block pair (bi, bj): every vector pair
     with one side in block bi and the other in block bj, scored as
     rnd(dot / (nrm_a·nrm_b), 4) in the exact IEEE steps of the JVM
@@ -293,15 +297,17 @@ def _cosine_block_pair_kernel(self_pairs: bool = True):
     and only the upper tiles are folded, so an id pair scores once there.
     Vectors of different widths never pair (the JVM dot is null for them).
 
-    A zero-norm vector raises DIVIDE_BY_ZERO, as the JVM division does
-    under ANSI. ``self_pairs`` says whether the formulation reproduced
-    scores each vector against itself too: the nested-loop join of
-    `neardup_cosine_pairs` does, so there any zero-norm row fails the
-    query. The cell join of `neardup_cosine_ivf` scores only distinct ids,
-    so there a zero-norm row raises only when its width group holds
+    Under ANSI (``ansi``, the session's ``spark.sql.ansi.enabled`` when
+    the plan was built) a zero-norm vector raises DIVIDE_BY_ZERO, as the
+    JVM division does. ``self_pairs`` says whether the formulation
+    reproduced scores each vector against itself too: the nested-loop
+    join of `neardup_cosine_pairs` does, so there any zero-norm row fails
+    the query. The cell join of `neardup_cosine_ivf` scores only distinct
+    ids, so there a zero-norm row raises only when its width group holds
     another id (a partner of another width has a null dot, and null
-    divided by zero is null). A closure, so the worker unpickles it by
-    value without importing this package."""
+    divided by zero is null). With ANSI off the JVM division by zero is
+    null, so a pair with a zero denominator gives no row. A closure, so
+    the worker unpickles it by value without importing this package."""
     tile = _GRAM_TILE
 
     def gram_fold(At: np.ndarray, Bt: np.ndarray) -> np.ndarray:
@@ -329,7 +335,7 @@ def _cosine_block_pair_kernel(self_pairs: bool = True):
         starts = d.offsets.to_numpy()[:-1]
         vals = d.values.to_numpy(zero_copy_only=False)
         zero = nrm * nrm == 0
-        for w in np.unique(widths[zero]):
+        for w in np.unique(widths[zero]) if ansi else ():
             if self_pairs or len(np.unique(ids[widths == w])) > 1:
                 raise ArithmeticError(
                     "[DIVIDE_BY_ZERO] Division by zero in the cosine of a "
@@ -350,11 +356,11 @@ def _cosine_block_pair_kernel(self_pairs: bool = True):
             for i0 in range(0, len(ia), tile):
                 for j0 in range(i0 if bi == bj else 0, len(ib), tile):
                     sa, sb = slice(i0, i0 + tile), slice(j0, j0 + tile)
-                    x = gram_fold(At[:, sa], Bt[:, sb]) / (
-                        norm_a[sa, None] * norm_b[None, sb]
-                    )
+                    den = norm_a[sa, None] * norm_b[None, sb]
+                    with np.errstate(divide="ignore", invalid="ignore"):
+                        x = gram_fold(At[:, sa], Bt[:, sb]) / den
                     cos = np.floor(x * 10000.0 + 0.5) / 10000.0
-                    keep = cos >= 0.4
+                    keep = (cos >= 0.4) & (den != 0)
                     if bi == bj:
                         keep &= ia[sa, None] < ib[None, sb]
                     r, c = np.nonzero(keep)
@@ -409,7 +415,8 @@ def _neardup_block_pairs(vecs: DataFrame, nb: int | None = None) -> DataFrame:
         rows.repartition(nb * (nb + 1) // 2, "bi", "bj")
         .groupBy("bi", "bj")
         .applyInArrow(
-            _cosine_block_pair_kernel(), "vec_a long, vec_b long, cosine double"
+            _cosine_block_pair_kernel(ansi=_ansi(vecs.sparkSession)),
+            "vec_a long, vec_b long, cosine double",
         )
     )
 
@@ -450,7 +457,8 @@ def neardup_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     long, which is exact below 2⁵³). Edge rows follow the JVM plan, pinned
     against it in tests/test_dedup_similarity.py: null vector, null
     element or mismatched widths give no pair; a null vec_id never pairs;
-    a zero-norm vector raises DIVIDE_BY_ZERO."""
+    a zero-norm vector raises DIVIDE_BY_ZERO under ANSI and pairs with
+    nothing with ANSI off."""
     return _neardup_block_pairs(_vectors(spark, sf_dir))
 
 
@@ -1440,7 +1448,9 @@ def _cell_pairs(vecs: DataFrame, assigned: DataFrame) -> DataFrame:
         rows.select("vec_id", "d", "nrm", F.col("cell").alias("blk"))
         .groupBy("blk")
         .applyInArrow(
-            _cosine_block_pair_kernel(self_pairs=False),
+            _cosine_block_pair_kernel(
+                self_pairs=False, ansi=_ansi(vecs.sparkSession)
+            ),
             "vec_a long, vec_b long, cosine double",
         )
         .dropDuplicates(["vec_a", "vec_b"])
@@ -1470,8 +1480,9 @@ def neardup_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join on cell, then rnd(_dot / (na·nb), 4)); edge rows are
     pinned against it in tests/test_dedup_similarity.py: a null vec_id,
     null vector or null element never pairs, mismatched widths never
-    pair, and a zero-norm vector raises DIVIDE_BY_ZERO only when it
-    shares a cell with another vector of its width. Since round 15 a
+    pair, and a zero-norm vector never pairs; under ANSI it raises
+    DIVIDE_BY_ZERO when it shares a cell with another vector of its
+    width. Since round 15 a
     pure-python reference re-derives the ENTIRE pair set + cosines
     token-for-token (test_neardup_cosine_ivf_partial_oracle_pure_python)."""
     vecs = _vectors(spark, sf_dir)

@@ -13,14 +13,17 @@ structure in the whole system, ``src/mr_tasks.h:55``). Numeric semantics are
 the user function's job — e.g. word count re-parses with int() like the
 reference's atoi (``test/user_tasks.cc:31``).
 
-Unlike the reference's internals, emit does NOT pre-group into an in-memory
-map per task (``src/mr_tasks.h:44`` — the structure that would OOM on a hot
-key); grouping belongs to Spark's shuffle, which spills.
+As in the reference (``src/mr_tasks.h:44``), a map task groups its emits
+by key in memory before the shuffle; the runner (``mr/runner.py``) flushes
+that map under the Python worker's memory limit, so a hot key never holds
+more than the limit on the map side. Grouping across tasks belongs to
+Spark's shuffle, which spills.
 """
 
 from __future__ import annotations
 
 import heapq
+import re
 from abc import ABC, abstractmethod
 from collections.abc import Iterable
 
@@ -56,21 +59,17 @@ class BaseReducer(_Emitter, ABC):
 
 class WordCountMapper(BaseMapper):
     """The reference's demo mapper (``test/user_tasks.cc:12-22``): tokenize
-    on the delimiter set ``" ,.\"'"`` and emit (token, "1")."""
+    on the delimiter set ``" ,.\"'"`` and emit (token, "1"). One compiled
+    split over delimiter runs; the empty tokens it leaves at a leading or
+    trailing delimiter (and for an empty record) are dropped. Tabs and other
+    whitespace are not delimiters."""
 
-    _DELIMS = " ,.\"'"
+    _split = re.compile("[ ,.\"']+").split
 
     def map(self, record: str) -> None:
-        token = []
-        for ch in record:
-            if ch in self._DELIMS:
-                if token:
-                    self.emit("".join(token), "1")
-                    token = []
-            else:
-                token.append(ch)
-        if token:
-            self.emit("".join(token), "1")
+        for token in self._split(record):
+            if token:
+                self.emit(token, "1")
 
 
 class WordCountReducer(BaseReducer):

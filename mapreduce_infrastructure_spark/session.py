@@ -4,7 +4,7 @@ The reference configures its job from a flat INI (``src/mapreduce_spec.h:58-100`
 — worker count, shard size, output-file count. The Spark-native equivalents:
 
 - ``n_workers``        → executor/thread count (``local[N]`` here)
-- ``map_kilobytes``    → ``spark.sql.files.maxPartitionBytes`` (input split size)
+- ``map_kilobytes``    → the split size of ``run_job``'s text read (``sc.textFile``)
 - ``n_output_files``   → ``spark.sql.shuffle.partitions`` / explicit repartition(R)
 - straggler re-exec    → ``spark.speculation`` (reference ``src/master.h:131-138``)
 - long-lived worker    → ``spark.python.daemon.module`` = ``pyworker``: tasks

@@ -2449,6 +2449,55 @@ def test_ivf_cell_verify_edge_semantics_match_jvm_formulation(spark):
         similarity._cell_pairs(zero, with_zero).collect()
 
 
+def test_zero_norm_cosine_follows_the_ansi_setting(spark):
+    """A zero-norm vector under both ANSI settings, on hand-built vectors:
+    with ANSI on, the kernels of `neardup_cosine_pairs` and
+    `neardup_cosine_ivf` raise DIVIDE_BY_ZERO like the JVM formulations;
+    with ANSI off they return the JVM formulations' rows, in which the
+    zero-norm vector's null cosine gives no pair. The setting is read
+    when the plan is built."""
+    import pytest
+
+    def vec(*head, width=64):
+        return list(head) + [0.0] * (width - len(head))
+
+    rows = [
+        (1, vec(1.0)),
+        (2, vec(1.0)),
+        (3, vec(1.0, 1.0)),
+        (4, vec()),  # zero norm, 64 wide
+        (5, [0.0, 0.0, 0.0]),  # zero norm, 3 wide
+        (6, [1.0, 2.0, 3.0]),
+        (7, [1.0, 2.0, 3.0]),
+    ]
+    cells = [(i, 0) for i in range(1, 8)] + [(4, 1), (5, 1), (6, 1)]
+    vecs = _hand_vectors(spark, rows)
+    assigned = spark.createDataFrame(cells, "vec_id long, cell int")
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        for df in (
+            _jvm_neardup_pairs(vecs),
+            similarity._neardup_block_pairs(vecs, 2),
+            _jvm_cell_pairs(vecs, assigned),
+            similarity._cell_pairs(vecs, assigned),
+        ):
+            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+                df.collect()
+
+        spark.conf.set(key, "false")
+        ref = _sorted_rows(_jvm_neardup_pairs(vecs))
+        assert ref == [(1, 2, 1.0), (1, 3, 0.7071), (2, 3, 0.7071), (6, 7, 1.0)]
+        for nb in (2, 3):
+            assert _sorted_rows(similarity._neardup_block_pairs(vecs, nb)) == ref
+        cell_ref = _sorted_rows(_jvm_cell_pairs(vecs, assigned))
+        assert cell_ref == ref
+        assert _sorted_rows(similarity._cell_pairs(vecs, assigned)) == cell_ref
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_neardup_cosine_ivf_matches_jvm_formulation_across_scales(spark, sf_dir):
     """At sf0.001, sf0.01 and sf0.1, `neardup_cosine_ivf` returns exactly
     the (vec_a, vec_b, cosine) rows of the formulation it replaced: the

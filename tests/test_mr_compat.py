@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_infrastructure_spark.jobspec import parse_spec, read_and_validate_spec
 from mapreduce_infrastructure_spark.llm.text import wordcount
-from mapreduce_infrastructure_spark.mr.api import BaseMapper, BaseReducer
+from mapreduce_infrastructure_spark.mr.api import BaseMapper, BaseReducer, WordCountReducer
 from mapreduce_infrastructure_spark.mr.queries import mr_wordcount
 from mapreduce_infrastructure_spark.mr.registry import register_tasks
 from mapreduce_infrastructure_spark.mr.runner import run_job, run_mr_job, write_sorted_text
@@ -68,6 +68,95 @@ def test_mr_hot_key_single_key_million_values(spark):
     df = spark.createDataFrame([("31250",)] * 32, "text string").repartition(8)
     out = {r.key: r.value for r in run_mr_job(spark, df, "test_hotkey", 4).collect()}
     assert out == {"hot": "1000000"}
+
+
+class _RepeatMapper(BaseMapper):
+    """Record ``key<TAB>n``: emit (key, "1") n times."""
+
+    def map(self, record: str) -> None:
+        key, _, n = record.partition("\t")
+        for _ in range(int(n)):
+            self.emit(key, "1")
+
+
+def _fold(groups) -> dict[str, int]:
+    """Merge map-task groups the way the shuffle does, then reduce each
+    key with the demo's sum reducer."""
+    from mapreduce_infrastructure_spark.mr.runner import _extend
+
+    merged: dict[str, list] = {}
+    for key, values in groups:
+        merged[key] = _extend(merged[key], values) if key in merged else values
+    reducer = WordCountReducer()
+    for key, values in merged.items():
+        reducer.reduce(key, values)
+    return {k: int(v) for k, v in reducer._drain()}
+
+
+def test_map_groups_flush_at_the_memory_limit_and_fold_exactly(monkeypatch):
+    """With the worker-memory check always over the limit, a map task
+    flushes its groups at every check: a hot key of 10^6 values and a task
+    of 50,000 distinct keys, each seen four times, arrive in many partial
+    groups, and both fold to the right counts. Under the limit, a task
+    yields one group per key."""
+    from mapreduce_infrastructure_spark.mr import runner
+
+    hot = ["hot\t1000"] * 1000
+    spread = [f"k{i % 50_000}\t{1 + i % 3}" for i in range(200_000)]
+    want_spread: dict[str, int] = {}
+    for i in range(200_000):
+        want_spread[f"k{i % 50_000}"] = want_spread.get(f"k{i % 50_000}", 0) + 1 + i % 3
+
+    monkeypatch.setattr(runner, "get_used_memory", lambda: 1 << 30)
+    groups = list(runner._map_groups(_RepeatMapper(), hot, 512))
+    assert len(groups) > 100
+    assert _fold(groups) == {"hot": 10**6}
+    groups = list(runner._map_groups(_RepeatMapper(), spread, 512))
+    assert len(groups) > len(want_spread)
+    assert _fold(groups) == want_spread
+
+    monkeypatch.setattr(runner, "get_used_memory", lambda: 0)
+    assert len(list(runner._map_groups(_RepeatMapper(), hot, 512))) == 1
+    groups = list(runner._map_groups(_RepeatMapper(), spread, 512))
+    assert len(groups) == len(want_spread)
+    assert _fold(groups) == want_spread
+
+
+def test_mr_job_folds_exactly_when_every_merger_hits_its_limit(spark, monkeypatch):
+    """With a worker-memory limit of 1 MB, every map task flushes its groups
+    at each check and the shuffle's mergers spill: a hot key of 10^6
+    values and 20,000 distinct keys still fold to the right counts."""
+    from pyspark import RDD
+
+    register_tasks("test_repeat", _RepeatMapper, WordCountReducer)
+    monkeypatch.setattr(RDD, "_memory_limit", lambda self: 1)
+    rows = [("hot\t31250",)] * 32 + [(f"k{i}\t{1 + i % 3}",) for i in range(20_000)]
+    df = spark.createDataFrame(rows, "text string").repartition(8)
+    out = {r.key: int(r.value) for r in run_mr_job(spark, df, "test_repeat", 4).collect()}
+    assert out == {"hot": 10**6, **{f"k{i}": 1 + i % 3 for i in range(20_000)}}
+
+
+def test_reducer_that_mutates_its_values_changes_no_other_key(spark):
+    """The reducer owns the list it is given: appending to it, clearing it
+    or sorting it in place changes only that key's result."""
+
+    class MutatingReducer(BaseReducer):
+        def reduce(self, key, values) -> None:
+            n = len(values)
+            values.append("extra")
+            values.sort()
+            self.emit(key, f"{n}|{len(values)}")
+            values.clear()
+
+    register_tasks("test_mutating", _RepeatMapper, MutatingReducer)
+    rows = [(f"k{i % 50}\t{1 + i % 7}",) for i in range(1000)]
+    df = spark.createDataFrame(rows, "text string").repartition(4)
+    want: dict[str, int] = {}
+    for i in range(1000):
+        want[f"k{i % 50}"] = want.get(f"k{i % 50}", 0) + 1 + i % 7
+    for r in (1, 3):
+        out = {x.key: x.value for x in run_mr_job(spark, df, "test_mutating", r).collect()}
+        assert out == {k: f"{n}|{n + 1}" for k, n in want.items()}
 
 
 def test_write_sorted_text_contract(spark, tmp_path):
@@ -149,6 +238,91 @@ def test_run_job_end_to_end(spark, tmp_path):
     outputs2 = run_job(spark, str(cfg))
     assert outputs2 == outputs
     assert read_counts(outputs2) == expected
+
+
+def _spec(tmp_path, inp, n_output_files: int, map_kilobytes: int):
+    cfg = tmp_path / "config.ini"
+    cfg.write_text(
+        "n_workers=2\n"
+        "worker_ipaddr_ports=localhost:50051,localhost:50052\n"
+        f"input_files={inp}\n"
+        f"output_dir={tmp_path}/out\n"
+        f"n_output_files={n_output_files}\n"
+        f"map_kilobytes={map_kilobytes}\n"
+        "user_id=cs6210\n"
+    )
+    return str(cfg)
+
+
+def _corpus(path, n_lines: int) -> None:
+    import random
+
+    rng = random.Random(7)
+    path.write_text(
+        "".join(
+            " ".join(f"w{rng.randrange(4000):04d}" for _ in range(8)) + "\n"
+            for _ in range(n_lines)
+        )
+    )
+
+
+def test_run_job_writes_the_same_files_every_call(spark, tmp_path):
+    """The split points between output files depend on the data alone:
+    three run_job calls in one session write identical files, each of
+    them non-empty."""
+    import hashlib
+
+    inp = tmp_path / "input.txt"
+    _corpus(inp, 3000)
+    cfg = _spec(tmp_path, inp, n_output_files=4, map_kilobytes=16)
+    digests = []
+    for _ in range(3):
+        outputs = run_job(spark, cfg)
+        digests.append(
+            [hashlib.md5(open(p, "rb").read()).hexdigest() for p in outputs]
+        )
+        assert all(os.path.getsize(p) for p in outputs)
+    assert digests[0] == digests[1] == digests[2]
+
+
+def test_run_job_sets_no_session_conf_and_splits_by_map_kilobytes(
+    spark, tmp_path, monkeypatch
+):
+    """run_job passes map_kilobytes to its own text read instead of setting
+    a session conf: RuntimeConfig.set is never called, and a 64 KB input
+    with map_kilobytes=8 is read by at least 8 map tasks."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    inp = tmp_path / "input.txt"
+    _corpus(inp, 1600)
+    assert 60_000 < inp.stat().st_size < 80_000
+    cfg = _spec(tmp_path, inp, n_output_files=2, map_kilobytes=8)
+    calls = []
+    monkeypatch.setattr(RuntimeConfig, "set", lambda self, *a: calls.append(a))
+    sc = spark.sparkContext
+    sc.setJobGroup("test_map_kilobytes", "run_job with map_kilobytes=8")
+    try:
+        run_job(spark, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert calls == []
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup("test_map_kilobytes")
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s)
+    ]
+    assert max(tasks) >= 8
+
+
+def test_run_mr_job_rejects_an_input_path_with_a_comma(spark, tmp_path):
+    """The text reader takes its paths comma-joined, so a path holding a
+    comma is rejected with a clear error before any job runs."""
+    inp = tmp_path / "a,b.txt"
+    inp.write_text("x y\n")
+    with pytest.raises(ValueError, match="comma"):
+        run_mr_job(spark, [str(inp)], "cs6210", 2)
 
 
 def test_multimodal_features_deterministic(spark, sf_dir):

@@ -11,6 +11,7 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from mapreduce_infrastructure_spark.mr.api import WordCountMapper
 from mapreduce_infrastructure_spark.mr.runner import run_mr_job, write_sorted_text
 
 # Tokens over the reference delimiter set " ,.\"'" — build lines from words
@@ -68,3 +69,37 @@ def test_sorted_sink_global_order(spark, corpus, tmp_path_factory):
             keys.extend(line.split(", ")[0] for line in fh if line.strip())
     assert keys == sorted(keys)
     assert len(keys) == len(_expected_counts(corpus))
+
+
+def _char_loop_tokens(record: str) -> list[str]:
+    """The demo mapper's tokenizer as a per-character loop over the
+    reference delimiter set (test/user_tasks.cc:12-22)."""
+    tokens, token = [], []
+    for ch in record:
+        if ch in " ,.\"'":
+            if token:
+                tokens.append("".join(token))
+                token = []
+        else:
+            token.append(ch)
+    if token:
+        tokens.append("".join(token))
+    return tokens
+
+
+_DELIMITER_HEAVY = st.text(
+    alphabet=st.sampled_from(list(" ,.\"'\t\r\x0b\x0c\n\u00a0") + list("ab1éß漢")),
+    max_size=40,
+)
+
+
+@settings(max_examples=500, deadline=None)
+@given(record=st.one_of(_DELIMITER_HEAVY, st.text(max_size=40)))
+def test_wordcount_mapper_tokens_match_the_character_loop(record):
+    """The compiled split emits the per-character loop's tokens in order,
+    each with value "1": delimiter runs, leading and trailing delimiters,
+    empty records, non-ASCII letters, and whitespace that is not a
+    delimiter (tab, CR, vertical tab, form feed, NBSP) all included."""
+    mapper = WordCountMapper()
+    mapper.map(record)
+    assert mapper._drain() == [(t, "1") for t in _char_loop_tokens(record)]

@@ -84,6 +84,7 @@ def test_driver_materialization_sites_are_allowlisted():
         ("functions/ranks.py", "kth_order_statistics_by"),  # <=|strata|x(n_buckets+1)-row census per round (x33 at default branching; strata asserted <=10k)
         ("operators/stats.py", "event_value_percentiles_by_type"),  # |types|-row count census + 1-row-per-type assembly
         ("operators/temporal.py", "_lifetime_span_report"),  # |event types|-row count census (bounded strata; shared batch/stream tail)
+        ("mr/runner.py", "_range_bounds"),  # limit(100·R) key sample for the sink's R-1 split keys
     }
 
     found = set()
