@@ -15,9 +15,9 @@ reference's atoi (``test/user_tasks.cc:31``).
 
 As in the reference (``src/mr_tasks.h:44``), a map task groups its emits
 by key in memory before the shuffle; the runner (``mr/runner.py``) flushes
-that map under the Python worker's memory limit, so a hot key never holds
-more than the limit on the map side. Grouping across tasks belongs to
-Spark's shuffle, which spills.
+that map under the Python worker's memory limit, the way PySpark's own
+map-side merger spills, so a hot key does not grow the map task without
+bound. Grouping across tasks belongs to Spark's shuffle, which spills.
 """
 
 from __future__ import annotations

@@ -45,9 +45,11 @@ def _map_groups(mapper, lines, limit_mb: float):
     """Run ``mapper`` over ``lines`` and yield its emits grouped by key, as
     (key, list of values) — one group per key per flush. The groups are
     flushed when the worker's resident memory reaches ``limit_mb``, checked
-    on the schedule of ``pyspark.shuffle.ExternalMerger.mergeValues``: after
+    the way ``pyspark.shuffle.ExternalMerger.mergeValues`` checks: after
     1000 pairs, then after 1.5× as many each time it is under the limit and
-    half as many after a flush."""
+    half as many after a flush. As there, a flush raises the limit to 1.05×
+    the memory still in use, so memory the process keeps after a flush
+    does not make it flush (and check) at every record."""
     groups = defaultdict(list)
     count, batch = 0, 1000
     for line in lines:
@@ -62,6 +64,7 @@ def _map_groups(mapper, lines, limit_mb: float):
             if get_used_memory() >= limit_mb:
                 yield from groups.items()
                 groups = defaultdict(list)
+                limit_mb = max(limit_mb, get_used_memory() * 1.05)
                 batch /= 2
                 count = 0
             else:

@@ -94,11 +94,13 @@ def _fold(groups) -> dict[str, int]:
 
 
 def test_map_groups_flush_at_the_memory_limit_and_fold_exactly(monkeypatch):
-    """With the worker-memory check always over the limit, a map task
-    flushes its groups at every check: a hot key of 10^6 values and a task
-    of 50,000 distinct keys, each seen four times, arrive in many partial
-    groups, and both fold to the right counts. Under the limit, a task
-    yields one group per key."""
+    """With the worker's memory growing past the limit at every check, a
+    map task flushes its groups at every check: a hot key of 10^6 values
+    and a task of 50,000 distinct keys, each seen four times, arrive in
+    many partial groups, and both fold to the right counts. Memory that
+    stays above the limit after a flush raises the limit, so the task
+    flushes once and then groups again. Under the limit, a task yields one
+    group per key."""
     from mapreduce_infrastructure_spark.mr import runner
 
     hot = ["hot\t1000"] * 1000
@@ -107,13 +109,24 @@ def test_map_groups_flush_at_the_memory_limit_and_fold_exactly(monkeypatch):
     for i in range(200_000):
         want_spread[f"k{i % 50_000}"] = want_spread.get(f"k{i % 50_000}", 0) + 1 + i % 3
 
-    monkeypatch.setattr(runner, "get_used_memory", lambda: 1 << 30)
+    def growing():
+        growing.mb *= 1.1
+        return growing.mb
+
+    for lines, want, min_groups in (
+        (hot, {"hot": 10**6}, 100),
+        (spread, want_spread, len(want_spread) + 1),
+    ):
+        growing.mb = 1024.0
+        monkeypatch.setattr(runner, "get_used_memory", growing)
+        groups = list(runner._map_groups(_RepeatMapper(), lines, 512))
+        assert len(groups) >= min_groups
+        assert _fold(groups) == want
+
+    monkeypatch.setattr(runner, "get_used_memory", lambda: 1024)
     groups = list(runner._map_groups(_RepeatMapper(), hot, 512))
-    assert len(groups) > 100
+    assert len(groups) == 2
     assert _fold(groups) == {"hot": 10**6}
-    groups = list(runner._map_groups(_RepeatMapper(), spread, 512))
-    assert len(groups) > len(want_spread)
-    assert _fold(groups) == want_spread
 
     monkeypatch.setattr(runner, "get_used_memory", lambda: 0)
     assert len(list(runner._map_groups(_RepeatMapper(), hot, 512))) == 1
@@ -124,8 +137,8 @@ def test_map_groups_flush_at_the_memory_limit_and_fold_exactly(monkeypatch):
 
 def test_mr_job_folds_exactly_when_every_merger_hits_its_limit(spark, monkeypatch):
     """With a worker-memory limit of 1 MB, every map task flushes its groups
-    at each check and the shuffle's mergers spill: a hot key of 10^6
-    values and 20,000 distinct keys still fold to the right counts."""
+    and the shuffle's mergers spill: a hot key of 10^6 values and 20,000
+    distinct keys still fold to the right counts."""
     from pyspark import RDD
 
     register_tasks("test_repeat", _RepeatMapper, WordCountReducer)
